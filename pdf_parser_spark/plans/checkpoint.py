@@ -1,29 +1,33 @@
-"""S1 — resumable, per-partition-committed extraction job.
+"""S1 — resumable extraction job that commits through the snapshot log.
 
 The reference's Plaid sync persists its cursor only after an item's pages are
 fully applied (routes/plaid.py:345): crash ⇒ cursor not advanced ⇒ re-pull,
 idempotent because doc ids are deterministic (plaid.py:279). This module is
-that commit-last pattern at table scale:
+that commit-last pattern at table scale, in the north rule's literal shape —
+"resumes from the last committed snapshot":
 
 - the input is split into ``bucket(N, url)`` hash buckets (sources/pages.py);
-- buckets are processed in groups; each group's output is written with
-  dynamic-partition-overwrite (idempotent: re-running a bucket replaces its
-  directory, never appends duplicates — the deterministic ``txn_id =
-  url#index`` plays the role of the reference's deterministic doc id);
-- a lineage marker ``_lineage/bucket=K.json`` is committed (tmp + atomic
-  rename) only AFTER the data write succeeds, carrying the extraction
-  metrics the north star requires (docs/sec, parse-failure rate, bytes
-  in/out) per partition;
-- a restarted job lists the markers and processes only uncommitted buckets.
+- buckets are processed in groups; each group becomes ONE
+  ``overwrite_partitions`` commit on a plans/snapshots.SnapshotTable, so a
+  re-run of a bucket replaces its files and never appends duplicates (the
+  deterministic ``txn_id = url#index`` plays the role of the reference's
+  deterministic doc id);
+- the group's bucket ids ride in that same atomic publish as the snapshot's
+  committed ids, and its extraction metrics (docs/sec, parse failures,
+  bytes in/out) in the snapshot SUMMARY — Iceberg snapshots carry exactly
+  such a summary map;
+- a restarted job reads the committed ids from the head snapshot and
+  processes only the other buckets. A crash between the data write and the
+  publish leaves only files no snapshot references, never a half-committed
+  bucket; ``job.table.vacuum_orphans()`` deletes them.
 
-On an Iceberg cluster the marker becomes the snapshot commit itself
-(`writeTo(...).overwritePartitions()`), and `lineage()` reads the snapshot
-metadata table — the driver loop is unchanged.
+On an Iceberg cluster the commit is ``writeTo(...).overwritePartitions()``
+and ``lineage()`` reads the snapshot metadata table — the driver loop is
+unchanged.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -31,258 +35,44 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators import extract as extract_op
-from pdf_parser_spark.plans import pipeline
+from pdf_parser_spark.plans.snapshots import SnapshotTable, pin_meta
 from pdf_parser_spark.sources import pages as pages_src
 
-LINEAGE_DIR = "_lineage"
 
+class SnapshotExtractionJob:
+    """pages → transactions, one table snapshot per bucket-group commit."""
 
-def _check_layout(out_dir: str, n_buckets: int) -> None:
-    """Pin the bucket layout: resuming with a different n_buckets would
-    hash every url into a different bucket than the committed markers
-    claim — uncommitted urls of renumbered buckets would be skipped
-    FOREVER and two hash layouts would mix in one table. Same geometry
-    guard as sources/shards and the MinHash index."""
-    from pdf_parser_spark.plans.snapshots import _atomic_write
-
-    meta = os.path.join(out_dir, "_layout.json")
-    if os.path.exists(meta):
-        with open(meta) as fh:
-            committed = json.load(fh)["n_buckets"]
+    def __init__(
+        self,
+        spark: SparkSession,
+        out_dir: str,
+        n_buckets: int = 16,
+        buckets_per_commit: int = 4,
+    ) -> None:
+        # Pin the bucket layout: resuming with a different n_buckets would
+        # hash every url into a different bucket than the committed ids
+        # claim — uncommitted urls of renumbered buckets would be skipped
+        # FOREVER and two hash layouts would mix in one table.
+        committed = pin_meta(
+            os.path.join(out_dir, "_layout.json"), {"n_buckets": n_buckets}
+        )["n_buckets"]
         if committed != n_buckets:
             raise ValueError(
                 f"job at {out_dir} was committed with n_buckets={committed}, "
                 f"got n_buckets={n_buckets} — the bucket layout cannot change "
                 "across resumes"
             )
-    else:
-        os.makedirs(out_dir, exist_ok=True)
-        _atomic_write(meta, json.dumps({"n_buckets": n_buckets}))
-
-
-def _extract_group(get_pages, group: list[int], n_buckets: int):
-    """The shared per-group body of both job classes: bucket-filter the
-    input, extract, re-bucket. Returns (extracted [persisted], txns)."""
-    pages = pages_src.with_bucket(get_pages(), "url", n_buckets)
-    pages = pages.where(F.col("bucket").isin([int(b) for b in group]))
-    extracted = extract_op.extract_documents(pages.drop("bucket"))
-    extracted = pages_src.with_bucket(extracted, "url", n_buckets).persist()
-    txns = extract_op.extracted_transactions(extracted.drop("bucket"))
-    txns = pages_src.with_bucket(txns, "url", n_buckets)
-    return extracted, txns
-
-
-def _group_stats(extracted: DataFrame) -> dict[int, dict]:
-    """Per-bucket extraction metrics (tiny: one row per bucket)."""
-    return {
-        int(r["bucket"]): r.asDict()
-        for r in extracted.groupBy("bucket")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("n_txns").alias("txns"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("chars_out").alias("chars_out"),
-            F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-        )
-        .collect()
-    }
-
-
-class ResumableExtractionJob:
-    """pages → transactions, committed bucket-group by bucket-group."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        out_dir: str,
-        n_buckets: int = 16,
-        buckets_per_commit: int = 4,
-    ) -> None:
-        self.spark = spark
-        self.out_dir = out_dir
-        self.data_dir = os.path.join(out_dir, "transactions")
-        self.lineage_dir = os.path.join(out_dir, LINEAGE_DIR)
-        self.n_buckets = n_buckets
-        self.buckets_per_commit = buckets_per_commit
-        _check_layout(out_dir, n_buckets)
-        os.makedirs(self.lineage_dir, exist_ok=True)
-
-    # -- lineage state ------------------------------------------------------
-
-    def committed(self) -> set[int]:
-        return {
-            int(f[len("bucket=") : -len(".json")])
-            for f in os.listdir(self.lineage_dir)
-            if f.startswith("bucket=") and f.endswith(".json")
-        }
-
-    def _commit_marker(self, bucket: int, metrics: dict) -> None:
-        """Atomic per-bucket commit (snapshots' shared tmp+fsync+rename)."""
-        from pdf_parser_spark.plans.snapshots import _atomic_write
-
-        _atomic_write(
-            os.path.join(self.lineage_dir, f"bucket={bucket}.json"),
-            json.dumps(metrics),
-        )
-
-    def lineage(self) -> DataFrame:
-        """The committed-partition lineage/metrics table (A8)."""
-        rows = []
-        for b in sorted(self.committed()):
-            with open(os.path.join(self.lineage_dir, f"bucket={b}.json")) as fh:
-                rows.append(json.load(fh))
-        schema = (
-            "bucket int, lineage_id string, docs long, txns long, bytes_in long, "
-            "chars_out long, parse_failures long, group_wall_s double, "
-            "group_docs_per_sec double"
-        )
-        return self.spark.createDataFrame(rows, schema=schema)
-
-    # -- the job ------------------------------------------------------------
-
-    def run(self, get_pages, max_commits: int | None = None) -> dict:
-        """Process every uncommitted bucket group; return a run summary.
-
-        ``get_pages``: () -> DataFrame — re-evaluated per group so a restart
-        never depends on driver-side cached plans. ``max_commits`` caps the
-        number of group commits (the resume test uses it to simulate a kill
-        mid-job).
-        """
-        todo = sorted(set(range(self.n_buckets)) - self.committed())
-        groups = [
-            todo[i : i + self.buckets_per_commit]
-            for i in range(0, len(todo), self.buckets_per_commit)
-        ]
-        done = 0
-        for group in groups:
-            if max_commits is not None and done >= max_commits:
-                break
-            t0 = time.perf_counter()
-            extracted, txns = _extract_group(get_pages, group, self.n_buckets)
-            # data first: dynamic overwrite replaces exactly the bucket dirs
-            # in `group`, so a re-run after a crash is duplicate-free. The
-            # overwrite mode rides on THIS writer only — setting it on the
-            # session would silently change the semantics of every later
-            # partitioned mode('overwrite') write in the same session.
-            (
-                txns.repartition(len(group), "bucket")
-                .write.partitionBy("bucket")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(self.data_dir)
-            )
-            wall = time.perf_counter() - t0
-            # per-bucket metrics (tiny: one row per bucket) → markers LAST
-            stats = _group_stats(extracted)
-            extracted.unpersist()
-            # a bucket whose CURRENT output is empty writes no directory, so
-            # a crashed earlier attempt's data for it would survive under the
-            # fresh marker — clear it before committing
-            import shutil
-
-            for b in group:
-                if int(stats.get(b, {}).get("txns") or 0) == 0:
-                    shutil.rmtree(
-                        os.path.join(self.data_dir, f"bucket={b}"),
-                        ignore_errors=True,
-                    )
-            # The wall clock covers the whole bucket *group* (one commit), so
-            # the throughput metric is group-level: group docs / group wall,
-            # shared identically across the group's markers. Labeling it
-            # per-bucket would understate every bucket whenever
-            # buckets_per_commit > 1.
-            group_docs = sum(int(stats.get(b, {}).get("docs") or 0) for b in group)
-            group_rate = round(group_docs / wall, 2) if wall > 0 else 0.0
-            for b in group:
-                s = stats.get(
-                    b,
-                    {"docs": 0, "txns": 0, "bytes_in": 0, "chars_out": 0, "parse_failures": 0},
-                )
-                s.pop("bucket", None)
-                docs = int(s["docs"] or 0)
-                self._commit_marker(
-                    b,
-                    {
-                        "bucket": b,
-                        "lineage_id": f"extract:{self.n_buckets}:{b}",
-                        "docs": docs,
-                        "txns": int(s["txns"] or 0),
-                        "bytes_in": int(s["bytes_in"] or 0),
-                        "chars_out": int(s["chars_out"] or 0),
-                        "parse_failures": int(s["parse_failures"] or 0),
-                        "group_wall_s": round(wall, 3),
-                        "group_docs_per_sec": group_rate,
-                    },
-                )
-            done += 1
-        return {
-            "n_buckets": self.n_buckets,
-            "committed": len(self.committed()),
-            "group_commits_this_run": done,
-        }
-
-    def output(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_dir)
-
-
-def full_pipeline_job(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """One-shot (non-resumable) comparison path: same output in one commit."""
-    txns = pipeline.transactions_pipeline(pages)
-    pages_src.write_table(txns, os.path.join(out_dir, "transactions"), n_buckets)
-    return spark.read.parquet(os.path.join(out_dir, "transactions"))
-
-
-class SnapshotExtractionJob:
-    """pages → transactions where the COMMIT UNIT IS A TABLE SNAPSHOT.
-
-    The north rule's literal shape: "resumes from the last committed
-    snapshot". Each bucket group becomes one `overwrite_partitions` commit
-    on a plans/snapshots.SnapshotTable, with the group's extraction metrics
-    riding in the snapshot SUMMARY (Iceberg snapshots carry exactly such a
-    summary map). Resume = read which buckets any retained snapshot already
-    committed; a crash between the data write and the snapshot publish
-    leaves only unreferenced debris files (removed by
-    SnapshotTable.vacuum_orphans — expire_snapshots only sees files a
-    snapshot once referenced), never a half-committed bucket — the marker-file variant above
-    (ResumableExtractionJob) is this same pattern with the snapshot log
-    replaced by per-bucket JSON markers.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        out_dir: str,
-        n_buckets: int = 16,
-        buckets_per_commit: int = 4,
-    ) -> None:
-        from pdf_parser_spark.plans.snapshots import SnapshotTable
-
         self.spark = spark
         self.n_buckets = n_buckets
         self.buckets_per_commit = buckets_per_commit
-        _check_layout(out_dir, n_buckets)
         self.table = SnapshotTable(spark, out_dir, partition_col="bucket")
 
     # -- lineage state ------------------------------------------------------
 
     def committed(self) -> set[int]:
-        """Buckets some retained snapshot's summary claims (zero-output
-        buckets commit too, which file listings could not express)."""
-        done: set[int] = set()
-        v = self.table.current_version()
-        while v > 0:
-            try:
-                snap = self.table.snapshot(v)
-            except FileNotFoundError:  # expired history: older work is gone
-                break
-            done.update(snap["summary"].get("buckets", []))
-            v = snap.get("base_version", v - 1)
-        return done
+        """Buckets the head snapshot has committed (zero-output buckets
+        commit too, which file listings could not express)."""
+        return set(self.table.committed_ids())
 
     def lineage(self) -> DataFrame:
         """Per-commit lineage/metrics straight from the snapshot log."""
@@ -291,7 +81,7 @@ class SnapshotExtractionJob:
         while v > 0:
             try:
                 snap = self.table.snapshot(v)
-            except FileNotFoundError:
+            except FileNotFoundError:  # expired history
                 break
             s = snap["summary"]
             if "buckets" in s:
@@ -315,50 +105,63 @@ class SnapshotExtractionJob:
     # -- the job ------------------------------------------------------------
 
     def run(self, get_pages, max_commits: int | None = None) -> dict:
-        """Process every bucket group absent from the snapshot history."""
+        """Process every uncommitted bucket group; return a run summary.
+
+        ``get_pages``: () -> DataFrame — re-evaluated per group so a restart
+        never depends on driver-side cached plans. ``max_commits`` caps the
+        number of group commits (the resume tests use it to simulate a kill
+        mid-job).
+        """
         todo = sorted(set(range(self.n_buckets)) - self.committed())
         groups = [
             todo[i : i + self.buckets_per_commit]
             for i in range(0, len(todo), self.buckets_per_commit)
-        ]
-        done = 0
+        ][:max_commits]
         for group in groups:
-            if max_commits is not None and done >= max_commits:
-                break
             t0 = time.perf_counter()
-            extracted, txns = _extract_group(get_pages, group, self.n_buckets)
-            stats = _group_stats(extracted)
-
-            def total(col):
-                return sum(int(stats.get(b, {}).get(col) or 0) for b in group)
-
-            docs = total("docs")
+            pages = pages_src.with_bucket(get_pages(), "url", self.n_buckets)
+            pages = pages.where(F.col("bucket").isin(group))
+            extracted = extract_op.extract_documents(pages.drop("bucket"))
+            extracted = pages_src.with_bucket(
+                extracted, "url", self.n_buckets
+            ).persist()
+            txns = pages_src.with_bucket(
+                extract_op.extracted_transactions(extracted.drop("bucket")),
+                "url", self.n_buckets,
+            )
+            stats = extracted.agg(
+                F.count("*").alias("docs"),
+                F.sum("n_txns").alias("txns"),
+                F.sum("bytes_in").alias("bytes_in"),
+                F.sum("chars_out").alias("chars_out"),
+                F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
+            ).first().asDict()
+            stats = {k: int(n or 0) for k, n in stats.items()}
 
             def _summary() -> dict:
                 # called AFTER the data write (summary_factory), so the
                 # wall clock — and the docs/sec the north star reads from
-                # lineage() — includes the write, matching the marker sink
+                # lineage() — includes the write
                 wall = time.perf_counter() - t0
                 return {
                     "lineage_id": f"extract:{self.n_buckets}:"
                     + ",".join(str(b) for b in group),
-                    "buckets": [int(b) for b in group],
-                    "docs": docs,
-                    "txns": total("txns"),
-                    "bytes_in": total("bytes_in"),
-                    "chars_out": total("chars_out"),
-                    "parse_failures": total("parse_failures"),
+                    "buckets": group,
+                    **stats,
                     "group_wall_s": round(wall, 3),
-                    "group_docs_per_sec": round(docs / wall, 2) if wall else 0.0,
+                    "group_docs_per_sec": (
+                        round(stats["docs"] / wall, 2) if wall else 0.0
+                    ),
                 }
 
-            self.table.overwrite_partitions(txns, summary_factory=_summary)
+            self.table.overwrite_partitions(
+                txns, summary_factory=_summary, ids=group
+            )
             extracted.unpersist()
-            done += 1
         return {
             "n_buckets": self.n_buckets,
             "committed": len(self.committed()),
-            "group_commits_this_run": done,
+            "group_commits_this_run": len(groups),
             "snapshot_version": self.table.current_version(),
         }
 

@@ -74,8 +74,6 @@ class CorpusRollup:
         # partials on the re-scan.
         self.cache_tokens = cache_tokens
         self.table = SnapshotTable(spark, path, partition_col="bucket")
-        self._batch_cache: set[int] | None = None
-        self._batch_cache_v = 0
 
     # -- write side ----------------------------------------------------------
 
@@ -132,23 +130,8 @@ class CorpusRollup:
         )
 
     def ingested_batches(self) -> set[int]:
-        """Batch ids already committed. The snapshot-summary scan runs
-        ONCE per instance and is kept current incrementally — a
-        per-ingest rescan is O(versions) metadata reads, which turns a
-        many-file streaming drain quadratic. Single-writer assumption:
-        another process's concurrent ingests are not visible to this
-        cache (the stream path is one writer by construction)."""
-        cur = self.table.current_version()
-        if self._batch_cache is None:
-            self._batch_cache = set()
-            self._batch_cache_v = 0
-        # incremental: only versions committed since the last look
-        for v in range(self._batch_cache_v + 1, cur + 1):
-            b = self.table.snapshot(v)["summary"].get("batch_id")
-            if b is not None:
-                self._batch_cache.add(int(b))
-        self._batch_cache_v = max(self._batch_cache_v, cur)
-        return self._batch_cache
+        """Batch ids already committed (the head snapshot's ids)."""
+        return set(self.table.committed_ids())
 
     def ingest(self, docs: DataFrame, batch_id: int) -> int:
         """Summarize one batch and append its rollup rows atomically.
@@ -160,11 +143,7 @@ class CorpusRollup:
         if int(batch_id) in self.ingested_batches():
             return self.table.current_version()
         rows = self._rollup_rows(docs, batch_id)
-        v = self.table.append(rows, summary={"batch_id": int(batch_id)})
-        if self._batch_cache is not None:
-            self._batch_cache.add(int(batch_id))
-            self._batch_cache_v = v
-        return v
+        return self.table.append(rows, ids=[batch_id])
 
     # -- read side -----------------------------------------------------------
 

@@ -14,8 +14,8 @@ idempotent-per-batch pieces into that loop:
 Exactly-once WITHOUT a cross-step transaction: every leg is
 independently idempotent keyed by ``batch_id`` —
 
-- the near-dup index replays as a no-op (batch id in both snapshot
-  summaries) and the batch's survivor set is recovered from the index's
+- the near-dup index replays as a no-op (batch id in both tables'
+  committed ids) and the batch's survivor set is recovered from the index's
   own commit via the snapshot log's CDC read, so a replay makes the
   SAME survivor decisions the original run committed, even though the
   index has since absorbed those very survivors (re-running the dedup
@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from pdf_parser_spark.plans.corpus_report import CorpusRollup
 from pdf_parser_spark.plans.deliver import deliver_training_data
-from pdf_parser_spark.plans.incremental_dedup import _BATCH_KEY, IncrementalNearDup
+from pdf_parser_spark.plans.incremental_dedup import IncrementalNearDup
 
 __all__ = ["MonthlyCrawl"]
 
@@ -84,15 +84,13 @@ class MonthlyCrawl:
         the signature table's OWN commit for that batch (CDC read of one
         snapshot) — the replay path; scan cost is that batch's files only."""
         sigs = self.index.sigs
-        for v in range(1, sigs.current_version() + 1):
-            if sigs.snapshot(v)["summary"].get(_BATCH_KEY) == int(batch_id):
-                return sigs.changes(v - 1, v).select(
-                    F.col("doc_id").alias(self.id_col)
-                )
-        raise ValueError(
-            f"batch {batch_id} is marked committed but has no signature "
-            "snapshot — index corrupted"
-        )
+        v = sigs.committed_ids().get(int(batch_id))
+        if v is None:
+            raise ValueError(
+                f"batch {batch_id} is marked committed but has no signature "
+                "snapshot — index corrupted"
+            )
+        return sigs.changes(v - 1, v).select(F.col("doc_id").alias(self.id_col))
 
     def ingest_month(
         self,

@@ -24,8 +24,8 @@ A batch is processed as:
    exactly the keep-first contract of the batch dedup operators;
 5. survivors only are appended to both tables, stamped with the batch id.
 
-Exactly-once: each table append is idempotent per batch id (the id rides
-in the snapshot summary, as in streaming/warc_stream). The two commits
+Exactly-once: each table append is idempotent per batch id (the id is one
+of the snapshot's committed ids, as in streaming/warc_stream). The two commits
 are not atomic together, but a crash between them converges on replay:
 decisions are UNCHANGED under a bands-committed/sigs-missing partial
 state because index candidates only count after an inner join to
@@ -53,9 +53,7 @@ from pdf_parser_spark.operators.dedupe import (
     band_hashes,
     minhash_signature,
 )
-from pdf_parser_spark.plans.snapshots import SnapshotTable
-
-_BATCH_KEY = "dedup_batch_id"
+from pdf_parser_spark.plans.snapshots import SnapshotTable, pin_meta
 
 # bound on the driver-side manifest Bloom probe (see dedup_batch): batches
 # whose distinct band-hash count exceeds this fall back to the unpruned
@@ -101,8 +99,6 @@ class IncrementalNearDup:
             spark, os.path.join(path, "sigs"), stats_cols=("doc_id",)
         )
         meta_path = os.path.join(path, "_index_meta.json")
-        import json
-
         if not os.path.exists(meta_path) and (
             self.bands.current_version() > 0 or self.sigs.current_version() > 0
         ):
@@ -111,23 +107,12 @@ class IncrementalNearDup:
             # threshold (a different split would silently stop matching
             # every persisted row)
             requested = N_BANDS if bands is None else bands
-        if not os.path.exists(meta_path):
-            # exclusive publish (hard link, same discipline as the snapshot
-            # log): two writers racing to create the index cannot both win
-            # and commit mixed-banding rows — the loser re-reads and must
-            # agree with the winner's geometry
-            os.makedirs(path, exist_ok=True)
-            tmp = meta_path + f".tmp.{os.getpid()}"
-            with open(tmp, "w") as fh:
-                json.dump({"bands": requested, "n_hashes": N_HASHES}, fh)
-            try:
-                os.link(tmp, meta_path)
-            except FileExistsError:
-                pass  # lost the race — validate against the winner below
-            finally:
-                os.unlink(tmp)
-        with open(meta_path) as fh:
-            committed = json.load(fh)["bands"]
+        # exclusive publish: two writers racing to create the index cannot
+        # both win and commit mixed-banding rows — the loser gets the
+        # winner's geometry back and must agree with it
+        committed = pin_meta(
+            meta_path, {"bands": requested, "n_hashes": N_HASHES}
+        )["bands"]
         if bands is not None and bands != committed:
             raise ValueError(
                 f"index at {path} was built with bands={committed}, "
@@ -138,17 +123,9 @@ class IncrementalNearDup:
 
     # -- exactly-once bookkeeping -------------------------------------------
 
-    def _committed(self, table: SnapshotTable) -> set[int]:
-        out = set()
-        for v in range(1, table.current_version() + 1):
-            b = table.snapshot(v)["summary"].get(_BATCH_KEY)
-            if b is not None:
-                out.add(int(b))
-        return out
-
     def committed_batches(self) -> set[int]:
         """Batches fully committed (present in BOTH tables)."""
-        return self._committed(self.bands) & self._committed(self.sigs)
+        return set(self.bands.committed_ids()) & set(self.sigs.committed_ids())
 
     # -- signing --------------------------------------------------------------
 
@@ -310,6 +287,6 @@ class IncrementalNearDup:
 
     def _append_once(self, table: SnapshotTable, df: DataFrame,
                      batch_id: int) -> None:
-        if int(batch_id) in self._committed(table):
+        if int(batch_id) in table.committed_ids():
             return
-        table.append(df, summary={_BATCH_KEY: int(batch_id)})
+        table.append(df, ids=[batch_id])

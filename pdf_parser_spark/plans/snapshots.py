@@ -24,11 +24,18 @@ public design the Iceberg spec describes (and the same on-disk idioms:
   path — the Iceberg scan-planning step that keeps a 10^12-row table's
   query from listing a million files;
 - ``expire_snapshots`` retires old versions and deletes data files no
-  retained snapshot references (the GC story).
+  retained snapshot references (the GC story);
+- every snapshot carries forward the IDEMPOTENCY IDS committed so far
+  (bucket or batch id → the version that committed it), so "what have I
+  committed?" is one read of the head snapshot — exact after any
+  ``expire_snapshots``, and a ``rollback`` restores the restored
+  version's id set together with its files.
 
-On a real cluster the same call sites switch to ``df.writeTo(...)`` /
-``spark.read.option("snapshot-id", ...)``; the job loops (plans/checkpoint)
-are unchanged.
+This log is the one commit protocol of the package: the extraction job
+(plans/checkpoint), the stream sinks, the near-dup index, the rollup and
+the change-log sync all commit and resume through it. On a real cluster
+the same call sites switch to ``df.writeTo(...)`` /
+``spark.read.option("snapshot-id", ...)``; the job loops are unchanged.
 """
 
 from __future__ import annotations
@@ -85,6 +92,21 @@ def _publish_exclusive(path: str, payload: str) -> None:
         raise CommitConflict(f"version file already published: {path}") from exc
     finally:
         os.unlink(tmp)
+
+
+def pin_meta(path: str, meta: dict) -> dict:
+    """Publish ``meta`` at ``path`` unless a meta file is already there;
+    return the committed one. The publish is exclusive, so of two first
+    writers with different geometry exactly one wins and the other sees
+    the winner's meta — callers compare it with what they asked for."""
+    if not os.path.exists(path):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        try:
+            _publish_exclusive(path, json.dumps(meta))
+        except CommitConflict:
+            pass  # lost the race: the winner's meta is read below
+    with open(path) as fh:
+        return json.load(fh)
 
 
 _HIVE_ESC = re.compile("%([0-9A-Fa-f]{2})")
@@ -381,14 +403,22 @@ class SnapshotTable:
         return entries
 
     def _publish(self, operation: str, files: list[dict], base_version: int,
-                 summary: dict | None = None) -> int:
+                 summary: dict | None = None, ids=(),
+                 ids_of: int | None = None) -> int:
+        """Publish version ``base_version + 1``. Its id map is the one of
+        ``ids_of`` (default: the base; a rollback passes the version it
+        restores) plus ``ids``, each mapped to the new version."""
         v = base_version + 1
+        src = base_version if ids_of is None else ids_of
+        committed = dict(self.snapshot(src).get("ids", {}))
+        committed.update((str(int(i)), v) for i in ids)
         snap = {
             "version": v,
             "operation": operation,
             "base_version": base_version,
             "files": files,
             "summary": summary or {},
+            "ids": committed,
             "ts": time.time(),
         }
         _publish_exclusive(self._snapshot_path(v), json.dumps(snap))
@@ -397,8 +427,15 @@ class SnapshotTable:
         _atomic_write(os.path.join(self.meta_dir, _HINT), str(v))
         return v
 
-    def append(self, df: DataFrame, summary: dict | None = None) -> int:
-        """New snapshot = old files + df's files.
+    def committed_ids(self) -> dict[int, int]:
+        """Idempotency ids committed so far → the version that committed
+        each: one read of the head snapshot, unaffected by expiry."""
+        return {int(i): v for i, v in self.snapshot().get("ids", {}).items()}
+
+    def append(self, df: DataFrame, summary: dict | None = None,
+               ids=()) -> int:
+        """New snapshot = old files + df's files; ``ids`` (integers) join
+        the committed id set in the same atomic publish.
 
         One shuffle keyed on the partition column so each partition value
         lands in one file (pages.write_table's small-files discipline; at
@@ -408,13 +445,13 @@ class SnapshotTable:
         base = self.current_version()
         new = self._write_data_files(df.repartition(self.partition_col), base + 1)
         return self._publish(
-            "append", self.snapshot(base)["files"] + new, base, summary
+            "append", self.snapshot(base)["files"] + new, base, summary, ids
         )
 
     def overwrite_partitions(self, df: DataFrame,
                              summary: dict | None = None,
                              base: int | None = None,
-                             summary_factory=None) -> int:
+                             summary_factory=None, ids=()) -> int:
         """Replace exactly the partitions present in df (dynamic overwrite).
 
         A file is replaced iff its partition_col min==max value appears in
@@ -432,6 +469,8 @@ class SnapshotTable:
         just before the publish — for summaries that must observe the
         write's cost (wall-clock throughput metrics) while still riding
         the same atomic commit. Mutually exclusive with ``summary``.
+
+        ``ids`` join the committed id set (see append).
         """
         if base is None:
             base = self.current_version()
@@ -449,7 +488,9 @@ class SnapshotTable:
             for f in self.snapshot(base)["files"]
             if f["min"].get(self.partition_col) not in touched
         ]
-        return self._publish("overwrite_partitions", kept + new, base, summary)
+        return self._publish(
+            "overwrite_partitions", kept + new, base, summary, ids
+        )
 
     def merge_rows(self, df: DataFrame, key_cols: tuple[str, ...],
                    summary: dict | None = None) -> int:
@@ -494,10 +535,11 @@ class SnapshotTable:
         return self.overwrite_partitions(out, summary, base=base)
 
     def rollback(self, version: int, summary: dict | None = None) -> int:
-        """New snapshot re-publishing `version`'s file set (history kept)."""
-        base = self.current_version()
+        """New snapshot re-publishing `version`'s file set and committed
+        ids (history kept)."""
         return self._publish(
-            "rollback", self.snapshot(version)["files"], base, summary
+            "rollback", self.snapshot(version)["files"],
+            self.current_version(), summary, ids_of=version,
         )
 
     # -- reads --------------------------------------------------------------

@@ -43,41 +43,19 @@ the same "never lose, never double-write" contract its upsert gives.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.indexing import with_global_index
+from pdf_parser_spark.plans.snapshots import pin_meta
 
 __all__ = ["plan_shards", "export_shards", "read_shards", "verify_shards"]
 
 _DATA = "data"
 _MANIFEST = "_shard_manifest"
 _META = "_export_meta.json"
-
-
-def _check_meta(root: str, meta: dict) -> None:
-    """Pin the export geometry: a resume with different parameters would
-    silently assign rows to different shards than the committed ones, so
-    refuse it loudly instead."""
-    path = os.path.join(root, _META)
-    if os.path.exists(path):
-        with open(path) as fh:
-            prev = json.load(fh)
-        if prev != meta:
-            raise ValueError(
-                f"export geometry mismatch under {root}: committed {prev}, "
-                f"requested {meta} — resume must use the original "
-                "order_key/tiebreaker/rows_per_shard"
-            )
-        return
-    os.makedirs(root, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, path)
 
 
 def plan_shards(
@@ -172,15 +150,21 @@ def export_shards(
 
     Returns a small summary dict (counts only, never row data)."""
     spark = df.sparkSession
-    _check_meta(
-        root,
-        {
-            "order_key": order_key,
-            "tiebreaker": tiebreaker,
-            "rows_per_shard": rows_per_shard,
-            "token_col": token_col,
-        },
-    )
+    # pin the export geometry: a resume with different parameters would
+    # silently assign rows to different shards than the committed ones
+    meta = {
+        "order_key": order_key,
+        "tiebreaker": tiebreaker,
+        "rows_per_shard": rows_per_shard,
+        "token_col": token_col,
+    }
+    prev = pin_meta(os.path.join(root, _META), meta)
+    if prev != meta:
+        raise ValueError(
+            f"export geometry mismatch under {root}: committed {prev}, "
+            f"requested {meta} — resume must use the original "
+            "order_key/tiebreaker/rows_per_shard"
+        )
     planned = plan_shards(df, order_key, tiebreaker, rows_per_shard, num_buckets)
     manifest = _read_manifest(spark, root)
 

@@ -55,12 +55,7 @@ class StreamingDedupIngest:
         )
 
     def _corpus_batches(self) -> set[int]:
-        out = set()
-        for v in range(1, self.corpus.current_version() + 1):
-            b = self.corpus.snapshot(v)["summary"].get("stream_batch_id")
-            if b is not None:
-                out.add(int(b))
-        return out
+        return set(self.corpus.committed_ids())
 
     def _commit_batch(self, df: DataFrame, batch_id: int) -> None:
         bid = int(batch_id)
@@ -91,7 +86,8 @@ class StreamingDedupIngest:
         n = survivors.persist().count()
         self.corpus.append(
             survivors,
-            summary={"stream_batch_id": bid, "docs_kept": int(n)},
+            summary={"docs_kept": int(n)},
+            ids=[bid],
         )
         survivors.unpersist()
 

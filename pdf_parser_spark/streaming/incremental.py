@@ -5,43 +5,42 @@ added/modified/removed records from a cursored source, upsert/delete into the
 store with deterministic ids, and persist the cursor only after the whole
 item is applied — crash ⇒ re-pull ⇒ idempotent.
 
-Two equivalent Spark realizations:
-
-1. `IncrementalSync` — incremental *batch*: the source is a directory that
-   accumulates change files (`changes-<seq>.parquet`, each row carries
-   ``op ∈ {upsert, remove}`` and a monotonically increasing ``seq``); the
-   cursor is the last fully-applied seq, persisted in
-   ``<target>/_cursor.json`` AFTER the merged table commit (commit-last,
-   plaid.py:345). The merge itself is D3's keep-latest window — on an Iceberg
-   cluster this is `MERGE INTO target USING batch ON target.id = batch.id
-   WHEN MATCHED ... WHEN NOT MATCHED ...`, same dataframe, one snapshot.
-
-2. `stream_sync` — Structured Streaming over the same directory with
-   ``Trigger.availableNow`` + ``foreachBatch``: Spark's own checkpoint
-   directory replaces the hand-rolled cursor (exactly-once file-source
-   progress tracking), and each micro-batch applies the same merge.
+`IncrementalSync` is that loop as incremental *batch*: the source is a
+directory that accumulates change files (`changes-<seq>.parquet`, each row
+carries ``op ∈ {upsert, remove}`` and a monotonically increasing ``seq``);
+the cursor is the last fully-applied seq. The merged state and the cursor
+are published in ONE snapshot of a plans/snapshots.SnapshotTable (the
+cursor is that snapshot's committed id), so there is no crash window
+between the data commit and the cursor advance. The merge itself is D3's
+keep-latest window — on an Iceberg cluster this is `MERGE INTO target USING
+batch ON target.id = batch.id WHEN MATCHED ... WHEN NOT MATCHED ...`, same
+dataframe, one snapshot.
 
 Late/duplicate safety (S3) is seq-based and DURABLE: the stored target keeps
 every key's applied ``seq`` and keeps removes as TOMBSTONE rows, so a change
 row only wins if its seq is strictly newer than the committed state — a
 redelivered old upsert can neither regress a newer value nor resurrect a
-deleted key, across any sync()/micro-batch boundary and in any delivery
-order. ``table()`` serves the live view (tombstones and bookkeeping columns
+deleted key, across any sync() boundary and in any delivery order.
+``table()`` serves the live view (tombstones and bookkeeping columns
 dropped).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from pdf_parser_spark.plans.snapshots import SnapshotTable
+
 CHANGE_RE = re.compile(r"changes-(\d+)\.parquet$")
+
+# the stored state's layout key: a hash bucket of the merge key
+_BUCKET = "_bucket"
+_N_BUCKETS = 16
 
 
 def apply_changes(target: DataFrame | None, batch: DataFrame, key: str = "id") -> DataFrame:
@@ -51,23 +50,17 @@ def apply_changes(target: DataFrame | None, batch: DataFrame, key: str = "id") -
     The output still carries ``op`` and ``seq``: removes persist as
     tombstones and seq persists per key, so a later merge of a REDELIVERED
     old change row loses to the committed state instead of clobbering it
-    (filter with :func:`live_rows` for the payload view). A target stored
-    by an older version of this module (no op/seq columns) participates at
-    seq = -1, preserving its previous any-change-wins behavior once.
+    (filter with :func:`live_rows` for the payload view).
 
     Ties on seq are broken toward 'remove' — deterministic, and
     conservative for the undefined same-seq-conflicting-ops case. Columns
     new to either side null-fill on the other (additive schema evolution,
     both directions).
     """
-    if target is not None:
-        if "seq" not in target.columns:  # legacy stored target
-            target = target.withColumn("op", F.lit("upsert")).withColumn(
-                "seq", F.lit(-1).cast("long")
-            )
-        allrows = target.unionByName(batch, allowMissingColumns=True)
-    else:
-        allrows = batch
+    allrows = (
+        batch if target is None
+        else target.unionByName(batch, allowMissingColumns=True)
+    )
     w = W.partitionBy(key).orderBy(F.col("seq").desc(), F.col("op").asc())
     return (
         allrows.withColumn("_rn", F.row_number().over(w))
@@ -81,49 +74,17 @@ def live_rows(stored: DataFrame) -> DataFrame:
     return stored.filter(F.col("op") != "remove").drop("op", "seq")
 
 
-def _swap_in(data: str, write) -> None:
-    """Replace the ``data`` directory with freshly-written content.
-
-    ``write(tmp_path)`` materializes the new version; the swap is then
-    rename-then-delete (never delete-then-rename): a crash mid-swap leaves
-    ``data.old``, which _read_target restores — the window where no table
-    version exists on disk is a single rename. One shared convention
-    (``data.tmp``) so a crash's debris is reclaimed by the next run's
-    overwrite instead of accumulating per-batch directories.
-    """
-    tmp = data + ".tmp"
-    write(tmp)
-    old = data + ".old"
-    if os.path.isdir(old) and os.path.isdir(data):
-        shutil.rmtree(old, ignore_errors=True)  # stale .old from a crash
-    if os.path.isdir(data):
-        os.replace(data, old)
-    os.replace(tmp, data)
-    if os.path.isdir(old):
-        shutil.rmtree(old, ignore_errors=True)
-
-
 class IncrementalSync:
-    """Cursor-checkpointed incremental batch sync into a parquet target."""
+    """Cursor-checkpointed incremental batch sync into a snapshot table."""
 
     def __init__(self, spark: SparkSession, source_dir: str, target_dir: str, key: str = "id"):
         self.spark = spark
         self.source_dir = source_dir
-        self.target_dir = target_dir
         self.key = key
-        self.cursor_path = os.path.join(target_dir, "_cursor.json")
+        self.store = SnapshotTable(spark, target_dir, partition_col=_BUCKET)
 
     def cursor(self) -> int:
-        if os.path.exists(self.cursor_path):
-            with open(self.cursor_path) as fh:
-                return int(json.load(fh)["seq"])
-        return -1
-
-    def _persist_cursor(self, seq: int) -> None:
-        from pdf_parser_spark.plans.snapshots import _atomic_write
-
-        os.makedirs(self.target_dir, exist_ok=True)
-        _atomic_write(self.cursor_path, json.dumps({"seq": seq}))
+        return max(self.store.committed_ids(), default=-1)
 
     def pending_files(self) -> list[tuple[int, str]]:
         """Pending change files in seq order — only COMPLETE ones.
@@ -151,72 +112,28 @@ class IncrementalSync:
             out.append((int(m.group(1)), full))
         return sorted(out)
 
-    def _read_target(self) -> DataFrame | None:
-        data = os.path.join(self.target_dir, "data")
-        old = data + ".old"
-        # crash recovery: a crash between `replace(data, data.old)` and
-        # `replace(tmp, data)` in sync() leaves only data.old — restore it so
-        # the accumulated table is never silently lost (the cursor was not
-        # advanced, so the pending files simply re-apply on top: idempotent).
-        if not os.path.isdir(data) and os.path.isdir(old):
-            os.replace(old, data)
-        if os.path.isdir(data) and os.listdir(data):
-            return self.spark.read.parquet(data)
-        return None
-
     def sync(self) -> dict:
-        """Apply all pending change files in seq order; commit-last cursor.
+        """Apply all pending change files in seq order in one commit.
 
         All pending files are applied as ONE merge (keep-latest over seq
-        is associative and order-free), then one table rewrite, then the
-        cursor advance — minimal commits, idempotent re-run after any
-        crash point.
+        is associative and order-free) and published as one snapshot
+        carrying the new cursor — idempotent re-run after any crash
+        point. The merged state keeps every stored key (tombstones
+        included), so it rewrites every bucket the base held.
         """
+        base = self.store.current_version()
         pending = self.pending_files()
         if not pending:
             return {"applied_files": 0, "cursor": self.cursor()}
         batch = self.spark.read.parquet(*[p for _, p in pending])
-        merged = apply_changes(self._read_target(), batch, self.key)
-        data = os.path.join(self.target_dir, "data")
-        _swap_in(data, lambda tmp: merged.write.mode("overwrite").parquet(tmp))
-        self._persist_cursor(max(seq for seq, _ in pending))
+        stored = self.store.read(base) if base else None
+        merged = apply_changes(stored, batch, self.key).withColumn(
+            _BUCKET, F.pmod(F.xxhash64(self.key), F.lit(_N_BUCKETS)).cast("int")
+        )
+        self.store.overwrite_partitions(merged, base=base, ids=[pending[-1][0]])
         return {"applied_files": len(pending), "cursor": self.cursor()}
 
     def table(self) -> DataFrame | None:
-        stored = self._read_target()
-        return None if stored is None else live_rows(stored)
-
-
-def stream_sync(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    key: str = "id",
-) -> None:
-    """Structured Streaming variant: availableNow + foreachBatch merge.
-
-    The file source's checkpoint (`checkpoint_dir`) is the cursor — restarts
-    resume from the last committed micro-batch with exactly-once file
-    accounting. The merge inside foreachBatch is seq-safe: because the
-    stored target keeps per-key seq and tombstones, two change files landing
-    in DIFFERENT micro-batches apply correctly in either discovery order
-    (the file source orders by modification time, not by seq).
-    """
-    sync = IncrementalSync(spark, source_dir, target_dir, key)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merged = apply_changes(sync._read_target(), batch_df, key)
-        data = os.path.join(target_dir, "data")
-        _swap_in(data, lambda tmp: merged.write.mode("overwrite").parquet(tmp))
-
-    (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_batch)
-        .start()
-        .awaitTermination()
-    )
+        if self.store.current_version() == 0:
+            return None
+        return live_rows(self.store.read()).drop(_BUCKET)

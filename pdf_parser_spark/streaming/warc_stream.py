@@ -7,10 +7,10 @@ executors, and ``foreachBatch`` commits every micro-batch to an
 Iceberg-style SnapshotTable (plans/snapshots).
 
 Exactly-once is the standard idempotent-foreachBatch recipe with the
-snapshot log as the transactional sink: the snapshot SUMMARY records the
-stream's batch id, so a batch replayed after a failure between the sink
-commit and the source-checkpoint advance is detected in the log and
-skipped. One stream checkpoint directory pairs with one table — batch ids
+snapshot log as the transactional sink: the stream's batch id is one of
+the snapshot's committed ids, so a batch replayed after a failure between
+the sink commit and the source-checkpoint advance is detected in the log
+and skipped. One stream checkpoint directory pairs with one table — batch ids
 are only unique within a checkpoint lineage (resetting the checkpoint while
 keeping the table would replay ids; that pairing is the caller's contract,
 same as with any idempotent foreachBatch sink).
@@ -79,32 +79,12 @@ class WarcIngest:
         self.transform = transform
         self.max_files_per_trigger = max_files_per_trigger
         self.table = SnapshotTable(spark, table_path, partition_col="bucket")
-        # committed-batch cache: the walk re-parses the whole snapshot
-        # chain; doing it per micro-batch is O(batches^2) driver metadata
-        # I/O. Populated once here, advanced per commit; a conflicting
-        # concurrent writer surfaces as CommitConflict, not a stale skip
-        # (single-writer per checkpoint lineage is the documented contract).
-        self._done: set[int] = self._walk_committed()
-
-    def _walk_committed(self) -> set[int]:
-        done: set[int] = set()
-        v = self.table.current_version()
-        while v > 0:
-            try:
-                snap = self.table.snapshot(v)
-            except FileNotFoundError:
-                break
-            b = snap["summary"].get("stream_batch_id")
-            if b is not None:
-                done.add(int(b))
-            v = snap.get("base_version", v - 1)
-        return done
 
     def committed_batches(self) -> set[int]:
-        return set(self._done)
+        return set(self.table.committed_ids())
 
     def _commit_batch(self, df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) in self._done:
+        if int(batch_id) in self.table.committed_ids():
             return  # replayed batch: the snapshot log already has it
         if self.transform is not None:
             df = self.transform(df)
@@ -112,15 +92,11 @@ class WarcIngest:
         out.persist()
         try:
             n = out.count()
-            self.table.append(
-                out,
-                summary={"stream_batch_id": int(batch_id), "pages": int(n)},
-            )
+            self.table.append(out, summary={"pages": int(n)}, ids=[batch_id])
         finally:
             # without the finally, a failed transform/append pins the
             # cached raw-html batch in executor storage for the session
             out.unpersist()
-        self._done.add(int(batch_id))
 
     def run_available_now(self, timeout_s: float = 120.0) -> dict:
         """Drain everything currently in the directory, then stop.

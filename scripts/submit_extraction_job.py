@@ -17,8 +17,10 @@ Local smoke (same code path, local master):
     python scripts/submit_extraction_job.py --synthetic 2000 \
         --output /tmp/extract_out --n-buckets 16
 
-The job is resumable: re-submitting with the same --output continues from the
-last committed bucket group (plans/checkpoint.py). At 10^12 documents,
+The job is resumable: each bucket group is one snapshot commit of the table
+at --output, and re-submitting with the same --output continues from the
+last committed snapshot (plans/checkpoint.py). The table is read back with
+plans/snapshots.SnapshotTable(spark, output).read(). At 10^12 documents,
 n-buckets should put O(10^8) docs per bucket group commit; each group is an
 independent retry unit.
 """
@@ -46,11 +48,6 @@ def main() -> None:
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--buckets-per-commit", type=int, default=8)
     p.add_argument("--max-commits", type=int, default=None)
-    p.add_argument("--sink", choices=("markers", "snapshots"),
-                   default="markers",
-                   help="markers: per-bucket lineage JSON (A7/A8); "
-                        "snapshots: Iceberg-style snapshot log — resume "
-                        "from the last committed snapshot (plans/snapshots)")
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
@@ -64,7 +61,7 @@ def main() -> None:
         .getOrCreate()
     )
 
-    from pdf_parser_spark.plans.checkpoint import ResumableExtractionJob
+    from pdf_parser_spark.plans.checkpoint import SnapshotExtractionJob
     from pdf_parser_spark.sources.pages import read_pages_table
 
     if args.synthetic:
@@ -86,13 +83,7 @@ def main() -> None:
             def get_pages():
                 return read_pages_table(spark, args.input)
 
-    if args.sink == "snapshots":
-        from pdf_parser_spark.plans.checkpoint import SnapshotExtractionJob
-
-        job_cls = SnapshotExtractionJob
-    else:
-        job_cls = ResumableExtractionJob
-    job = job_cls(
+    job = SnapshotExtractionJob(
         spark, args.output,
         n_buckets=args.n_buckets,
         buckets_per_commit=args.buckets_per_commit,

@@ -47,6 +47,21 @@ def test_incremental_equals_oneshot(spark, tmp_path):
     assert ri["en"]["n_batches"] == 2 and ro["en"]["n_batches"] == 1
 
 
+def test_replay_after_expiry_is_a_noop(spark, tmp_path):
+    """A rollup reopened after expire_snapshots still treats a replayed
+    batch id as committed: no new snapshot, no double counting."""
+    path = str(tmp_path / "r")
+    roll = CorpusRollup(spark, path)
+    roll.ingest(_docs(spark, 0, 100), batch_id=1)
+    v = roll.ingest(_docs(spark, 100, 200), batch_id=2)
+    roll.table.expire_snapshots(keep_last=1)
+    again = CorpusRollup(spark, path)
+    assert again.ingested_batches() == {1, 2}
+    assert again.ingest(_docs(spark, 0, 100), batch_id=1) == v
+    assert again.table.current_version() == v
+    assert sum(r["n_docs"] for r in again.report().collect()) == 200
+
+
 def test_estimates_track_exact(spark, tmp_path):
     docs = _docs(spark, 0, 1200)
     roll = CorpusRollup(spark, str(tmp_path / "r"))

@@ -66,6 +66,20 @@ def test_replay_is_a_noop(spark, tmp_path):
     assert idx.committed_batches() == {7}
 
 
+def test_committed_batches_survive_expiry(spark, tmp_path):
+    """A reopened index whose tables were both expired to their heads
+    still knows every committed batch, and still replays as a no-op."""
+    path = str(tmp_path / "idx")
+    idx = IncrementalNearDup(spark, path)
+    idx.dedup_batch(_df(spark, [(1, _text(1))]), 1)
+    idx.dedup_batch(_df(spark, [(10, _text(2))]), 2)
+    idx.bands.expire_snapshots(keep_last=1)
+    idx.sigs.expire_snapshots(keep_last=1)
+    again = IncrementalNearDup(spark, path)
+    assert again.committed_batches() == {1, 2}
+    assert again.dedup_batch(_df(spark, [(1, _text(1))]), 1) is None
+
+
 def test_partial_commit_converges(spark, tmp_path):
     """Crash between the two appends: bands committed, sigs not. The
     replayed batch must produce the SAME decisions (band rows without a

@@ -15,17 +15,19 @@ import time
 
 import pytest
 
+from pdf_parser_spark.plans.snapshots import SnapshotTable
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPT = os.path.join(REPO, "scripts", "submit_extraction_job.py")
 N_DOCS = 400
 N_BUCKETS = 8
 
 
-def _markers(out_dir: str) -> int:
-    lineage = os.path.join(out_dir, "_lineage")
-    if not os.path.isdir(lineage):
+def _commits(spark, out_dir: str) -> int:
+    """Group commits so far: the snapshot log's head version."""
+    if not os.path.isdir(os.path.join(out_dir, "metadata")):
         return 0
-    return len([f for f in os.listdir(lineage) if f.endswith(".json")])
+    return SnapshotTable(spark, out_dir).current_version()
 
 
 def _run(out_dir: str, timeout: int = 300) -> dict:
@@ -64,7 +66,7 @@ def test_sigkill_mid_job_then_resume(tmp_path, spark):
     )
     deadline = time.time() + 240
     try:
-        while time.time() < deadline and _markers(out) < 2:
+        while time.time() < deadline and _commits(spark, out) < 2:
             if proc.poll() is not None:
                 break  # finished before we could kill it — resume still tested below
             time.sleep(0.5)
@@ -74,7 +76,7 @@ def test_sigkill_mid_job_then_resume(tmp_path, spark):
     finally:
         if proc.poll() is None:
             proc.send_signal(signal.SIGKILL)
-    committed_after_kill = _markers(out)
+    committed_after_kill = _commits(spark, out)
     assert committed_after_kill >= 1, "job was killed before any commit"
 
     # restart: must complete the remaining buckets only
@@ -83,12 +85,12 @@ def test_sigkill_mid_job_then_resume(tmp_path, spark):
     assert summary["total_docs"] == N_DOCS
 
     # exactly-once: identical to a clean single-shot run
-    got = spark.read.parquet(os.path.join(out, "transactions"))
+    got = SnapshotTable(spark, out).read()
     assert got.count() == got.select("txn_id").distinct().count()
 
     clean = str(tmp_path / "clean")
     clean_summary = _run(clean)
-    expect = spark.read.parquet(os.path.join(clean, "transactions"))
+    expect = SnapshotTable(spark, clean).read()
     assert clean_summary["total_docs"] == N_DOCS
     assert got.count() == expect.count()
     a = got.select("txn_id", "amount").orderBy("txn_id").toPandas()

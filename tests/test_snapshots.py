@@ -52,6 +52,32 @@ def test_rollback_creates_new_version(spark, tmp_path):
     assert _data(t, version=2) == {(0, "oops", 9)}  # still inspectable
 
 
+def test_committed_ids_carry_forward(spark, tmp_path):
+    """Every snapshot carries the ids committed so far: commits without
+    ids keep them, expiry keeps them, a rollback restores its version's."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    assert t.committed_ids() == {}
+    t.append(_df(spark, [(0, "a", 1)]), ids=[7])
+    t.overwrite_partitions(_df(spark, [(1, "b", 2)]), ids=[8, 9])
+    t.compact(min_files_per_partition=1)  # commits no ids of its own
+    assert t.committed_ids() == {7: 1, 8: 2, 9: 2}
+    t.expire_snapshots(keep_last=1)
+    assert t.committed_ids() == {7: 1, 8: 2, 9: 2}
+    t.append(_df(spark, [(2, "c", 3)]), ids=[10])
+    t.rollback(3)
+    assert t.committed_ids() == {7: 1, 8: 2, 9: 2}
+    assert _data(t) == {(0, "a", 1), (1, "b", 2)}
+
+
+def test_pin_meta_first_publish_wins(tmp_path):
+    from pdf_parser_spark.plans.snapshots import pin_meta
+
+    path = str(tmp_path / "sub" / "_meta.json")
+    assert pin_meta(path, {"n": 1}) == {"n": 1}
+    assert pin_meta(path, {"n": 2}) == {"n": 1}
+    assert os.listdir(tmp_path / "sub") == ["_meta.json"]  # no tmp debris
+
+
 def test_commit_conflict(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.append(_df(spark, [(0, "a", 1)]))
