@@ -677,11 +677,16 @@ def probe_bytes(data: bytes) -> dict:
         return _probe_av1_stream(data)
     if data[:3] == b"ID3":
         return _probe_mp3(data)
-    first = _mp3_frame_header(data, 0)
-    if first is not None:
-        # bare mp3 sync is promiscuous (11 set bits); require that the
-        # header's own frame length lands exactly on a second valid header
-        # before classifying — every other magic above was tried first
-        if _mp3_frame_header(data, first[0]) is not None:
-            return _probe_mp3(data)
+    # bare mp3 sync is promiscuous (11 set bits); require that the header's
+    # own frame length lands exactly on a second valid header before
+    # classifying — every other magic above was tried first. Free-format
+    # bits (bitrate_index 0) in an unconfirmed sync are no evidence of mp3
+    # either: such a payload is unrecognized, not a "free-format mp3".
+    try:
+        first = _mp3_frame_header(data, 0)
+        is_mp3 = first is not None and _mp3_frame_header(data, first[0]) is not None
+    except ValueError:
+        is_mp3 = False
+    if is_mp3:
+        return _probe_mp3(data)
     raise ValueError(f"unrecognized media magic {data[:8]!r}")

@@ -182,8 +182,8 @@ def bloom_pruned_left_join(big: DataFrame, small: DataFrame, on: str,
     The trade is one extra scan of `big` (both branches read it) for the
     removal of its shuffle — scans are columnar and local, shuffles are
     network+disk, so this wins whenever the match density is low. At high
-    density the hot branch approaches |big| and the plain join is better;
-    callers choose (the pipeline exposes it as an opt-in).
+    density the hot branch approaches |big| and the plain join is better,
+    so callers choose by their match density.
     """
     bitmap = build_bloom(small, on, n_bits, k)
     probed = with_bloom_probe(big, on, bitmap, k)

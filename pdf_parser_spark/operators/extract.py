@@ -66,8 +66,8 @@ _FAIL_KEYS = dict(
 def _extract_one(url: str, html: bytes, keep_text: bool) -> dict:
     """One document through the full extraction; NEVER raises.
 
-    Any per-document failure — engine chain exhausted, pathological
-    markup tripping the layout pass, undecodable payload — returns a
+    Any per-document failure — PDF bytes the codec cannot decode,
+    pathological markup tripping the layout pass, a malformed payload — returns a
     parse_failed=True record instead of propagating: at corpus scale one
     poisoned document must land in the failure funnel (extraction_metrics
     parse_failures), not kill the job after four task retries.
@@ -83,36 +83,32 @@ def _extract_one(url: str, html: bytes, keep_text: bool) -> dict:
 def _extract_one_inner(url: str, html: bytes, keep_text: bool,
                        bytes_in: int) -> dict:
     kind = _payload_kind(url, html)
-    parse_failed = False
-    spans: list[dict] = []
     page_texts: list[str] | None = None
     if kind == "pdf":
         # pdfminer-style layout pass; real `%PDF-` payloads decode through
-        # the engine chain (pdfplumber → PyMuPDF → built-in pdf_codec), the
-        # fixture convention carries raw text bytes for .pdf urls
-        try:
-            if html is not None and bytes(html[:5]) == b"%PDF-":
-                chars = pdf_layout.decode_pdf_chars(bytes(html))
-            else:
-                chars = pdf_layout.synthesize_char_boxes(
-                    (html or b"").decode("utf-8", errors="replace")
-                )
-            text, layout_spans, page_texts = pdf_layout.extract_layout_text(
-                chars, return_pages=True
+        # the builtin pdf_codec (a decode error becomes the _FAIL_KEYS row
+        # in _extract_one), the fixture convention carries raw text bytes
+        # for .pdf urls
+        if html is not None and bytes(html[:5]) == b"%PDF-":
+            chars = pdf_layout.decode_pdf_chars(bytes(html))
+        else:
+            chars = pdf_layout.synthesize_char_boxes(
+                (html or b"").decode("utf-8", errors="replace")
             )
-            spans = [
-                {
-                    "block": i,
-                    "start": 0,
-                    "end": 0,
-                    "tag": s["region"],
-                    "n_chars": s["n_lines"],
-                    "link_density": 0.0,
-                }
-                for i, s in enumerate(layout_spans)
-            ]
-        except NotImplementedError:
-            text, spans, parse_failed = "", [], True
+        text, layout_spans, page_texts = pdf_layout.extract_layout_text(
+            chars, return_pages=True
+        )
+        spans = [
+            {
+                "block": i,
+                "start": 0,
+                "end": 0,
+                "tag": s["region"],
+                "n_chars": s["n_lines"],
+                "link_density": 0.0,
+            }
+            for i, s in enumerate(layout_spans)
+        ]
     else:
         text, spans = html_extract.extract_main_text(bytes(html) if html is not None else b"")
 
@@ -141,7 +137,7 @@ def _extract_one_inner(url: str, html: bytes, keep_text: bool,
         "chars_out": len(text),
         "n_blocks": len(spans),
         "n_txns": len(txns),
-        "parse_failed": parse_failed,
+        "parse_failed": False,
         "txns": txns,
         "spans": spans,
     }

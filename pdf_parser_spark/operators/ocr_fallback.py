@@ -10,15 +10,15 @@ Spark shape:
     pass 1: extract_documents(pages)                — cheap, all docs
     pass 2: pages ⨝ (pass1 where n_txns=0, left_semi) → ocr_extract — rare
 
-Engine chain (per batch): Tesseract via pdf2image+pytesseract when those
-libraries are importable (the reference's exact stack, absent in this
-container) → the builtin raster OCR (pdf_parser_spark/raster.py: rasterize
-the PDF to page bitmaps, then template-match segmentation/classification
-over pixels, words ordered by 'top' exactly like the reference's
-image_to_data sort) for ``%PDF-`` payloads → failure marking. ``fake=True``
-keeps the deterministic pseudo-OCR read for NON-PDF payloads (drops the
-last line, re-joins with OCR-typical single newlines — a plausible lossy
-scan) so the two-pass plumbing is exercisable on text-byte fixtures too.
+One engine: ``%PDF-`` payloads go to the builtin raster OCR
+(pdf_parser_spark/raster.py: rasterize the PDF to page bitmaps, then
+template-match segmentation/classification over pixels, words ordered by
+'top' exactly like the reference's pdf2image+Tesseract image_to_data sort),
+so a document OCRs the same on every executor; a raster error marks the row
+failed. ``fake=True`` keeps the deterministic pseudo-OCR read for NON-PDF
+payloads (drops the last line, re-joins with OCR-typical single newlines —
+a plausible lossy scan) so the two-pass plumbing is exercisable on
+text-byte fixtures too.
 Word ordering by vertical position ((pyc) main.extract_text_lines_with_ocr
 sorts by 'top') is real in the raster engine and preserved in the fake via
 line order.
@@ -54,33 +54,6 @@ def _fake_ocr(payload: bytes) -> str:
     return "\n".join(lines[:-1]) if len(lines) > 1 else "\n".join(lines)
 
 
-def _tesseract_ocr(payload: bytes) -> str:  # pragma: no cover — libs absent
-    """The reference's exact stack: pdf2image raster + Tesseract word boxes
-    sorted by vertical position ((pyc) main.extract_text_lines_with_ocr)."""
-    import pytesseract
-    from pdf2image import convert_from_bytes
-    from pytesseract import Output
-
-    page_texts = []
-    for image in convert_from_bytes(payload, dpi=300):
-        data = pytesseract.image_to_data(image, output_type=Output.DICT)
-        words = [
-            (top, left, w)
-            for w, top, left in zip(data["text"], data["top"], data["left"])
-            if w.strip()
-        ]
-        words.sort()
-        lines: dict[int, list[tuple[int, str]]] = {}
-        for top, left, w in words:
-            lines.setdefault(top // 12, []).append((left, w))
-        page_texts.append(
-            "\n".join(
-                " ".join(w for _l, w in sorted(ws)) for _b, ws in sorted(lines.items())
-            )
-        )
-    return "\n".join(page_texts)
-
-
 def _builtin_raster_ocr(payload: bytes) -> str:
     """In-container engine: raster the PDF, then recognize from pixels only."""
     from pdf_parser_spark import raster
@@ -91,31 +64,22 @@ def _builtin_raster_ocr(payload: bytes) -> str:
 def ocr_extract(pages: DataFrame, fake: bool = False) -> DataFrame:
     """Rasterize+OCR the given pages and re-run the transaction parser.
 
-    Engine per document: Tesseract when importable, else the builtin raster
-    engine for ``%PDF-`` payloads; non-PDF payloads use the deterministic
-    pseudo-OCR only under ``fake=True`` and are marked failed otherwise.
+    ``%PDF-`` payloads go to the builtin raster engine; non-PDF payloads
+    use the deterministic pseudo-OCR only under ``fake=True`` and are
+    marked failed otherwise.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tesseract_available = True
         for pdf in batches:
             rows = []
             for url, payload in zip(pdf["url"], pdf["html"]):
                 raw = bytes(payload) if payload is not None else b""
                 text = None
                 if raw.startswith(b"%PDF-"):
-                    if tesseract_available:
-                        try:
-                            text = _tesseract_ocr(raw)
-                        except ImportError:
-                            tesseract_available = False
-                        except Exception:
-                            text = None
-                    if text is None:
-                        try:
-                            text = _builtin_raster_ocr(raw)
-                        except Exception:
-                            text = None
+                    try:
+                        text = _builtin_raster_ocr(raw)
+                    except Exception:
+                        text = None
                 elif fake:
                     text = _fake_ocr(raw)
                 if text is None:

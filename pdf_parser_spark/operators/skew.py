@@ -3,7 +3,7 @@
 North rule (BASELINE.json): "salting for skewed hosts". Common-Crawl host
 distribution is Zipfian — a single host can own a double-digit share of a
 crawl (the synthetic corpus reproduces this: host0 ≈ 30% of urls). Extraction
-itself is immune (keyed by xxhash64(url), plans/pipeline.distribute_pages),
+itself is immune (a per-document map over input splits, keyed by nothing),
 and AQE splits skewed JOIN partitions, but a host-keyed groupBy still sends
 every host0 row to one reducer. This module is the standard fix:
 

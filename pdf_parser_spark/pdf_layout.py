@@ -7,15 +7,15 @@ from scratch against the public pdfminer.six layout algorithm description
 (LAParams-style grouping: chars cluster into lines by baseline proximity,
 lines into text boxes by vertical adjacency, boxes sorted into reading order).
 
-The container ships no PDF rasterizer/parser (pdfplumber, PyMuPDF and
-pdf2image are absent — mirroring the reference's engines at
-/root/reference/universal_parser.py:19-23 and strategies/base_parser.py:7-12),
-so the *byte→char-box decode step is gated*: `decode_pdf_chars` raises
-NotImplementedError unless a PDF library is importable. Everything after the
-char boxes — the actual layout analysis — is real, tested, and what the Spark
-UDFs run. Fixtures synthesize deterministic char boxes via
-`synthesize_char_boxes`, and `extract_layout_text(synthesize_char_boxes(t))`
-round-trips t byte-identically (asserted in tests/test_pdf_layout.py).
+Real ``%PDF-`` bytes become char boxes through ONE decoder,
+`decode_pdf_chars`, which is the from-scratch `pdf_codec.decode_pdf_chars`
+re-exported: no engine is picked by what an executor can import, so a url
+decodes to the same char boxes — and the same text — on every executor. An
+undecodable document raises (ValueError for an empty or out-of-scope file),
+and the extract stage turns the error into a parse_failed row. Fixtures
+synthesize deterministic char boxes via `synthesize_char_boxes`, and
+`extract_layout_text(synthesize_char_boxes(t))` round-trips t
+byte-identically (asserted in tests/test_pdf_layout.py).
 
 Geometry model: origin bottom-left (PDF convention), y grows upward.
 A char box is the tuple ``(page:int, ch:str, x0, y0, x1, y1)``.
@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import operator
 from dataclasses import dataclass
+
+from pdf_parser_spark.pdf_codec import decode_pdf_chars  # noqa: F401 — re-export
 
 # Synthesis constants (shared with fixtures; all integers → exact floats).
 CHAR_W = 6.0
@@ -385,87 +387,3 @@ def synthesize_char_boxes(
                     boxes.append((page_no, ch, x, y0, x + CHAR_W, y0 + LINE_H * 0.75))
                 x += CHAR_W
     return boxes
-
-
-def _decode_pdfplumber(pdf_bytes: bytes) -> list[tuple]:
-    import io
-
-    import pdfplumber
-
-    boxes: list[tuple] = []
-    with pdfplumber.open(io.BytesIO(pdf_bytes)) as pdf:
-        for pno, page in enumerate(pdf.pages):
-            for ch in page.chars:
-                boxes.append(
-                    (pno, ch["text"], ch["x0"], page.height - ch["bottom"],
-                     ch["x1"], page.height - ch["top"])
-                )
-    return boxes
-
-
-def _decode_pymupdf(pdf_bytes: bytes) -> list[tuple]:
-    import fitz
-
-    boxes: list[tuple] = []
-    with fitz.open(stream=pdf_bytes, filetype="pdf") as doc:
-        for pno, page in enumerate(doc):
-            h = page.rect.height
-            raw = page.get_text("rawdict")
-            for block in raw.get("blocks", []):
-                for line in block.get("lines", []):
-                    for span in line.get("spans", []):
-                        for ch in span.get("chars", []):
-                            x0, y0, x1, y1 = ch["bbox"]
-                            boxes.append(
-                                (pno, ch["c"], x0, h - y1, x1, h - y0)
-                            )
-    return boxes
-
-
-def _decode_builtin(pdf_bytes: bytes) -> list[tuple]:
-    from pdf_parser_spark import pdf_codec
-
-    return pdf_codec.decode_pdf_chars(pdf_bytes)
-
-
-# Engine chain, per document (A3 alt-engine dispatch): pdfplumber first and
-# PyMuPDF as the alternate — the reference's exact preference order
-# (/root/reference/universal_parser.py:19-23, strategies/base_parser.py:7-12)
-# — then the from-scratch stdlib codec (pdf_codec.py), which always exists,
-# so the `%PDF-` path is REAL in this container, not environment-gated.
-_ENGINES = [
-    ("pdfplumber", _decode_pdfplumber),
-    ("pymupdf", _decode_pymupdf),
-    ("builtin", _decode_builtin),
-]
-
-# Python caches successful imports but re-walks sys.path on every FAILED
-# import — in a container without pdfplumber/PyMuPDF each document in the
-# extraction UDF hot loop would pay two full path searches before reaching
-# the builtin codec. The first ImportError per engine is cached here
-# (per-process, i.e. per Python worker), so only document-level decode
-# errors are retried per document.
-_ENGINE_UNAVAILABLE: set[str] = set()
-
-
-def decode_pdf_chars(pdf_bytes: bytes) -> list[tuple]:
-    """Real PDF bytes → char boxes via the first engine that succeeds.
-
-    A per-document try-chain, like the reference's per-document engine
-    choice: an ImportError (library absent in this container) or a decode
-    error falls through to the next engine; only if every engine fails does
-    the document surface as a parse failure upstream (operators/extract.py
-    records parse_failed=True).
-    """
-    last_err: Exception | None = None
-    for name, engine in _ENGINES:
-        if name in _ENGINE_UNAVAILABLE:
-            continue
-        try:
-            return engine(pdf_bytes)
-        except ImportError as e:    # library absent: never retry the import
-            _ENGINE_UNAVAILABLE.add(name)
-            last_err = e
-        except Exception as e:  # noqa: BLE001 — per-document decode error:
-            last_err = e        # fall through to the next engine
-    raise NotImplementedError(f"all PDF engines failed: {last_err}")

@@ -9,9 +9,8 @@ pages → extract (mapInPandas, no shuffle)
       → journal (H1 explode)
 
 Scale notes baked in:
-- Input is repartitioned by xxhash64(url) when requested — extraction cost is
-  per-document, and Common-Crawl hosts are Zipfian; hashing by url (NOT host)
-  spreads hot hosts across all partitions (north rule skew handling).
+- Extraction is a per-document map over the input splits, keyed by nothing,
+  so Zipfian Common-Crawl hosts cannot skew it (north rule skew handling).
 - Every stage after extraction is relational; shuffles happen only at the
   C2/C1 banded joins and the final aggregate, all on bounded-fanout keys.
 """
@@ -26,17 +25,6 @@ from pdf_parser_spark.operators import extract as extract_op
 from pdf_parser_spark.operators import journal as journal_op
 from pdf_parser_spark.operators import normalize as normalize_op
 from pdf_parser_spark.operators import pairing as pairing_op
-
-
-def distribute_pages(pages: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Skew-proof distribution: repartition by xxhash64(url).
-
-    Extraction work is keyed by url hash, never by host (BASELINE.json north
-    rule) — host0 owning 30% of the corpus still spreads uniformly.
-    """
-    if partitions:
-        return pages.repartition(partitions, F.xxhash64("url"))
-    return pages.repartition(F.xxhash64("url"))
 
 
 def release_pipeline_caches() -> None:
@@ -60,15 +48,12 @@ def transactions_pipeline(
     pages: DataFrame,
     user_memory: DataFrame | None = None,
     global_memory: DataFrame | None = None,
-    repartition: int | None = None,
-    cache: bool = True,
-    sparse_decorations: bool = False,
 ) -> DataFrame:
     """pages → fully-decorated transactions table (FIXTURES.md F3 shape).
 
-    ONE materialization barrier (cache=True), after the explode +
-    sourceType assignment: the C2 probe and the C1 pairing self-join each
-    reference the transactions table on both sides — without a barrier
+    ONE materialization barrier, always persisted and counted, after the
+    explode + sourceType assignment: the C2 probe and the C1 pairing
+    self-join each reference the transactions table on both sides — without a barrier
     Catalyst re-executes the pandas-UDF extraction once per DAG branch,
     ~6× the Python cost. In the resumable production job the same barrier
     is a per-bucket table commit (plans/checkpoint.py); persist is its
@@ -102,8 +87,6 @@ def transactions_pipeline(
     """
     from pyspark import StorageLevel
 
-    if repartition:
-        pages = distribute_pages(pages, repartition)
     # keep_text stays False unconditionally: extracted_transactions never
     # reads extracted_text, so carrying it would only inflate the Arrow
     # transfer out of the extraction UDF (callers who want the text use
@@ -111,24 +94,23 @@ def transactions_pipeline(
     extracted = extract_op.extract_documents(pages, keep_text=False)
     txns = extract_op.extracted_transactions(extracted)
     base = normalize_op.assign_source_type(txns)
-    if cache:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(base)
-        # Materialize the barrier NOW, not lazily under the final action:
-        # AQE submits the downstream branches (the C2 flags subtree, the C1
-        # banded self-join, and the base side of the wide join) as
-        # CONCURRENT stage jobs, and concurrent scans of a still-cold cache
-        # do not wait for each other — Spark's block manager lets late
-        # readers of an in-flight partition recompute it uncached, so the
-        # pandas-UDF extraction ran up to once PER BRANCH. Measured at 600k
-        # docs: executor CPU 712s lazy vs ~300s of actual work, wall
-        # 116→88s at local[16]; the duplication grows with parallelism, so
-        # it taxed exactly the high side of the N→4N scaling ratio. One
-        # count() serializes the fill (extraction runs once, into cache)
-        # and every branch reads hits. count(), not localCheckpoint: the
-        # logical plan must stay intact for plan audits and for callers
-        # that re-optimize over the full lineage.
-        base.count()
+    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED.append(base)
+    # Materialize the barrier NOW, not lazily under the final action:
+    # AQE submits the downstream branches (the C2 flags subtree, the C1
+    # banded self-join, and the base side of the wide join) as
+    # CONCURRENT stage jobs, and concurrent scans of a still-cold cache
+    # do not wait for each other — Spark's block manager lets late
+    # readers of an in-flight partition recompute it uncached, so the
+    # pandas-UDF extraction ran up to once PER BRANCH. Measured at 600k
+    # docs: executor CPU 712s lazy vs ~300s of actual work, wall
+    # 116→88s at local[16]; the duplication grows with parallelism, so
+    # it taxed exactly the high side of the N→4N scaling ratio. One
+    # count() serializes the fill (extraction runs once, into cache)
+    # and every branch reads hits. count(), not localCheckpoint: the
+    # logical plan must stay intact for plan audits and for callers
+    # that re-optimize over the full lineage.
+    base.count()
     flags = normalize_op.bank_match_flags(base)
     decorations = pairing_op.pair_decorations(base)
     # Joins back-to-back, scalar decorations after: the vendor-key pandas
@@ -137,31 +119,11 @@ def transactions_pipeline(
     # table; after both joins it is a plain per-row projection. It also
     # keeps the wide exchange narrower — account/vendor columns are
     # computed post-shuffle.
-    if sparse_decorations:
-        # Low-match-density corpora: Bloom-prune both decoration joins so
-        # rows matching NEITHER side-table never cross an exchange at all
-        # (operators/bloom.bloom_pruned_left_join — byte-identical output,
-        # shuffle carries |matches| + FPR·n wide rows instead of n). The
-        # bloom builds are driver actions, so this path is EAGER: it
-        # materializes the cached base when called. Worth it when pairing /
-        # bank-match density is a few percent or less; at high density the
-        # hot branch approaches the full table and the plain single-
-        # exchange pass below is better.
-        from pdf_parser_spark.operators import bloom as bloom_op
-
-        out = bloom_op.bloom_pruned_left_join(base, flags, "txn_id")
-        out = bloom_op.bloom_pruned_left_join(out, decorations, "txn_id")
-        out = out.withColumn(
-            "has_bank_match", F.coalesce(F.col("has_bank_match"), F.lit(False))
-        )
-    else:
-        out = (
-            base.join(flags, "txn_id", "left")
-            .join(decorations, "txn_id", "left")
-            .withColumn(
-                "has_bank_match", F.coalesce(F.col("has_bank_match"), F.lit(False))
-            )
-        )
+    out = (
+        base.join(flags, "txn_id", "left")
+        .join(decorations, "txn_id", "left")
+        .withColumn("has_bank_match", F.coalesce(F.col("has_bank_match"), F.lit(False)))
+    )
     out = normalize_op.with_display_amount(out)
     out = classify_op.classify(out, user_memory, global_memory)
     # restore the FIXTURES.md F3 column order (pair legs last)

@@ -21,8 +21,7 @@ rasterizer and the recognizer. This is therefore template-match OCR against
 a KNOWN font: the segmentation/classification/ordering machinery is real
 (and provably noise-tolerant up to (MIN_GLYPH_DISTANCE-1)//2 flipped pixels
 per glyph), but recognizing arbitrary scanned fonts still requires a real
-engine — operators/ocr_fallback.py prefers Tesseract when importable and
-falls back to this.
+engine; operators/ocr_fallback.py runs this one for every ``%PDF-`` payload.
 
 Geometry matches the writer grid (pdf_codec: 6pt advance, 12pt leading), at
 1 px/pt: a 5x7 glyph in a 6x12 cell, so inter-word gaps are exact multiples

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from pdf_parser_spark.plans.incremental_dedup import IncrementalNearDup
 from pdf_parser_spark.plans.snapshots import SnapshotTable
+from pdf_parser_spark.streaming import drain_available_now, read_parquet_drops
 
 
 class StreamingDedupIngest:
@@ -93,23 +94,9 @@ class StreamingDedupIngest:
 
     def run_available_now(self, timeout_s: float = 180.0) -> dict:
         """Drain all currently-delivered drops, then stop."""
-        docs = (
-            self.spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(self.src_path)
-        )
-        q = (
-            docs.writeStream.foreachBatch(self._commit_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"dedup drain still running after {timeout_s}s; corpus "
-                f"batches so far: {sorted(self._corpus_batches())}"
-            )
+        docs = read_parquet_drops(self.spark, self.src_path, self.schema)
+        drain_available_now(docs, self._commit_batch, self.checkpoint_dir,
+                            timeout_s, "dedup", self._corpus_batches)
         return {
             "corpus_version": self.corpus.current_version(),
             "batches_committed": len(self._corpus_batches()),

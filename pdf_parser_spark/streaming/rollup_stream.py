@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from pdf_parser_spark.plans.corpus_report import CorpusRollup
+from pdf_parser_spark.streaming import drain_available_now, read_parquet_drops
 
 
 class StreamingCorpusRollup:
@@ -59,23 +60,9 @@ class StreamingCorpusRollup:
         ``batches_committed`` counts THIS drain's commits;
         ``total_batches`` the table's lifetime total."""
         before = set(self.rollup.ingested_batches())
-        docs = (
-            self.spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(self.src_path)
-        )
-        q = (
-            docs.writeStream.foreachBatch(self._commit_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"rollup drain still running after {timeout_s}s; batches "
-                f"so far: {sorted(self.rollup.ingested_batches())}"
-            )
+        docs = read_parquet_drops(self.spark, self.src_path, self.schema)
+        drain_available_now(docs, self._commit_batch, self.checkpoint_dir,
+                            timeout_s, "rollup", self.rollup.ingested_batches)
         after = self.rollup.ingested_batches()
         return {
             "rollup_version": self.rollup.table.current_version(),

@@ -358,29 +358,6 @@ def main() -> None:
     head = "\n".join(plan.splitlines()[:40])
     sections.append(f"## r24_sequence_packing — {status}\n\n```\n{head}\n```\n")
 
-    # ad-hoc: the sparse-decorations pipeline path — Bloom probes
-    # (MapInPandas) split the base into a joined hot branch and a
-    # NULL-projected cold branch re-united at the top; no cartesian, no
-    # broadcast-nested-loop. The byte-identity with the dense path is
-    # asserted functionally in tests/test_pipeline_spark.py; this records
-    # the plan shape (Union over the pruned branches).
-    from pdf_parser_spark.fixtures import pages_spark
-    from pdf_parser_spark.plans import pipeline as pipeline_plan
-
-    sparse_df = pipeline_plan.transactions_pipeline(
-        pages_spark(spark, n_docs=2000, partitions=8), sparse_decorations=True
-    )
-    plan, problems = audit(
-        "pipeline_sparse_decorations", sparse_df,
-        require=[r"Union", r"MapInPandas"],
-    )
-    status = "OK" if not problems else "FAIL " + "; ".join(problems)
-    print(f"{status:60s} pipeline_sparse_decorations")
-    if problems:
-        failures += 1
-    head = "\n".join(plan.splitlines()[:40])
-    sections.append(f"## pipeline_sparse_decorations — {status}\n\n```\n{head}\n```\n")
-
     # ad-hoc: mergeable sketches (r33) — the HLL build must partial-max
     # map-side before its (group, register) exchange; the KMV build must
     # prune each mapper to its local bottom-k (WindowGroupLimit) before

@@ -1,20 +1,20 @@
-"""One-off full-chain profiler: event-log stage/job timeline decomposition.
+"""Full-chain profiler: per-window and per-stage breakdown from the event log.
 
-Runs the transactions pipeline once (protocol-identical: cold caches, eager
-barrier) at a given parallelism and corpus size with Spark event logging on,
-then parses the event log into:
-  - per-job wall intervals and the gaps between them (driver-serial time),
-  - per-stage wall, task-time sum, and effective parallelism
-    (task_time / stage_wall),
-  - a busy-timeline union: fraction of the timed window covered by at least
-    one running stage.
+Runs the transactions pipeline `repeats` times (protocol-identical: cold
+caches, eager barrier) at a given parallelism and corpus size with Spark
+event logging on, stops the session, then reads the finalized log with
+perfbench/eventlog.py — the reader the benchmark itself uses — and prints,
+per timed window:
+  - wall, driver-serial gap (wall not covered by any running stage), task
+    time, CPU, GC, parallelism (task time / stage wall), shuffle and spill;
+  - one line per stage with the same figures.
 
-Usage: python scripts/profile_chain.py <cpus> <n_docs> [repeats]
+Usage: python scripts/profile_chain.py [cpus] [n_docs] [repeats]
+                                       [shuffle_partitions] [driver_mem]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import tempfile
@@ -22,6 +22,41 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.append(os.path.join(REPO, "perfbench"))
+
+import eventlog  # noqa: E402
+
+
+def report(event_dir: str, windows: list[tuple[float, float]], cpus: int) -> list[str]:
+    """The printed profile of each (t0, t1) window, read from the one
+    finalized event log under `event_dir`."""
+    log = eventlog.find_log(event_dir)
+    stages = eventlog.read_stages(log)
+    out = []
+    for w0, w1 in windows:
+        win = eventlog.in_window(stages, w0, w1)
+        s = eventlog.summarize(win, w0, w1)
+        out.append(
+            f"\n=== window wall={s['wall_s']:.1f}s  driver-gap={s['driver_gap_s']:.1f}s  "
+            f"stages={s['stages']}  tasks={s['tasks']}  cpus={cpus} ==="
+        )
+        out.append(
+            f"task-time={s['task_s']:.1f}s  task-cpu={s['cpu_s']:.1f}s  gc={s['gc_s']:.1f}s  "
+            f"parallelism={s['parallelism']:.1f}/{cpus}  "
+            f"shuffle r/w={s['shuffle_read_mb']:.1f}/{s['shuffle_write_mb']:.1f}MB  "
+            f"spill={s['spill_mb']:.1f}MB"
+        )
+        for st in win:
+            task_s = st.task_ms / 1000.0
+            out.append(
+                f"  stage {st.stage_id:>4} {st.wall_s:7.2f}s wall {task_s:8.1f}s tasks "
+                f"({st.n_tasks:>4}t, par={task_s / max(st.wall_s, 1e-9):5.1f}) "
+                f"gc={st.gc_ms / 1000.0:5.1f}s  "
+                f"shuffle w={st.shuffle_write_bytes / eventlog.MB:7.1f}MB  "
+                f"spill={st.spill_bytes / eventlog.MB:6.1f}MB  {st.name[:70]}"
+            )
+    out.append(f"\nevent log: {log}")
+    return out
 
 
 def main() -> None:
@@ -65,94 +100,12 @@ def main() -> None:
         pages.count()
         time.sleep(1.0)  # separate the timed window in the event log
         t0 = time.time()
-        n = pipeline.transactions_pipeline(pages).count()
-        t1 = time.time()
-        windows.append((t0, t1))
+        pipeline.transactions_pipeline(pages).count()
+        windows.append((t0, time.time()))
         pipeline.release_pipeline_caches()
-    spark.stop()
+    spark.stop()  # finalizes the event log
 
-    # parse the event log (v1: single file; v2: rolling dir of events_* files)
-    entry = [os.path.join(evdir, f) for f in os.listdir(evdir)][0]
-    if os.path.isdir(entry):
-        logfs = sorted(
-            os.path.join(entry, f)
-            for f in os.listdir(entry)
-            if f.startswith("events_")
-        )
-    else:
-        logfs = [entry]
-
-    def _lines():
-        for lf in logfs:
-            with open(lf) as fh:
-                yield from fh
-
-    jobs, stages = {}, {}
-    if True:
-        for line in _lines():
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jobs[ev["Job ID"]] = {"t0": ev["Submission Time"] / 1000.0}
-            elif e == "SparkListenerJobEnd":
-                j = jobs.get(ev["Job ID"])
-                if j is not None:
-                    j["t1"] = ev["Completion Time"] / 1000.0
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                if "Submission Time" not in si:
-                    continue
-                stages[(si["Stage ID"], si.get("Stage Attempt ID", si.get("Attempt ID", 0)))] = {
-                    "name": si["Stage Name"].split("\n")[0][:70],
-                    "t0": si["Submission Time"] / 1000.0,
-                    "t1": si["Completion Time"] / 1000.0,
-                    "n_tasks": si["Number of Tasks"],
-                }
-            elif e == "SparkListenerTaskEnd":
-                key = (ev["Stage ID"], ev["Stage Attempt ID"])
-                m = ev.get("Task Metrics") or {}
-                st = stages.setdefault(key, {})
-                st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
-                st["cpu_ns"] = st.get("cpu_ns", 0) + m.get("Executor CPU Time", 0)
-                st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
-
-    for w0, w1 in windows:
-        wall = w1 - w0
-        in_win = {
-            k: s
-            for k, s in stages.items()
-            if "t0" in s and s["t0"] >= w0 - 0.5 and s["t1"] <= w1 + 2.0
-        }
-        # busy timeline union
-        ivs = sorted((s["t0"], s["t1"]) for s in in_win.values())
-        busy, cur = 0.0, None
-        for a, b in ivs:
-            if cur is None or a > cur[1]:
-                if cur:
-                    busy += cur[1] - cur[0]
-                cur = [a, b]
-            else:
-                cur[1] = max(cur[1], b)
-        if cur:
-            busy += cur[1] - cur[0]
-        print(f"\n=== window wall={wall:.1f}s  stage-covered={busy:.1f}s "
-              f"uncovered(driver-serial)={wall - busy:.1f}s  cpus={cpus} ===")
-        total_task = sum(s.get("task_ms", 0) for s in in_win.values()) / 1000.0
-        total_cpu = sum(s.get("cpu_ns", 0) for s in in_win.values()) / 1e9
-        total_gc = sum(s.get("gc_ms", 0) for s in in_win.values()) / 1000.0
-        print(f"sum task-time={total_task:.1f}s  task-cpu={total_cpu:.1f}s  "
-              f"gc={total_gc:.1f}s  avg-parallelism={total_task / wall:.1f}/{cpus}")
-        for k in sorted(in_win, key=lambda k: in_win[k]["t0"]):
-            s = in_win[k]
-            sw = s["t1"] - s["t0"]
-            tt = s.get("task_ms", 0) / 1000.0
-            print(
-                f"  stage {k[0]:>4} {sw:7.2f}s wall {tt:8.1f}s tasks "
-                f"({s.get('n_tasks', 0):>4}t, par={tt / max(sw, 1e-9):5.1f}) "
-                f"gc={s.get('gc_ms', 0) / 1000.0:5.1f}s  {s.get('name', '')}"
-            )
-
-    print("\nevent log:", logfs)
+    print("\n".join(report(evdir, windows, cpus)))
 
 
 if __name__ == "__main__":

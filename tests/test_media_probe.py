@@ -202,6 +202,18 @@ def test_probe_mp3_truncation_and_garbage():
         media_probe.probe_bytes(h.to_bytes(4, "big") + b"\x00" * 400)
 
 
+def test_unconfirmed_free_format_sync_is_unrecognized():
+    """A non-mp3 payload that opens 0xFF 0xE0-0xFF with bitrate_index 0
+    reads as unrecognized media, not as a "free-format mp3": the sniff's
+    two-header confirmation decides, not the first header alone."""
+    with pytest.raises(ValueError, match="unrecognized media magic"):
+        media_probe.probe_bytes(b"\xff\xfb\x00\x00" + b"JUNK" * 100)
+    # behind an ID3 tag the payload IS declared mp3: free-format stays loud
+    id3v2 = b"ID3\x03\x00\x00" + bytes([0, 0, 0, 100]) + b"\x00" * 100
+    with pytest.raises(ValueError, match="free-format"):
+        media_probe.probe_bytes(id3v2 + b"\xff\xfb\x00\x00" + b"\x00" * 400)
+
+
 class _BitWriter:
     def __init__(self):
         self.bits = []

@@ -38,8 +38,8 @@ def test_ocr_runs_only_on_empty_docs(spark, pages):
 
 def test_production_engine_chain(spark, pages):
     """fake=False: %PDF- payloads go through the REAL builtin raster engine
-    (Tesseract being absent here) and succeed; non-PDF payloads are marked
-    failed — the honest production gate."""
+    and succeed; non-PDF payloads are marked failed — the honest
+    production gate."""
     sub = pages.limit(10)
     rows = {r["url"]: r for r in ocr_fallback.ocr_extract(sub, fake=False).collect()}
     assert len(rows) == 10

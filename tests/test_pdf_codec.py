@@ -203,13 +203,13 @@ def test_obj_pattern_inside_stream_body_is_ignored():
 
 
 # ---------------------------------------------------------------------------
-# engine chain + fixture integration
+# decode entry point + fixture integration
 # ---------------------------------------------------------------------------
 
 
 def test_engine_chain_reaches_builtin():
-    """pdfplumber/PyMuPDF are absent here: the chain must land on the
-    builtin codec and still decode real %PDF- bytes."""
+    """pdf_layout.decode_pdf_chars is the builtin codec — no import-gated
+    engine in front of it — and decodes real %PDF- bytes."""
     text = statement_text(6)
     chars = pdf_layout.decode_pdf_chars(pdf_codec.write_pdf(text))
     assert pdf_layout.extract_layout_text(chars)[0] == text

@@ -90,12 +90,11 @@ def test_block_spans_metadata():
 
 
 def test_decode_pdf_chars_engine_chain():
-    # undecodable input exhausts the engine chain (pdfplumber → PyMuPDF →
-    # builtin codec) and surfaces as NotImplementedError for the extract
-    # stage's parse_failed accounting
-    with pytest.raises(NotImplementedError):
+    # decode_pdf_chars IS the builtin codec: undecodable input raises its
+    # ValueError, which the extract stage turns into a parse_failed row
+    with pytest.raises(ValueError, match="no page objects"):
         decode_pdf_chars(b"%PDF-1.4 no objects at all")
-    # real bytes decode through the builtin engine
+    # real bytes decode through the same codec
     from pdf_parser_spark.pdf_codec import write_pdf
 
     boxes = decode_pdf_chars(write_pdf("hello real pdf"))
@@ -104,47 +103,3 @@ def test_decode_pdf_chars_engine_chain():
 
 def test_empty_chars():
     assert extract_layout_text([]) == ("", [])
-
-
-def _importable(mod: str) -> bool:
-    import importlib.util
-
-    return importlib.util.find_spec(mod) is not None
-
-
-@pytest.mark.skipif(not _importable("pdfplumber"), reason="pdfplumber not installed")
-def test_pdfplumber_engine_branch():
-    """Exercise the PREFERRED engine when present (absent in this container,
-    so this is a marker against branch rot in richer environments): the
-    pdfplumber decode of a builtin-written PDF must layout to the same text
-    as the builtin codec's decode."""
-    from pdf_parser_spark.pdf_codec import write_pdf
-    from pdf_parser_spark.pdf_layout import _decode_pdfplumber
-
-    pdf = write_pdf("engine parity line")
-    boxes = _decode_pdfplumber(pdf)
-    assert extract_layout_text(boxes)[0] == "engine parity line"
-
-
-@pytest.mark.skipif(not _importable("fitz"), reason="PyMuPDF not installed")
-def test_pymupdf_engine_branch():
-    from pdf_parser_spark.pdf_codec import write_pdf
-    from pdf_parser_spark.pdf_layout import _decode_pymupdf
-
-    pdf = write_pdf("engine parity line")
-    boxes = _decode_pymupdf(pdf)
-    assert extract_layout_text(boxes)[0] == "engine parity line"
-
-
-@pytest.mark.skipif(
-    not (_importable("pytesseract") and _importable("pdf2image")),
-    reason="pytesseract/pdf2image not installed",
-)
-def test_tesseract_ocr_branch():
-    """The reference's exact OCR stack, when importable: raster a
-    builtin-written PDF and assert the recognized words come back."""
-    from pdf_parser_spark.operators.ocr_fallback import _tesseract_ocr
-    from pdf_parser_spark.pdf_codec import write_pdf
-
-    text = _tesseract_ocr(write_pdf("HELLO OCR"))
-    assert "HELLO" in text.upper()
