@@ -36,26 +36,17 @@ def _ship_package(spark: SparkSession) -> None:
     if getattr(sc, "_pdf_parser_spark_shipped", False):
         return
     import os
-    import zipfile
+
+    from pdf_parser_spark.session import build_pyfiles_zip, package_files
 
     zip_path = os.path.join(_REPO, "dist", "pdf_parser_spark.zip")
-    pkg = os.path.join(_REPO, "pdf_parser_spark")
-    sources = [
-        os.path.join(root, f)
-        for root, _dirs, files in os.walk(pkg)
-        for f in files
-        if f.endswith(".py")
-    ]
-    # rebuild whenever any source is newer than the zip (stale workers
-    # silently running old code would be far worse than a rebuild)
+    # rebuild whenever any module or data file is newer than the zip (stale
+    # workers silently running old code would be far worse than a rebuild)
     stale = not os.path.exists(zip_path) or any(
-        os.path.getmtime(p) > os.path.getmtime(zip_path) for p in sources
+        os.path.getmtime(p) > os.path.getmtime(zip_path) for p in package_files()
     )
     if stale:
-        os.makedirs(os.path.dirname(zip_path), exist_ok=True)
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-            for full in sources:
-                z.write(full, os.path.relpath(full, _REPO))
+        build_pyfiles_zip(zip_path)
     sc.addPyFile(zip_path)
     sc._pdf_parser_spark_shipped = True
 

@@ -35,9 +35,8 @@ from __future__ import annotations
 import ctypes
 import gzip
 import hashlib
-from pathlib import Path
+import pkgutil
 
-_DATA_FILE = Path(__file__).parent / "data" / "brotli_tables.bin.gz"
 # SHA-256 of the RFC 7932 static dictionary, as published in the RFC
 _DICT_SHA256 = "20e42eb1b511c21806d4d227d07e5dd06877d8ce7b3a817f378f313653f35c70"
 _DICT_SIZE = 122_784
@@ -225,7 +224,9 @@ def _load_tables() -> tuple[bytes, bytes, bytes, bytes, bytes]:
     """(dictionary, utf8_lut_p1, utf8_lut_p2, signed_lut_p1, signed_lut_p2)."""
     global _TABLES
     if _TABLES is None:
-        payload = gzip.decompress(_DATA_FILE.read_bytes())
+        # pkgutil, not a path: the package also runs from a --py-files zip
+        raw = pkgutil.get_data("pdf_parser_spark", "data/brotli_tables.bin.gz")
+        payload = gzip.decompress(raw)
         if len(payload) != _DICT_SIZE + 1024:
             raise BrotliError("brotli tables data file has wrong size")
         dictionary = payload[:_DICT_SIZE]

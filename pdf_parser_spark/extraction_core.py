@@ -181,18 +181,6 @@ _SOURCE_RE = re.compile(r"Account\s*Ending[-\s]*(?:\d-)?(\d{5})", re.IGNORECASE)
 _CLOSING_RE = re.compile(r"Closing Date (\d{1,2}/\d{1,2}/\d{2,4})")
 
 
-def extract_source(page_text: str) -> str | None:
-    """AMEX source id from 'Account Ending 1-23456' → 'AMEX 23456'.
-
-    Ref: strategies/amex_multiline.py:36-38 (first match per page wins; last
-    page with a match wins overall, matching the reference's per-page loop).
-    """
-    m = _SOURCE_RE.search(page_text)
-    if m:
-        return f"AMEX {m.group(1)}"
-    return None
-
-
 def extract_closing_date(text: str) -> str | None:
     """'Closing Date MM/DD/YYYY' → the raw date string, else None.
 
@@ -493,23 +481,6 @@ def date_window_filter(
         if start <= d <= end:
             out.append(t)
     return out
-
-
-# ---------------------------------------------------------------------------
-# G7 — pyc memo normalization variant
-# ---------------------------------------------------------------------------
-
-_G7_KEEP_RE = re.compile(r"[^a-zA-Z0-9&,. -]")
-_G7_WS_RE = re.compile(r"\s+")
-
-
-def normalize_memo_pyc(memo: str | None) -> str:
-    """Drop chars outside [a-zA-Z0-9&,. -], collapse whitespace.
-
-    Ref: (pyc) parse.extract_transactions constant pool.
-    """
-    s = _G7_KEEP_RE.sub("", memo or "")
-    return _G7_WS_RE.sub(" ", s).strip()
 
 
 # ---------------------------------------------------------------------------

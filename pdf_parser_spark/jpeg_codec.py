@@ -433,30 +433,6 @@ def _extend(v: int, cat: int) -> int:
     return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
 
 
-def _decode_block(reader: _BitReader, dc_tbl, ac_tbl, pred: int
-                  ) -> tuple[np.ndarray, int]:
-    zz = np.zeros(64, dtype=np.int64)
-    cat = _read_symbol(reader, dc_tbl)
-    diff = _extend(reader.bits(cat), cat) if cat else 0
-    pred += diff
-    zz[0] = pred
-    k = 1
-    while k < 64:
-        rs = _read_symbol(reader, ac_tbl)
-        run, cat = rs >> 4, rs & 0xF
-        if cat == 0:
-            if run == 15:  # ZRL
-                k += 16
-                continue
-            break  # EOB
-        k += run
-        if k > 63:
-            raise ValueError("JPEG AC run past end of block")
-        zz[k] = _extend(reader.bits(cat), cat)
-        k += 1
-    return zz, pred
-
-
 def _decode_dc(reader: _BitReader, dc_tbl, preds: dict, cid: int,
                block: np.ndarray, ah: int, al: int) -> None:
     """DC coefficient for one block: full/first scan (ah=0, value shifted

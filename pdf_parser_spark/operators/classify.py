@@ -6,16 +6,14 @@ reads and an OpenAI call per miss. Rebuild: two broadcast left joins + a
 native `when` chain; the LLM stage is replaced by the deterministic keyword
 ruleset (G15) pre-mapped onto the allowed chart via the reference's own
 _force_map_to_allowed (D4) at plan-build time — so the hot path has ZERO
-Python, and the only UDF in the stage is the vendor-key derivation (G1 must
-run Python `re` for byte identity with the reference).
+Python; even the vendor key (G1) is a native expression, parity-tested
+against the reference's Python `re` chain (core.vendor_key).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from pdf_parser_spark import extraction_core as core
 
@@ -34,21 +32,6 @@ _KEYWORD_ACCOUNTS = {
     for kw, acct in _KEYWORD_TARGETS.items()
 }
 FALLBACK_ACCOUNT = core.fallback_account(core.ALLOWED_ACCOUNTS)
-
-
-@F.pandas_udf(StringType())
-def vendor_key_udf(memo: pd.Series) -> pd.Series:
-    """G1 vendor key, vectorized (Python re; ref main.py:281).
-
-    Memos repeat heavily (merchant names), so the regex chain runs once per
-    DISTINCT memo in the batch and fans out via a dict map — typically a
-    5-20x cut in Python-regex CPU on statement-shaped data.
-
-    Kept as the reference-twin fallback; the hot path uses the native
-    vendor_key_col below (parity pytest-asserted against this one).
-    """
-    uniq = {m: core.vendor_key(m) for m in memo.unique()}
-    return memo.map(uniq)
 
 
 def vendor_key_col(memo_col):

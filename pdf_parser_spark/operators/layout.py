@@ -98,26 +98,3 @@ def zorder_bucket_col(df: DataFrame, cols: list[str], num_buckets: int,
         raise ValueError("num_buckets exceeds the curve's resolution")
     z = zorder_key_col(df, cols, bits)
     return F.shiftright(z, total_bits - k).cast("int")
-
-
-def cluster_by_zorder(df: DataFrame, cols: list[str], num_files: int,
-                      bits: int = 8, key_col: str = "_zorder") -> DataFrame:
-    """Range-partition and sort ``df`` by its Z-order key.
-
-    The returned frame, written as-is (one file per partition), yields
-    files whose footer min/max are tight on EVERY column in ``cols`` —
-    feed it to SnapshotTable.append with those columns in stats_cols and
-    plan_entries prunes on any of them. One range exchange (sampled
-    boundaries), sort within partitions only. Note AQE may coalesce the
-    range exchange when partitions are small, merging files — at real
-    scale that is the right call (it only merges files below the shuffle
-    target size); for guaranteed file boundaries use
-    :func:`zorder_bucket_col` and a partitioned write instead.
-    """
-    z = zorder_key_col(df, cols, bits)
-    return (
-        df.withColumn(key_col, z)
-        .repartitionByRange(num_files, key_col)
-        .sortWithinPartitions(key_col)
-        .drop(key_col)
-    )

@@ -83,7 +83,7 @@ def bank_match_flags(txns: DataFrame) -> DataFrame:
     )
 
 
-def with_bank_match(txns: DataFrame, broadcast_matches: bool | None = None) -> DataFrame:
+def with_bank_match(txns: DataFrame) -> DataFrame:
     """C2 — has_bank_match: a *bank* txn within ±5 days and ±$0.01 exists.
 
     `bank_match_flags` builds the keyed flag table; this decorates every
@@ -95,10 +95,6 @@ def with_bank_match(txns: DataFrame, broadcast_matches: bool | None = None) -> D
     # the set is genuinely small — a forced broadcast is a driver-serial
     # collect+rebroadcast that costs the same at every cluster size (pure
     # Amdahl fraction) and is unbounded on adversarial data at 100 TB.
-    # broadcast_matches=True forces the hint for callers that know their
-    # matched set is tiny; False documents the explicit shuffle choice.
-    if broadcast_matches:
-        matched = F.broadcast(matched)
     return txns.join(matched, "txn_id", "left").withColumn(
         "has_bank_match", F.coalesce(F.col("has_bank_match"), F.lit(False))
     )
@@ -120,8 +116,3 @@ def with_display_amount(txns: DataFrame) -> DataFrame:
         .otherwise(amt)
     )
     return txns.withColumn("displayAmount", disp)
-
-
-def normalize(txns: DataFrame) -> DataFrame:
-    """Full normalization: sourceType → bank-match probe → displayAmount."""
-    return with_display_amount(with_bank_match(assign_source_type(txns)))

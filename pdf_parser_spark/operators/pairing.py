@@ -231,9 +231,9 @@ def matched_pairs(txns: DataFrame) -> DataFrame:
 def pair_decorations(txns: DataFrame) -> DataFrame:
     """Pairing decorations as a standalone keyed table:
     (txn_id, pairId, eventLeader, pairedWith, pairReason) — one row per
-    paired LEG. Callers fusing several txn_id-keyed decorations into one
-    wide join (plans/pipeline.py single-barrier chain) consume this
-    directly; `pair_transfers` is the join-back convenience."""
+    paired LEG. Callers left-join it on txn_id, fused with the other
+    txn_id-keyed decorations into one wide join (plans/pipeline.py
+    single-barrier chain); unpaired rows keep NULLs (FIXTURES.md F3)."""
     pairs = matched_pairs(txns)
     # One generator pass instead of a 2-branch union: a union of two
     # projections of `pairs` makes Catalyst re-execute the whole pairing
@@ -260,21 +260,3 @@ def pair_decorations(txns: DataFrame) -> DataFrame:
             )
         ).alias("d")
     ).select("d.*")
-
-
-def pair_transfers(txns: DataFrame, broadcast_decorations: bool | None = None) -> DataFrame:
-    """Decorate transactions with pairId/eventLeader/pairedWith/pairReason.
-
-    Unpaired rows keep NULLs (nullable decoration, FIXTURES.md F3).
-    """
-    decorations = pair_decorations(txns)
-    # Default is NO hint: AQE broadcasts the decorations only when their
-    # runtime size is actually small. A forced broadcast is a driver-serial
-    # collect+rebroadcast (identical cost at N and 4N executors — an Amdahl
-    # fraction that caps scaling efficiency) and can exceed broadcast limits
-    # at 10^12 rows. broadcast_decorations=True forces the hint when the
-    # pair density is known-tiny; with no hint the join degrades gracefully
-    # to a shuffle on txn_id (the table's bucket key, so it co-locates).
-    if broadcast_decorations:
-        decorations = F.broadcast(decorations)
-    return txns.join(decorations, "txn_id", "left")

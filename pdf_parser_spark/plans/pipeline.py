@@ -6,7 +6,7 @@ pages → extract (mapInPandas, no shuffle)
            self-joins branching off the barrier, each a keyed side-table)
       → ONE wide join pass on txn_id attaching both side-tables
       → G10 display amount + classification cascade (narrow projections)
-      → journal (H1 explode)
+      → journal (H1 explode, operators/journal.journal_entries)
 
 Scale notes baked in:
 - Extraction is a per-document map over the input splits, keyed by nothing,
@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators import classify as classify_op
 from pdf_parser_spark.operators import extract as extract_op
-from pdf_parser_spark.operators import journal as journal_op
 from pdf_parser_spark.operators import normalize as normalize_op
 from pdf_parser_spark.operators import pairing as pairing_op
 
@@ -131,11 +130,6 @@ def transactions_pipeline(
     return out.select(
         *[c for c in out.columns if c not in pair_cols], *pair_cols
     )
-
-
-def journal_pipeline(txns: DataFrame) -> DataFrame:
-    """transactions → journal lines (H1)."""
-    return journal_op.journal_entries(txns)
 
 
 def flagship_summary(txns: DataFrame) -> DataFrame:

@@ -7,8 +7,35 @@ spark-submit would use; AQE on, Arrow on, shuffle partitions sized to cores.
 from __future__ import annotations
 
 import os
+import zipfile
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def package_files() -> list[str]:
+    """Every file the ``--py-files`` zip carries: the package's modules
+    plus its ``data/`` files (read through pkgutil, so they load from the
+    zip too)."""
+    data_dir = os.path.join(_PACKAGE_DIR, "data")
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(_PACKAGE_DIR)
+        for f in files
+        if f.endswith(".py") or root == data_dir
+    ]
+
+
+def build_pyfiles_zip(out: str) -> str:
+    """Write the importable package (``package_files()``) to the zip at
+    ``out`` — what ``spark-submit --py-files`` / ``addPyFile`` ship."""
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    repo = os.path.dirname(_PACKAGE_DIR)
+    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
+        for full in package_files():
+            z.write(full, os.path.relpath(full, repo))
+    return out
 
 
 def _export_package_path() -> None:
@@ -18,7 +45,7 @@ def _export_package_path() -> None:
     local-mode analog of `spark-submit --py-files pdf_parser_spark.zip`.
     Must run before the session (and its worker daemons) start.
     """
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = os.path.dirname(_PACKAGE_DIR)
     current = os.environ.get("PYTHONPATH", "")
     if root not in current.split(os.pathsep):
         os.environ["PYTHONPATH"] = root + (os.pathsep + current if current else "")

@@ -36,26 +36,6 @@ def read_pages_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_loose_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """A1 fallback — loose documents on disk via the binaryFile source.
-
-    Yields (path, modificationTime, length, content); map to the pages shape
-    with url=path, html=content. `pathGlobFilter` prunes at listing time.
-    """
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select(
-            F.col("path").alias("url"),
-            F.col("modificationTime").alias("warc_ts"),
-            F.col("content").alias("html"),
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
-
-
 def with_bucket(df: DataFrame, col: str = "url", n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
     """Iceberg bucket(N, url) transform: pmod(xxhash64(url), N).
 

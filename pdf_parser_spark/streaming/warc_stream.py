@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pdf_parser_spark.plans.snapshots import SnapshotTable
 from pdf_parser_spark.sources import pages as pages_src
 from pdf_parser_spark.sources import warc as warc_src
-from pdf_parser_spark.streaming import drain_available_now
 
 # binaryFile's fixed schema — streaming sources cannot infer it
 _BINARY_FILE_SCHEMA = (
@@ -100,14 +99,28 @@ class WarcIngest:
             out.unpersist()
 
     def run_available_now(self, timeout_s: float = 120.0) -> dict:
-        """Drain everything currently in the directory, then stop
-        (streaming.drain_available_now; TimeoutError on a half drain)."""
+        """Drain everything currently in the directory, then stop.
+
+        Raises TimeoutError if the drain does not finish within timeout_s
+        (after stopping the query) — returning stats for a half-finished
+        drain would let a caller read an incomplete table as complete.
+        """
         pages = read_warc_stream(
             self.spark, self.src_path, self.glob,
             max_files_per_trigger=self.max_files_per_trigger,
         )
-        drain_available_now(pages, self._commit_batch, self.checkpoint_dir,
-                            timeout_s, "WARC", self.committed_batches)
+        q = (
+            pages.writeStream.foreachBatch(self._commit_batch)
+            .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(
+                f"WARC drain still running after {timeout_s}s; committed "
+                f"batches so far: {sorted(self.committed_batches())}"
+            )
         return {
             "snapshot_version": self.table.current_version(),
             "batches_committed": len(self.committed_batches()),

@@ -309,27 +309,6 @@ def main() -> None:
         head = "\n".join(plan.splitlines()[:40])
         sections.append(f"## {name} — {status}\n\n```\n{head}\n```\n")
 
-    # ad-hoc: the bank-match probe's broadcast is parameterized — with the
-    # flag on, the decoration join is a BroadcastHashJoin; with it off, the
-    # plan degrades to a shuffle join (the 100 TB escape hatch), never a
-    # cartesian. Mirrors pairing's broadcast_decorations knob.
-    from pdf_parser_spark.operators import normalize as normalize_op
-
-    txns = entrymod._event_txns(spark, SF)
-    for flag, require in (
-        (True, [r"BroadcastHashJoin"]),
-        (False, [r"SortMergeJoin|ShuffledHashJoin"]),
-    ):
-        name = f"bank_match_broadcast_{str(flag).lower()}"
-        df = normalize_op.with_bank_match(txns, broadcast_matches=flag)
-        plan, problems = audit(name, df, require=require)
-        status = "OK" if not problems else "FAIL " + "; ".join(problems)
-        print(f"{status:60s} {name}")
-        if problems:
-            failures += 1
-        head = "\n".join(plan.splitlines()[:40])
-        sections.append(f"## {name} — {status}\n\n```\n{head}\n```\n")
-
     # ad-hoc: sequence packing (r24) — the global prefix sum must use the
     # order-aligned bucket scheme, never a SinglePartition window, and the
     # pack fan-out is a Generate, not a join.

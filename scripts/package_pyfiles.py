@@ -3,22 +3,16 @@
 from __future__ import annotations
 
 import os
-import zipfile
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from pdf_parser_spark.session import build_pyfiles_zip  # noqa: E402
 
 
 def main() -> str:
-    dist = os.path.join(REPO, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "pdf_parser_spark.zip")
-    pkg = os.path.join(REPO, "pdf_parser_spark")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, REPO))
+    out = build_pyfiles_zip(os.path.join(REPO, "dist", "pdf_parser_spark.zip"))
     print(out)
     return out
 

@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import ctypes
 import importlib.util
+import os
 import random
+import subprocess
 import sys
 from pathlib import Path
 
@@ -77,6 +79,28 @@ def test_roundtrip_uncompressed_encoder():
 def test_multi_metablock_uncompressed():
     data = bytes(range(256)) * 70000  # > 2^24: forces several meta-blocks
     assert B.decompress_pure(B.compress(data)) == data
+
+
+def test_pure_decoder_runs_from_pyfiles_zip(tmp_path):
+    """Executors import the package from the --py-files zip, so the pure
+    decoder's tables must load from inside it; otherwise every br body on
+    a host without libbrotlidec stays compressed."""
+    from pdf_parser_spark.session import build_pyfiles_zip
+
+    zip_path = build_pyfiles_zip(str(tmp_path / "pdf_parser_spark.zip"))
+    probe = (
+        "import sys\n"
+        "from pdf_parser_spark import brotli_codec as B\n"
+        "assert B.__file__.startswith(sys.argv[1]), B.__file__\n"
+        "body = b'<html><p>br body</p></html>' * 40\n"
+        "assert B.decompress_pure(B.compress(body)) == body\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", probe, zip_path],
+        cwd=tmp_path, env={**os.environ, "PYTHONPATH": zip_path},
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr
 
 
 def test_dictionary_digest_pinned():

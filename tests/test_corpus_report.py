@@ -62,6 +62,16 @@ def test_replay_after_expiry_is_a_noop(spark, tmp_path):
     assert sum(r["n_docs"] for r in again.report().collect()) == 200
 
 
+def test_direct_double_ingest_is_noop(spark, tmp_path):
+    roll = CorpusRollup(spark, str(tmp_path / "r"))
+    docs = _docs(spark, 0, 80)
+    v1 = roll.ingest(docs, batch_id=7)
+    v2 = roll.ingest(docs, batch_id=7)  # crash-replay of a committed batch
+    assert v1 == v2
+    total = roll.report().agg(F.sum("n_docs")).first()[0]
+    assert total == 80  # not 160
+
+
 def test_estimates_track_exact(spark, tmp_path):
     docs = _docs(spark, 0, 1200)
     roll = CorpusRollup(spark, str(tmp_path / "r"))

@@ -6,6 +6,8 @@ from __future__ import annotations
 import gzip
 from datetime import datetime, timezone
 
+import pytest
+
 from pdf_parser_spark.sources import warc
 
 
@@ -254,6 +256,29 @@ def test_max_files_per_trigger_bounds_batches(spark, tmp_path):
     r = ing.run_available_now(timeout_s=120.0)
     assert r["batches_committed"] == 2  # one archive per micro-batch
     assert ing.output().count() == 3
+
+
+def test_drain_timeout_stops_and_next_drain_finishes(spark, tmp_path):
+    """A drain that misses its deadline is stopped and raises instead of
+    reporting a half-filled table; the next drain on the same checkpoint
+    finishes it, and no url lands twice."""
+    from pdf_parser_spark.streaming.warc_stream import WarcIngest
+
+    src = tmp_path / "src4"
+    src.mkdir()
+    pages = _pages()
+    for i, page in enumerate(pages):
+        (src / f"{i}.warc.gz").write_bytes(warc.write_warc([page]))
+    ing = WarcIngest(
+        spark, str(src), str(tmp_path / "tbl4"), str(tmp_path / "ck4"),
+        n_buckets=2, max_files_per_trigger=1,
+    )
+    with pytest.raises(TimeoutError, match="WARC drain still running"):
+        ing.run_available_now(timeout_s=0.001)
+    r = ing.run_available_now(timeout_s=120.0)
+    assert r["batches_committed"] == len(pages)  # one archive per batch
+    urls = [row["url"] for row in ing.output().select("url").collect()]
+    assert sorted(urls) == sorted(u for u, _, _ in pages)
 
 
 def test_roundtrip_warc_zst():
