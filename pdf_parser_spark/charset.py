@@ -1,24 +1,29 @@
 """Charset sniffing for web payloads: bytes → text with the real-crawl
 decode cascade.
 
-Common-Crawl HTML is NOT uniformly UTF-8: pages declare encodings in a
-BOM, a `<meta charset=…>`, a `<meta http-equiv="Content-Type"
-content="…; charset=…">`, or an XML prolog — and plenty declare nothing
-(or lie). The extraction convention elsewhere in this package
-(html_extract.extract_main_text) is strict UTF-8 with a documented
-('', []) fallback, which matches the synthetic fixtures and keeps the
-byte-identity contract exact; this module is the opt-in tolerant path a
-real crawl needs in front of it.
+Common-Crawl HTML is NOT uniformly UTF-8: pages declare encodings in the
+HTTP ``Content-Type`` header, a BOM, a `<meta charset=…>`, a `<meta
+http-equiv="Content-Type" content="…; charset=…">`, or an XML prolog —
+and plenty declare nothing (or lie). This module is the package's ONE
+page-bytes → text decode: html_extract.extract_main_text and
+html_tables.extract_tables decode through ``sniff_decode``, and the WARC
+reader (sources/warc.py) only records the transport label, which
+extraction passes back in here as ``transport``.
 
 Cascade (WHATWG encoding-sniffing shape, trimmed to stdlib codecs):
 
 1. BOM (UTF-8-sig / UTF-16 LE/BE / UTF-32 LE/BE) — authoritative.
-2. Declared charset in the first 2 KiB (meta charset, meta http-equiv,
-   XML prolog), decoded if Python knows the codec. A declared encoding
-   that produces undecodable bytes falls through rather than erroring.
-3. Strict UTF-8 (the dominant real-world case).
-4. latin-1 — total (every byte sequence decodes), the crawl-pipeline
+2. Transport label (the HTTP Content-Type charset the fetcher saw).
+3. Declared charset in the first 2 KiB (meta charset, meta http-equiv,
+   XML prolog).
+4. Strict UTF-8 (the dominant real-world case).
+5. latin-1 — total (every byte sequence decodes), the crawl-pipeline
    standard last resort.
+
+Steps 2 and 3 obey one rule: a label is used only if Python knows the
+codec, it is not utf-16/32 (without a BOM the payload cannot be; the
+label itself was readable as ASCII), and the bytes decode strictly under
+it — otherwise it falls through rather than erroring.
 
 Returns which step decided, so pipelines can track decode provenance as
 a metric column (parse-failure-rate cousin).
@@ -39,7 +44,10 @@ _BOMS: list[tuple[bytes, str]] = [
     (codecs.BOM_UTF16_BE, "utf-16-be"),
 ]
 
-_META_CHARSET_RE = re.compile(
+# declarations are looked for in this many leading bytes
+_HEAD_BYTES = 2048
+
+_META_RE = re.compile(
     rb"""<meta[^>]+charset\s*=\s*["']?\s*([A-Za-z0-9._:-]+)""", re.IGNORECASE
 )
 _XML_PROLOG_RE = re.compile(
@@ -49,7 +57,7 @@ _XML_PROLOG_RE = re.compile(
 
 def declared_charset(head: bytes) -> str | None:
     """The encoding the document CLAIMS (meta/XML prolog), or None."""
-    m = _META_CHARSET_RE.search(head) or _XML_PROLOG_RE.search(head)
+    m = _META_RE.search(head) or _XML_PROLOG_RE.search(head)
     if not m:
         return None
     try:
@@ -58,9 +66,26 @@ def declared_charset(head: bytes) -> str | None:
         return None
 
 
-def sniff_decode(raw: bytes | None, head_bytes: int = 2048) -> tuple[str, str, str]:
+def _decode_as(b: bytes, label: str | None) -> tuple[str, str] | None:
+    """(text, codec name) if ``label`` is usable for ``b``, else None."""
+    if not label:
+        return None
+    try:
+        name = codecs.lookup(label).name
+        if name.startswith(("utf-16", "utf-32")):
+            return None
+        return b.decode(name), name
+    except (LookupError, ValueError):  # unknown codec or lying label
+        return None
+
+
+def sniff_decode(
+    raw: bytes | None, transport: str | None = None
+) -> tuple[str, str, str]:
     """Decode web-payload bytes: returns (text, encoding, source) where
-    source ∈ {bom, declared, utf-8, latin-1, empty}. Never raises."""
+    source ∈ {bom, transport, declared, utf-8, latin-1, empty}.
+    ``transport`` is the charset label the payload was served with (per
+    row, e.g. the WARC pages ``charset`` column). Never raises."""
     if not raw:
         return "", "utf-8", "empty"
     b = bytes(raw)
@@ -75,19 +100,12 @@ def sniff_decode(raw: bytes | None, head_bytes: int = 2048) -> tuple[str, str, s
             except UnicodeDecodeError:
                 break  # lying BOM: fall through the cascade
 
-    decl = declared_charset(b[:head_bytes])
-    if decl and decl not in ("utf-8", "utf8"):
-        try:
-            codec = codecs.lookup(decl)
-            # WHATWG encoding sniffing: a DECLARED utf-16/utf-32 without a
-            # matching BOM is remapped to utf-8 — the declaration itself was
-            # readable as ASCII, so the payload cannot actually be UTF-16/32,
-            # and decoding even-length ASCII as UTF-16 "succeeds" as mojibake.
-            if codec.name.startswith(("utf-16", "utf-32")):
-                raise LookupError(decl)
-            return b.decode(codec.name), codec.name, "declared"
-        except (LookupError, UnicodeDecodeError):
-            pass  # unknown or lying declaration
+    got = _decode_as(b, transport)
+    if got:
+        return *got, "transport"
+    got = _decode_as(b, declared_charset(b[:_HEAD_BYTES]))
+    if got:
+        return *got, "declared"
 
     try:
         return b.decode("utf-8"), "utf-8", "utf-8"

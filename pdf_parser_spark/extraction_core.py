@@ -337,6 +337,15 @@ def segment_blocks(lines: list[str]) -> list[list[str]]:
     return blocks
 
 
+def _amex_rows(text: str, account_source: str) -> list[dict]:
+    transactions = []
+    for block in segment_blocks(text.split("\n")):
+        tx = parse_block(block, account_source)
+        if tx:
+            transactions.append(tx)
+    return transactions
+
+
 def parse_amex_text(text: str, page_texts: list[str] | None = None) -> list[dict]:
     """Full AMEX parse of an already-extracted text layer.
 
@@ -347,16 +356,9 @@ def parse_amex_text(text: str, page_texts: list[str] | None = None) -> list[dict
     `extract_source_account`; callers without page boundaries (single-page
     HTML payloads) pass the whole text as one page.
     """
-    account_source = extract_source_account(
-        page_texts if page_texts is not None else [text]
+    return _amex_rows(
+        text, extract_source_account(page_texts if page_texts is not None else [text])
     )
-
-    transactions = []
-    for block in segment_blocks(text.split("\n")):
-        tx = parse_block(block, account_source)
-        if tx:
-            transactions.append(tx)
-    return transactions
 
 
 def extract_transactions_from_text(
@@ -364,22 +366,34 @@ def extract_transactions_from_text(
 ) -> tuple[list[dict], dict]:
     """Strategy dispatch + parse: (rows, meta) (ref: universal_parser.py:9-37).
 
+    ``meta["strategy"]`` is the dispatched strategy ('' for empty text).
     Tabular and OCR strategies are detected but emit no rows, matching the
     reference placeholders (strategies/tabular_parser.py:11-14,
     strategies/ocr_parser.py:11-14).
     """
-    if not text:
-        return [], {"source_account": "", "statement_end_date": ""}
-    strategy = dispatch_strategy(text)
-    if strategy == "amex":
-        rows = parse_amex_text(text, page_texts)
-        source = extract_source_account(
-            page_texts if page_texts is not None else [text]
-        )
-        return rows, {"source_account": source, "statement_end_date": ""}
-    if strategy in ("tabular", "ocr"):
-        return [], {"source_account": "", "statement_end_date": ""}
-    return [], {"source_account": "", "statement_end_date": ""}
+    strategy = dispatch_strategy(text) if text else ""
+    if strategy != "amex":
+        return [], {"strategy": strategy, "source_account": "", "statement_end_date": ""}
+    source = extract_source_account(page_texts if page_texts is not None else [text])
+    return _amex_rows(text, source), {
+        "strategy": strategy, "source_account": source, "statement_end_date": "",
+    }
+
+
+def txn_records(rows: list[dict]) -> list[dict]:
+    """Parsed rows → the nested txn structs the extraction and OCR stages
+    emit (txn_index = position, dateKey derived from date)."""
+    return [
+        {
+            "txn_index": i,
+            "date": r["date"],
+            "dateKey": parse_date_key(r["date"]),
+            "memo": r["memo"],
+            "amount": r["amount"],
+            "source": r["source"],
+        }
+        for i, r in enumerate(rows)
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -37,6 +37,8 @@ from dataclasses import dataclass, field
 from html import unescape
 from html.parser import HTMLParser
 
+from pdf_parser_spark.charset import sniff_decode
+
 # Elements that open/close a text block.
 BLOCK_TAGS = frozenset(
     """address article aside blockquote body caption dd div dl dt fieldset
@@ -493,26 +495,21 @@ def classify_blocks(blocks: list[Block]) -> list[bool]:
     return decisions
 
 
-def extract_main_text(html_bytes: bytes | None) -> tuple[str, list[dict]]:
+def extract_main_text(
+    html_bytes: bytes | None, transport: str | None = None
+) -> tuple[str, list[dict]]:
     """html bytes → (extracted main text, span records).
 
-    Spans are `{block, start, end, tag, n_chars, link_density}` with
-    start/end as char offsets into the returned text. Deterministic:
-    the same bytes always yield the same (text, spans).
+    The bytes decode through charset.sniff_decode; ``transport`` is the
+    charset label the page was served with (the pages ``charset`` column,
+    None when unknown). Spans are `{block, start, end, tag, n_chars,
+    link_density}` with start/end as char offsets into the returned text.
+    Deterministic: the same bytes and label always yield the same
+    (text, spans).
     """
     if not html_bytes:
         return "", []
-    # WHATWG-order charset sniff (BOM → <meta> → utf-8): real crawls carry
-    # iso-8859-1 / shift_jis / windows-1251 pages whose bytes are NOT
-    # utf-8; decoding them as such would silently mangle every non-ASCII
-    # char. errors='replace' keeps one bad byte from dropping a page.
-    from pdf_parser_spark.sources.warc import sniff_charset
-
-    enc = sniff_charset({}, bytes(html_bytes))
-    try:
-        html = html_bytes.decode(enc, errors="replace")
-    except LookupError:  # meta declared an unknown label
-        html = html_bytes.decode("utf-8", errors="replace")
+    html = sniff_decode(html_bytes, transport)[0]
     blocks = parse_blocks(html)
     keep = classify_blocks(blocks)
     out_parts: list[str] = []

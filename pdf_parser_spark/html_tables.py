@@ -23,6 +23,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 
+from pdf_parser_spark.charset import sniff_decode
+
 TABLE_SCHEMA = (
     "url string, table_idx int, row_idx int, col_idx int, "
     "is_header boolean, col_span int, row_span int, cell_text string"
@@ -140,17 +142,11 @@ class _TableParser(HTMLParser):
 
 def extract_tables(html_bytes: bytes | None) -> list[tuple]:
     """Scalar core: html bytes → [(table_idx, row_idx, col_idx, is_header,
-    col_span, row_span, cell_text)]. Non-UTF8 or missing payloads → [],
-    matching extract_main_text's ('', []) convention."""
-    if html_bytes is None:
-        return []
-    try:
-        html = bytes(html_bytes).decode("utf-8")
-    except UnicodeDecodeError:
-        return []
+    col_span, row_span, cell_text)]. The bytes decode through
+    charset.sniff_decode, as in extract_main_text; missing payloads → []."""
     p = _TableParser()
     try:
-        p.feed(html)
+        p.feed(sniff_decode(html_bytes)[0])
         p.finish()
     except Exception:
         return []

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_parser_spark.operators.textstats import words_expr
+
 END = "</w>"
 
 
@@ -40,12 +42,8 @@ def word_counts(docs: DataFrame, text_col: str = "text",
                 min_count: int = 1) -> DataFrame:
     """(word, count) over lowercase whitespace tokens — the ONLY
     corpus-wide exchange in BPE training."""
-    words = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
-        lambda w: w != "",
-    )
     wc = (
-        docs.select(F.explode(words).alias("word"))
+        docs.select(F.explode(words_expr(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("count"))
     )
@@ -150,13 +148,9 @@ def tokenize_corpus(docs: DataFrame, merges: list[tuple[str, str]],
     pieces = segment_words(word_counts(docs, text_col), merges).select(
         "word", "pieces"
     )
-    words = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
-        lambda w: w != "",
-    )
     exploded = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode_outer(words).alias("pos", "word"),
+        F.posexplode_outer(words_expr(F.col(text_col))).alias("pos", "word"),
     )
     joined = exploded.join(pieces, "word", "left")
     rebuilt = (

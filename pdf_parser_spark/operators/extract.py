@@ -9,8 +9,8 @@ strategy → rows) but vectorized: the Python work is amortized over Arrow
 batches, imports happen once per executor, and there is NO shuffle in this
 stage — extraction is embarrassingly parallel over input partitions, which is
 what makes the N→4N scaling criterion achievable (the stage's scaling is
-bounded only by input-split balance, handled by xxhash64(url) repartition
-upstream for skewed hosts).
+bounded only by input-split balance; the pages table's bucket(N, url)
+layout, sources/pages.with_bucket, spreads a skewed host over every bucket).
 
 Reference lineage: text-layer scan universal_parser.py:19-23, strategy
 dispatch universal_parser.py:26-37, block parse strategies/amex_multiline.py,
@@ -63,25 +63,27 @@ _FAIL_KEYS = dict(
 )
 
 
-def _extract_one(url: str, html: bytes, keep_text: bool) -> dict:
+def _extract_one(url: str, html: bytes, keep_text: bool,
+                 charset: str | None = None) -> dict:
     """One document through the full extraction; NEVER raises.
 
     Any per-document failure — PDF bytes the codec cannot decode,
     pathological markup tripping the layout pass, a malformed payload — returns a
     parse_failed=True record instead of propagating: at corpus scale one
     poisoned document must land in the failure funnel (extraction_metrics
-    parse_failures), not kill the job after four task retries.
+    parse_failures), not kill the job after four task retries. ``charset``
+    is the row's transport label (the WARC pages ``charset`` column).
     """
     bytes_in = len(html) if html is not None else 0
     try:
-        return _extract_one_inner(url, html, keep_text, bytes_in)
+        return _extract_one_inner(url, html, keep_text, bytes_in, charset)
     except Exception:
         return {"url": url, "payload_kind": _payload_kind(url, html),
                 "bytes_in": bytes_in, **_FAIL_KEYS}
 
 
 def _extract_one_inner(url: str, html: bytes, keep_text: bool,
-                       bytes_in: int) -> dict:
+                       bytes_in: int, charset: str | None) -> dict:
     kind = _payload_kind(url, html)
     page_texts: list[str] | None = None
     if kind == "pdf":
@@ -110,27 +112,16 @@ def _extract_one_inner(url: str, html: bytes, keep_text: bool,
             for i, s in enumerate(layout_spans)
         ]
     else:
-        text, spans = html_extract.extract_main_text(bytes(html) if html is not None else b"")
+        text, spans = html_extract.extract_main_text(html, charset)
 
-    strategy = core.dispatch_strategy(text) if text else ""
     rows, meta = core.extract_transactions_from_text(text, page_texts)
     closing = core.extract_closing_date(text) if text else None
-    txns = [
-        {
-            "txn_index": i,
-            "date": r["date"],
-            "dateKey": core.parse_date_key(r["date"]),
-            "memo": r["memo"],
-            "amount": r["amount"],
-            "source": r["source"],
-        }
-        for i, r in enumerate(rows)
-    ]
+    txns = core.txn_records(rows)
     return {
         "url": url,
         "payload_kind": kind,
-        "strategy": strategy,
-        "source_account": meta.get("source_account") or "",
+        "strategy": meta["strategy"],
+        "source_account": meta["source_account"],
         "closing_date": closing or "",
         "extracted_text": text if keep_text else "",
         "bytes_in": bytes_in,
@@ -146,13 +137,16 @@ def _extract_one_inner(url: str, html: bytes, keep_text: bool,
 def extract_documents(pages: DataFrame, keep_text: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang, ...) → one extraction row per doc.
 
-    Column pruning matters at 100 TB: only url/html/lang are consumed, so the
-    select() ahead of mapInPandas lets Parquet skip the heavy `text` column.
+    Column pruning matters at 100 TB: only url/html/lang/source_type_hint/
+    charset are consumed, so the select() ahead of mapInPandas lets Parquet
+    skip the heavy `text` column.
     """
-    cols = ["url", "html", "lang", "source_type_hint"]
+    cols = ["url", "html", "lang", "source_type_hint", "charset"]
     have_hint = "source_type_hint" in pages.columns
-    # fresh-crawl pages (e.g. the WARC source) arrive without a lang label
+    # fresh-crawl pages (e.g. the WARC source) arrive without a lang label;
+    # only the WARC source carries the HTTP-declared charset
     have_lang = "lang" in pages.columns
+    have_charset = "charset" in pages.columns
     pruned = pages.select(*[c for c in cols if c in pages.columns])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -160,8 +154,11 @@ def extract_documents(pages: DataFrame, keep_text: bool = False) -> DataFrame:
             out = []
             hints = pdf["source_type_hint"] if have_hint else [None] * len(pdf)
             langs = pdf["lang"] if have_lang else [None] * len(pdf)
-            for url, html, lang, hint in zip(pdf["url"], pdf["html"], langs, hints):
-                rec = _extract_one(url, html, keep_text)
+            charsets = pdf["charset"] if have_charset else [None] * len(pdf)
+            for url, html, lang, hint, charset in zip(
+                pdf["url"], pdf["html"], langs, hints, charsets
+            ):
+                rec = _extract_one(url, html, keep_text, charset)
                 rec["lang"] = lang
                 rec["source_type_hint"] = hint
                 out.append(rec)

@@ -98,17 +98,7 @@ def ocr_extract(pages: DataFrame, fake: bool = False) -> DataFrame:
                         "ocr_text": text,
                         "ocr_n_txns": len(parsed),
                         "ocr_failed": False,
-                        "ocr_txns": [
-                            {
-                                "txn_index": i,
-                                "date": r["date"],
-                                "dateKey": core.parse_date_key(r["date"]),
-                                "memo": r["memo"],
-                                "amount": r["amount"],
-                                "source": r["source"],
-                            }
-                            for i, r in enumerate(parsed)
-                        ],
+                        "ocr_txns": core.txn_records(parsed),
                     }
                 )
             yield pd.DataFrame(

@@ -43,16 +43,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.sampling import weighted_priority_sample
+from pdf_parser_spark.operators.textstats import words_expr
 
 DEFAULT_FEATURES = 1 << 18
 _INTERCEPT = -1  # reserved feat id for the bias term (pmod output is >= 0)
 
 
-def _words(text_col: str):
-    return F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
-        lambda w: w != "",
-    )
+def _feat(n_features: int):
+    """The hashed feature id of ``word`` — training and scoring must agree."""
+    return F.pmod(F.xxhash64("word"), F.lit(n_features)).cast("long").alias("feat")
 
 
 def hashed_features(docs: DataFrame, text_col: str = "text",
@@ -73,11 +72,9 @@ def hashed_features(docs: DataFrame, text_col: str = "text",
     downstream).
     """
     tok = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(_words(text_col)).alias("word")
-    ).select(
-        "doc_id",
-        F.pmod(F.xxhash64("word"), F.lit(n_features)).cast("long").alias("feat"),
-    )
+        F.col(id_col).alias("doc_id"),
+        F.explode(words_expr(F.col(text_col))).alias("word"),
+    ).select("doc_id", _feat(n_features))
     counts = tok.groupBy("doc_id", "feat").agg(
         F.count("*").cast("double").alias("_c")
     )
@@ -274,9 +271,8 @@ def dsir_ngram_model(docs: DataFrame, text_col: str = "text",
     materialized — consumers fold the floor ln(α / (N + α·n_features))
     in via coalesce (dsir_log_ratios does).
     """
-    tok = docs.select(F.explode(_words(text_col)).alias("word")).select(
-        F.pmod(F.xxhash64("word"), F.lit(n_features)).cast("long").alias("feat")
-    )
+    words = F.explode(words_expr(F.col(text_col))).alias("word")
+    tok = docs.select(words).select(_feat(n_features))
     counts = tok.groupBy("feat").agg(F.count("*").cast("double").alias("_c"))
     total = counts.agg(F.sum("_c").alias("_n"))
     return counts.crossJoin(F.broadcast(total)).select(
@@ -294,7 +290,7 @@ def _model_floor(docs: DataFrame, text_col: str,
 
     One scalar aggregate (sum of per-doc token counts, no explode)."""
     n = docs.agg(
-        F.sum(F.size(_words(text_col))).alias("n")
+        F.sum(F.size(words_expr(F.col(text_col)))).alias("n")
     ).first()["n"] or 0
     return math.log(alpha) - math.log(float(n) + alpha * n_features)
 
@@ -317,11 +313,9 @@ def dsir_log_ratios(raw: DataFrame, target: DataFrame,
     t_floor = _model_floor(target, text_col, n_features, alpha)
     r_floor = _model_floor(raw, text_col, n_features, alpha)
     tok = raw.select(
-        F.col(id_col).alias("doc_id"), F.explode(_words(text_col)).alias("word")
-    ).select(
-        "doc_id",
-        F.pmod(F.xxhash64("word"), F.lit(n_features)).cast("long").alias("feat"),
-    )
+        F.col(id_col).alias("doc_id"),
+        F.explode(words_expr(F.col(text_col))).alias("word"),
+    ).select("doc_id", _feat(n_features))
     scored = (
         tok.join(F.broadcast(t_model.select("feat", F.col("logp").alias("_lt"))),
                  "feat", "left")

@@ -121,12 +121,11 @@ class SnapshotExtractionJob:
             t0 = time.perf_counter()
             pages = pages_src.with_bucket(get_pages(), "url", self.n_buckets)
             pages = pages.where(F.col("bucket").isin(group))
-            extracted = extract_op.extract_documents(pages.drop("bucket"))
-            extracted = pages_src.with_bucket(
-                extracted, "url", self.n_buckets
+            extracted = extract_op.extract_documents(
+                pages.drop("bucket")
             ).persist()
             txns = pages_src.with_bucket(
-                extract_op.extracted_transactions(extracted.drop("bucket")),
+                extract_op.extracted_transactions(extracted),
                 "url", self.n_buckets,
             )
             stats = extracted.agg(

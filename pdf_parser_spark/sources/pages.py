@@ -4,8 +4,9 @@ The production target is an Iceberg table partitioned by
 ``bucket(N_BUCKETS, url)`` (north rule: explicit bucket-by-url-hash
 partitioning). This sandbox has no Iceberg runtime jar, so the same layout is
 realized as a hash-bucketed parquet directory tree
-(``bucket=K/part-*.parquet``) with atomic per-bucket commit markers — the
-data layout, pruning behavior, and commit semantics Iceberg would give. On a
+(``bucket=K/part-*.parquet``) — the data layout and pruning behavior
+Iceberg would give; commits go through the snapshot log
+(plans/snapshots.py), the one commit protocol. On a
 real cluster the write becomes
 ``df.writeTo(name).partitionedBy(bucket(N, col('url'))).createOrReplace()``
 — a catalog write this sandbox cannot express, so ``write_table`` refuses

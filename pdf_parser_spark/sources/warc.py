@@ -17,11 +17,11 @@ stdlib implementation of the subset a crawl-extraction pipeline needs:
   ``application/http`` carry a full HTTP response; the status line +
   headers are split off, and a ``Content-Encoding: gzip/deflate/zstd/br``
   body is decompressed (Transfer-Encoding: chunked is de-chunked first);
-- CHARSET SNIFFING (WHATWG encoding-sniffing order, trimmed): BOM, then
-  the HTTP Content-Type charset parameter, then ``<meta charset>`` /
-  ``<meta http-equiv=Content-Type>`` within the first 1024 bytes, else
-  utf-8. The pages table keeps ``html`` as BINARY (bytes are ground truth
-  for byte-identity); the sniffed charset rides along for decoding.
+- the TRANSPORT CHARSET: the pages table keeps ``html`` as BINARY (bytes
+  are ground truth for byte-identity) and ``charset`` records only what
+  the HTTP Content-Type header said (lowercased label, or null). The
+  decode decision is made once, at extraction, by charset.sniff_decode
+  with that label as its transport step.
 - a RECORD WRITER (tests + fixtures): emits spec-shaped warcinfo/response
   records, optionally per-record-gzipped — the reader's round-trip oracle.
 
@@ -48,9 +48,6 @@ _CRLF = b"\r\n"
 _HDR_END = b"\r\n\r\n"
 
 _CHARSET_HTTP_RE = re.compile(rb"charset\s*=\s*\"?([A-Za-z0-9_.:-]+)", re.I)
-_META_CHARSET_RE = re.compile(
-    rb"<meta[^>]+charset\s*=\s*[\"']?([A-Za-z0-9_.:-]+)", re.I
-)
 
 # ---------------------------------------------------------------- writer
 
@@ -329,31 +326,24 @@ def split_http_response(
     return headers, body
 
 
-def sniff_charset(http_headers: dict[str, str], body: bytes) -> str:
-    """WHATWG-order charset sniff: BOM → HTTP header → <meta> → utf-8."""
-    if body[:3] == b"\xef\xbb\xbf":
-        return "utf-8"
-    if body[:2] in (b"\xff\xfe", b"\xfe\xff"):
-        return "utf-16"
+def _transport_charset(http_headers: dict[str, str]) -> str | None:
+    """The charset label of the HTTP Content-Type header, lowercased, or
+    None when the header carries none."""
     # header values may have been decoded as UTF-8 (non-latin-1 chars):
     # 'replace' keeps a garbage charset param from killing the whole
-    # archive's task — the sniff just falls through to the next source
+    # archive's task — the label just fails to name a codec downstream
     m = _CHARSET_HTTP_RE.search(
         http_headers.get("content-type", "").encode("latin-1", "replace")
     )
-    if m:
-        return m.group(1).decode("latin-1").lower()
-    m = _META_CHARSET_RE.search(body[:1024])
-    if m:
-        return m.group(1).decode("latin-1").lower()
-    return "utf-8"
+    return m.group(1).decode("latin-1").lower() if m else None
 
 
 def warc_to_page_rows(data: bytes) -> Iterator[dict]:
     """One WARC archive's bytes → pages-table rows (response records only).
 
     Emits {'url', 'warc_ts' (ISO string), 'html' (entity BYTES — ground
-    truth preserved), 'charset', 'http_status'}.
+    truth preserved), 'charset' (the HTTP-declared label or None),
+    'http_status'}.
     """
     for rec in iter_warc_records(data):
         h = rec["headers"]
@@ -368,7 +358,7 @@ def warc_to_page_rows(data: bytes) -> Iterator[dict]:
             "url": h.get("warc-target-uri", ""),
             "warc_ts": h.get("warc-date", ""),
             "html": body,
-            "charset": sniff_charset(http_h, body),
+            "charset": _transport_charset(http_h),
             "http_status": http_h.get(":status", ""),
         }
 

@@ -1,5 +1,5 @@
-"""Charset sniffing: BOM / declared / utf-8 / latin-1 cascade, lying
-declarations, and the Spark decode-provenance column."""
+"""Charset sniffing: BOM / transport / declared / utf-8 / latin-1 cascade,
+lying labels, and the Spark decode-provenance column."""
 
 from __future__ import annotations
 
@@ -100,3 +100,34 @@ def test_declared_utf16_without_bom_remapped_to_utf8():
     bom_raw = b"\xff\xfe" + "réal utf-16".encode("utf-16-le")
     text, enc, src = sniff_decode(bom_raw)
     assert src == "bom" and "réal utf-16" in text
+
+
+def test_charset_sniffing_order():
+    """BOM → transport label → declared → utf-8 → latin-1. A transport
+    label obeys the declaration rule: an unknown codec, a BOM-less
+    utf-16/32 label, or bytes that fail a strict decode fall through."""
+    cases = [
+        # (raw, transport) → (text, encoding, source)
+        ((b"\xef\xbb\xbfhi", "iso-8859-1"), ("hi", "utf-8-sig", "bom")),
+        ((b"x", "ISO-8859-1"), ("x", "iso8859-1", "transport")),
+        (
+            (b'<html><meta charset="Shift_JIS"><body>', None),
+            ('<html><meta charset="Shift_JIS"><body>', "shift_jis", "declared"),
+        ),
+        ((b"<html>plain</html>", None), ("<html>plain</html>", "utf-8", "utf-8")),
+        # the transport label outranks the document's own declaration
+        (
+            (b"<meta charset='shift_jis'>caf\xe9", "windows-1252"),
+            ("<meta charset='shift_jis'>café", "cp1252", "transport"),
+        ),
+        # lying or unknown transport labels fall through
+        (
+            (b"<meta charset='cp1252'>caf\xe9", "x-no-such-codec"),
+            ("<meta charset='cp1252'>café", "cp1252", "declared"),
+        ),
+        ((b"caf\xe9", "ascii"), ("café", "latin-1", "latin-1")),
+        ((b"caf\xe9", "utf-8"), ("café", "latin-1", "latin-1")),
+        ((b"hello web", "utf-16"), ("hello web", "utf-8", "utf-8")),
+    ]
+    for (raw, transport), want in cases:
+        assert sniff_decode(raw, transport) == want, (raw, transport)

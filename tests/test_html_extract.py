@@ -116,8 +116,9 @@ def test_block_features():
 
 
 def test_charset_sniffed_decode():
-    """Non-utf-8 pages decode through the declared charset instead of
-    mangling every non-ASCII char; unknown labels fall back to utf-8."""
+    """Pages decode through the charset cascade (BOM, declared charset,
+    utf-8, latin-1) instead of mangling every non-ASCII char; unknown
+    labels fall through."""
     from pdf_parser_spark.html_extract import extract_main_text
 
     latin = (
@@ -128,13 +129,13 @@ def test_charset_sniffed_decode():
     text, _ = extract_main_text(latin)
     assert "Café au lait" in text
 
-    # same bytes WITHOUT the meta tag: utf-8 fallback replaces the byte
+    # same bytes WITHOUT the meta tag: not valid utf-8, so latin-1
     bare = (
         "<html><body><p>Caf\xe9 au lait costs three euros fifty today."
         "</p></body></html>"
     ).encode("iso-8859-1")
     text2, _ = extract_main_text(bare)
-    assert "Caf� au lait" in text2
+    assert "Café au lait" in text2
 
     # unknown charset label → utf-8 fallback, no crash
     weird = (
@@ -143,6 +144,31 @@ def test_charset_sniffed_decode():
     ).encode("ascii")
     text3, _ = extract_main_text(weird)
     assert "plain ascii body" in text3
+
+    # utf-16 declared on an ASCII page cannot be honest: utf-8
+    utf16_meta = (
+        '<html><head><meta charset="utf-16"></head>'
+        "<body><p>plain ascii body long enough to keep</p></body></html>"
+    ).encode("ascii")
+    text4, _ = extract_main_text(utf16_meta)
+    assert "plain ascii body long enough to keep" in text4
+
+    # a UTF-32 BOM is not read as a UTF-16 one
+    utf32 = b"\xff\xfe\x00\x00" + (
+        "<html><body><p>Café crème costs three euros fifty today.</p>"
+        "</body></html>"
+    ).encode("utf-32-le")
+    text5, _ = extract_main_text(utf32)
+    assert text5 == "Café crème costs three euros fifty today."
+
+    # XML-prolog declaration
+    prolog = (
+        '<?xml version="1.0" encoding="ISO-8859-15"?><html><body>'
+        "<p>Prix: 5 € le café, servi en terrasse tous les jours.</p>"
+        "</body></html>"
+    ).encode("iso8859-15")
+    text6, _ = extract_main_text(prolog)
+    assert "5 € le café" in text6
 
 
 def _stdlib_blocks(html: str):

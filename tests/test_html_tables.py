@@ -58,6 +58,12 @@ def test_td_without_tr_and_garbage():
     assert extract_tables(None) == []
     assert extract_tables(b"\xff\xfe\x00bad") == []
     assert extract_tables(b"no tables here <td>stray</td>") == []
+    # a non-UTF-8 page decodes through its declared charset
+    cp1252 = (
+        '<html><head><meta charset="windows-1252"></head><body>'
+        "<table><tr><td>café</td><td>€5</td></tr></table></body></html>"
+    ).encode("cp1252")
+    assert _grid(extract_tables(cp1252)) == {(0, 0, 0): "café", (0, 0, 1): "€5"}
 
 
 def test_spark_roundtrip_no_shuffle(spark):

@@ -1,4 +1,4 @@
-"""WARC source: writer→reader round-trip, HTTP unwrap, charset sniffing,
+"""WARC source: writer→reader round-trip, HTTP unwrap, transport charset,
 malformed-input tolerance, and the Spark binaryFile ingestion path."""
 
 from __future__ import annotations
@@ -66,19 +66,6 @@ def test_http_unwrap_chunked():
     )
     _, got = warc.split_http_response(payload)
     assert got == b"hello world"
-
-
-def test_charset_sniffing_order():
-    assert warc.sniff_charset({}, b"\xef\xbb\xbfhi") == "utf-8"
-    assert (
-        warc.sniff_charset({"content-type": "text/html; charset=ISO-8859-1"}, b"x")
-        == "iso-8859-1"
-    )
-    assert (
-        warc.sniff_charset({}, b'<html><meta charset="Shift_JIS"><body>')
-        == "shift_jis"
-    )
-    assert warc.sniff_charset({}, b"<html>plain</html>") == "utf-8"
 
 
 def test_malformed_inputs_dont_raise():
@@ -183,6 +170,35 @@ def test_warc_ingest_with_extraction_transform(spark, tmp_path):
     assert set(got) == set(want)
     mismatch = [u for u in want if got[u] != want[u]]
     assert mismatch == []
+
+
+def test_http_declared_charset_reaches_extraction(spark, tmp_path):
+    """A page whose charset is declared only in the HTTP header (no BOM, no
+    <meta>) extracts to its source text: the reader records the label in
+    the ``charset`` column, extraction decodes with it. A header without a
+    charset leaves the column null; the page then decodes from its bytes."""
+    from pdf_parser_spark.operators import extract as extract_op
+
+    text = "Выписка по счёту: кофе 120 руб., хлеб 45 руб. — итого 165 руб."
+    html = f"<html><body><p>{text}</p></body></html>"
+    (tmp_path / "ru.warc.gz").write_bytes(warc.write_warc(
+        [("https://ru.example/p", "2024-01-01T00:00:00Z", html.encode("cp1251"))],
+        content_type="text/html; charset=windows-1251",
+    ))
+    (tmp_path / "en.warc.gz").write_bytes(warc.write_warc(
+        [("https://en.example/p", "2024-01-01T00:00:00Z", html.encode("utf-8"))],
+        content_type="text/html",
+    ))
+    pages = warc.read_warc(spark, str(tmp_path))
+    assert {r["url"]: r["charset"] for r in pages.collect()} == {
+        "https://ru.example/p": "windows-1251",
+        "https://en.example/p": None,
+    }
+    got = extract_op.extract_documents(pages, keep_text=True).collect()
+    assert {r["url"]: r["extracted_text"] for r in got} == {
+        "https://ru.example/p": text,
+        "https://en.example/p": text,
+    }
 
 
 # ------------------------------------------- review-fix regression tests
