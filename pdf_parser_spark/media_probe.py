@@ -343,11 +343,10 @@ def _probe_mp4(data: bytes) -> dict:
             # vpcC VPCodecConfigurationRecord: FullBox(4) then profile u8,
             # level u8, bitDepth(4)|chromaSubsampling(3)|videoFullRange(1)
             bit_depth = track.codec_config[6] >> 4
-        elif track.samples:
-            fh = _vp9_frame_header(data[track.samples[0].offset:
-                                        track.samples[0].offset
-                                        + track.samples[0].size])
-            bit_depth = fh["bit_depth"]
+        else:
+            bit_depth = _vp9_keyframe_bit_depth(
+                data[s.offset:s.offset + s.size] for s in track.samples
+            )
     if codec == "av01" and track.codec_config:
         cfg = av1_codec.parse_av1c(track.codec_config)
         seq = (
@@ -380,10 +379,10 @@ def _probe_mkv(data: bytes) -> dict:
         )
         if seq:
             bit_depth = seq["bit_depth"]
-    if codec == "V_VP9" and track.frames:
-        f0 = track.frames[0]
-        fh = _vp9_frame_header(data[f0.offset:f0.offset + f0.size])
-        bit_depth = fh["bit_depth"]
+    if codec == "V_VP9":
+        bit_depth = _vp9_keyframe_bit_depth(
+            data[f.offset:f.offset + f.size] for f in track.frames
+        )
     name = {
         "V_UNCOMPRESSED": "raw", "V_AV1": "av1", "V_VP9": "vp9",
         "V_VP8": "vp8", "V_MPEG4/ISO/AVC": "h264", "V_MPEGH/ISO/HEVC": "h265",
@@ -563,8 +562,9 @@ def _vp9_frame_header(b: bytes) -> dict:
     if color_space != 7:  # CS_RGB
         bits(1)  # color_range
         if profile in (1, 3):
-            if bits(1) or bits(1) or bits(1):  # subsampling_x/y, reserved
-                raise ValueError("vp9: unexpected subsampling/reserved bits")
+            bits(2)  # subsampling_x, subsampling_y (4:4:4, 4:2:2, 4:4:0)
+            if bits(1):
+                raise ValueError("vp9: reserved bit after subsampling")
     else:
         if profile in (1, 3) and bits(1):
             raise ValueError("vp9: reserved bit after CS_RGB")
@@ -572,6 +572,16 @@ def _vp9_frame_header(b: bytes) -> dict:
     height = bits(16) + 1
     return {"key": True, "show": show, "profile": profile,
             "bit_depth": bit_depth, "width": width, "height": height}
+
+
+def _vp9_keyframe_bit_depth(frames) -> int | None:
+    """Bit depth from the first keyframe header among ``frames`` (payload
+    bytes in stream order); inter and show-existing frames carry none."""
+    for frame in frames:
+        fh = _vp9_frame_header(frame)
+        if fh["key"]:
+            return fh["bit_depth"]
+    return None
 
 
 def _probe_ivf(data: bytes) -> dict:

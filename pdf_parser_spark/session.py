@@ -2,6 +2,16 @@
 
 Local-mode testing (local[N]) with the same config surface a multi-executor
 spark-submit would use; AQE on, Arrow on, shuffle partitions sized to cores.
+
+Python workers start through ``pdf_parser_spark.worker_daemon`` (the stock
+daemon plus a stat-guarded ``zipimporter.invalidate_caches``), so a UDF
+task no longer re-reads pyspark.zip's and the jars' directories. This
+relies on ``_export_package_path`` putting the package on the local
+daemon's PYTHONPATH. Sessions built elsewhere (``spark-submit`` through
+``scripts/submit_extraction_job.py``, harness sessions in
+``__spark_entry__``) keep the stock daemon on purpose: on a cluster
+``--py-files`` can arrive after the daemon starts, and a daemon module that
+fails to import fails every task.
 """
 
 from __future__ import annotations
@@ -78,6 +88,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "pdf_parser_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

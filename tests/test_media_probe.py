@@ -231,12 +231,17 @@ class _BitWriter:
         )
 
 
-def _vp9_keyframe(width, height, profile=0, bit_depth=8, color_space=1):
-    """Hand-build a VP9 keyframe uncompressed header (spec §6.2)."""
+def _vp9_keyframe(width, height, profile=0, bit_depth=8, color_space=1,
+                  subsampling=(0, 0), reserved=0):
+    """Hand-build a VP9 keyframe uncompressed header (spec §6.2).
+    ``subsampling`` is (subsampling_x, subsampling_y), written only for
+    profiles 1 and 3 (0 and 2 are always 4:2:0)."""
     w = _BitWriter()
     w.put(2, 2)                      # frame_marker
     w.put(profile & 1, 1)            # profile_low_bit
     w.put(profile >> 1, 1)           # profile_high_bit
+    if profile == 3:
+        w.put(0, 1)                  # reserved_zero
     w.put(0, 1)                      # show_existing_frame
     w.put(0, 1)                      # frame_type = KEY
     w.put(1, 1)                      # show_frame
@@ -248,7 +253,9 @@ def _vp9_keyframe(width, height, profile=0, bit_depth=8, color_space=1):
     if color_space != 7:
         w.put(0, 1)                  # color_range
         if profile in (1, 3):
-            w.put(0, 3)              # subsampling_x/y + reserved
+            w.put(subsampling[0], 1)  # subsampling_x
+            w.put(subsampling[1], 1)  # subsampling_y
+            w.put(reserved, 1)        # reserved_zero
     w.put(width - 1, 16)
     w.put(height - 1, 16)
     return w.bytes() + b"\x00" * 32  # probe never reads the tail
@@ -286,6 +293,43 @@ def test_probe_ivf_vp9():
                                                      bit_depth=12))
     assert (fh["key"], fh["width"], fh["height"], fh["bit_depth"]) == (
         True, 320, 240, 12)
+
+
+def test_vp9_profile_1_3_subsampling():
+    # 4:2:2 and 4:4:0 are legal in profiles 1/3; only the reserved bit
+    # after the subsampling pair must be zero
+    for profile, depth, sub in [(1, 8, (1, 0)), (1, 8, (0, 1)),
+                                (3, 12, (1, 0)), (3, 10, (0, 0))]:
+        fh = media_probe._vp9_frame_header(_vp9_keyframe(
+            320, 240, profile=profile, bit_depth=depth, subsampling=sub))
+        assert (fh["profile"], fh["width"], fh["height"], fh["bit_depth"]) == (
+            profile, 320, 240, depth)
+    with pytest.raises(ValueError, match="reserved"):
+        media_probe._vp9_frame_header(
+            _vp9_keyframe(320, 240, profile=1, subsampling=(1, 0), reserved=1))
+
+
+def test_vp9_bit_depth_from_first_keyframe():
+    """mkv V_VP9 and mp4 vp09 without a vpcC box take the bit depth from
+    the first keyframe, not frame 0 (here an inter frame, then a
+    show-existing frame)."""
+    from pdf_parser_spark import mkv_demux, mp4_demux
+
+    inter = b"\x86" + b"\x00" * 16
+    show_existing = b"\x88" + b"\x00" * 16
+    frames = [inter, show_existing, _vp9_keyframe(64, 48, profile=2, bit_depth=10),
+              _vp9_keyframe(64, 48)]
+    keys = [False, False, True, True]
+    mkv = mkv_demux._mux_mkv(frames, 64, 48, "V_VP9", None, keys, 33, 8, "webm")
+    entry = mp4_demux._visual_sample_entry(b"vp09", 64, 48, 24)
+    mp4 = mp4_demux._mux_mp4(frames, 64, 48, entry, (30, 1), 8, keys)
+    for blob, fmt in [(mkv, "mkv"), (mp4, "mp4")]:
+        p = media_probe.probe_bytes(blob)
+        assert (p["format"], p["codec"], p["bit_depth"]) == (fmt, "vp9", 10)
+    # no keyframe at all: no depth to report
+    only_inter = mkv_demux._mux_mkv([inter], 64, 48, "V_VP9", None, [False],
+                                    33, 8, "webm")
+    assert media_probe.probe_bytes(only_inter)["bit_depth"] is None
 
 
 def test_probe_ivf_vp8():
