@@ -14,85 +14,51 @@ band both dimensions:
 
 Probe rows explode 3×3 = 9×, build side stays 1× — a bounded-fanout equi-join
 Catalyst can hash/sort-merge and AQE can skew-split, instead of a cartesian
-with a residual filter. The exact predicate is re-applied as a residual.
+with a residual filter. The exact predicate (`within_tolerance`) is
+re-applied as a residual.
+
+The tolerance is FIXED (±1 cent, ±5 days) because the band keys are: the
+±1-cent probe fan-out and the width-6 day buckets guarantee every pair
+within this tolerance meets in the equi-join — a wider tolerance applied
+only in the residual would silently MISS pairs the bands never co-locate
+(the old tunable tol_cents/window_days parameters were exactly that trap,
+and no caller used them).
+
+Every key is a Spark SQL expression string, defined once here and placed
+into the plan by the callers' own `selectExpr`/`where` projections: an
+operation over expression text costs a handful of Python→JVM round trips
+at plan-build time, where the same expression built from `F.*` Column
+calls costs one or more per node. `CENTS`/`DAY` read the columns `amount`
+and `dateKey`; `PROBES` reads an already-keyed row's `_cents` and `_day`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+OFFSETS = (-1, 0, 1)
 
-OFFSETS = [-1, 0, 1]
-
-
-def _day(datekey: Column) -> Column:
-    # try_to_date: '' dateKeys (unparseable dates, G4 fallback) → null day →
-    # the row never matches any band, mirroring the reference's early return
-    # (transfer_pairing.py:76-77: no datekey → no pairing)
-    return F.datediff(F.try_to_date(datekey, "yyyyMMdd"), F.lit("1970-01-01"))
+CENTS = "CAST(round(abs(amount) * 100) AS BIGINT)"
+# try_to_date: '' dateKeys (unparseable dates, G4 fallback) → null day →
+# the row never matches any band, mirroring the reference's early return
+# (transfer_pairing.py:76-77: no datekey → no pairing)
+DAY = "datediff(try_to_date(dateKey, 'yyyyMMdd'), '1970-01-01')"
 
 
-def with_build_keys(df: DataFrame, amount="amount", datekey="dateKey") -> DataFrame:
-    """Build side: exact (cents, bucket) keys, 1 row per input row."""
-    return (
-        df.withColumn("_cents", F.round(F.abs(F.col(amount)) * 100).cast("long"))
-        .withColumn("_day", _day(F.col(datekey)))
-        .withColumn("_bucket", F.floor(F.col("_day") / 6).cast("long"))
-    )
+def bucket(day: str) -> str:
+    """The width-6 date bucket of the day expression `day`."""
+    return f"CAST(floor({day} / 6) AS BIGINT)"
 
 
-def with_probe_keys(df: DataFrame, amount="amount", datekey="dateKey") -> DataFrame:
-    """Probe side: 9 fanned-out (cents±δ, bucket±δ) keys per row."""
-    pairs = F.array(
-        *[
-            F.struct(F.lit(dc).alias("dc"), F.lit(db).alias("db"))
-            for dc in OFFSETS
-            for db in OFFSETS
-        ]
-    )
-    base = with_build_keys(df, amount, datekey)
-    return (
-        base.withColumn("_probe", F.explode(pairs))
-        .withColumn("_cents_p", F.col("_cents") + F.col("_probe.dc"))
-        .withColumn("_bucket_p", F.col("_bucket") + F.col("_probe.db"))
-        .drop("_probe")
-    )
+# the 9-way probe fan-out of a row carrying (_cents, _day): a generator
+# emitting one row per (cents±δ, bucket±δ) band, as columns _cents_p and
+# _bucket_p
+PROBES = "inline(array({}))".format(", ".join(
+    f"named_struct('_cents_p', _cents + ({dc}), '_bucket_p', {bucket('_day')} + ({db}))"
+    for dc in OFFSETS
+    for db in OFFSETS
+))
 
 
-def fan_group_probe(df: DataFrame, cents: str = "_cents", day: str = "_day") -> DataFrame:
-    """Probe fan-out for rows already carrying exact (cents, day) keys —
-    the group-level twin of with_probe_keys for pre-aggregated sides
-    (operators/pairing.py collapses each side to one representative row
-    per (cents, day) group before the banded join; the fan-out then costs
-    9 rows per GROUP, not per transaction)."""
-    pairs = F.array(
-        *[
-            F.struct(F.lit(dc).alias("dc"), F.lit(db).alias("db"))
-            for dc in OFFSETS
-            for db in OFFSETS
-        ]
-    )
-    return (
-        df.withColumn("_bucket", F.floor(F.col(day) / 6).cast("long"))
-        .withColumn("_probe", F.explode(pairs))
-        .withColumn("_cents_p", F.col(cents) + F.col("_probe.dc"))
-        .withColumn("_bucket_p", F.col("_bucket") + F.col("_probe.db"))
-        .drop("_probe")
-    )
-
-
-def residual(
-    a_amount: Column, a_day: Column, b_amount: Column, b_day: Column,
-) -> Column:
-    """Exact tolerance predicate re-applied after the banded equi-join.
-
-    The tolerance is FIXED (±1 cent, ±5 days) because the band keys are:
-    the ±1-cent probe fan-out and the width-6 day buckets guarantee every
-    pair within this tolerance meets in the equi-join — a wider tolerance
-    passed only here would silently MISS pairs the bands never co-locate
-    (the old tunable tol_cents/window_days parameters were exactly that
-    trap, and no caller used them)."""
-    return (
-        (F.abs(F.round(F.abs(a_amount) * 100) - F.round(F.abs(b_amount) * 100)) <= 1)
-        & (F.abs(a_day - b_day) <= 5)
-    )
+def within_tolerance(cents: str, day: str) -> str:
+    """The exact residual predicate between the probe row's (_cents, _day)
+    and the build row's (`cents`, `day`) columns."""
+    return f"abs(_cents - {cents}) <= 1 AND abs(_day - {day}) <= 5"

@@ -3,11 +3,17 @@
 Reference cascade (utils/classify_transaction.py:139-155): per row, user
 memory → global memory → structural (no-op) → LLM, with per-row Firestore
 reads and an OpenAI call per miss. Rebuild: two broadcast left joins + a
-native `when` chain; the LLM stage is replaced by the deterministic keyword
+native CASE chain; the LLM stage is replaced by the deterministic keyword
 ruleset (G15) pre-mapped onto the allowed chart via the reference's own
 _force_map_to_allowed (D4) at plan-build time — so the hot path has ZERO
 Python; even the vendor key (G1) is a native expression, parity-tested
 against the reference's Python `re` chain (core.vendor_key).
+
+The vendor key, the keyword chain and the cascade are Spark SQL text
+(`vendor_key_sql`, `keyword_account_sql`, placed with `F.expr`/
+`selectExpr`): building them costs a few Python→JVM round trips instead of
+one or more per expression node. Account names are runtime data and reach
+that text only through `_sql_string`.
 """
 
 from __future__ import annotations
@@ -26,7 +32,7 @@ _KEYWORD_TARGETS = {
 }
 # ...resolved through D4 once at import time with the reference's own
 # mapping function (utils/classify_transaction.py:15-37) for the default
-# chart; runtime charts resolve in keyword_account_col.
+# chart; runtime charts resolve in keyword_account_sql.
 _KEYWORD_ACCOUNTS = {
     kw: core.force_map_to_allowed(acct, core.ALLOWED_ACCOUNTS)
     for kw, acct in _KEYWORD_TARGETS.items()
@@ -34,8 +40,17 @@ _KEYWORD_ACCOUNTS = {
 FALLBACK_ACCOUNT = core.fallback_account(core.ALLOWED_ACCOUNTS)
 
 
-def vendor_key_col(memo_col):
-    """G1 vendor key as a NATIVE column expression — no Python stage.
+def _sql_string(value: str) -> str:
+    """`value` as a Spark SQL string literal. Account names are runtime
+    data (a caller's chart), so they reach expression text only through
+    this quoting: backslash first, then the quote, per the parser's
+    default escape rules."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def vendor_key_sql(memo: str) -> str:
+    r"""G1 vendor key of the column `memo` as a NATIVE SQL expression — no
+    Python stage.
 
     This was the fused transaction chain's only post-extraction Python
     stage (ArrowEvalPython): it broke whole-stage codegen between the
@@ -44,28 +59,29 @@ def vendor_key_col(memo_col):
     cost that showed up directly in the full-chain scaling floor.
 
     Parity with core.vendor_key (ref utils/clean_vendor_name.py:3-18),
-    clause by clause, using Java regex with embedded (?U) so \\s matches
-    Python's Unicode whitespace:
+    clause by clause, using Java regex with embedded (?U) so \s matches
+    Python's Unicode whitespace (the patterns are raw r'' literals, so the
+    SQL parser passes their backslashes through):
     - email strip: identical ASCII-class pattern;
-    - url strip: ``https?://\\S+`` with (?U) (Python \\S is Unicode);
-    - non-alpha → space: ``[^A-Za-z\\s]`` with (?U);
-    - Python's collapse+strip+split() ≡ split on ``(?U)\\s+`` with empty
+    - url strip: ``https?://\S+`` with (?U) (Python \S is Unicode);
+    - non-alpha → space: ``[^A-Za-z\s]`` with (?U);
+    - Python's collapse+strip+split() ≡ split on ``(?U)\s+`` with empty
       tokens dropped (the length>2 filter drops them);
     - tokens are pure A-Za-z runs by construction, so Python's
       ``w.isalpha()`` is vacuously true and ``.title().lower()`` over the
       joined key is just lower(join) — applied directly.
     """
-    s = F.coalesce(memo_col, F.lit(""))
-    s = F.regexp_replace(s, r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "")
-    s = F.regexp_replace(s, r"(?U)https?://\S+", "")
-    s = F.regexp_replace(s, r"(?U)[^A-Za-z\s]", " ")
-    words = F.filter(F.split(s, r"(?U)\s+"), lambda w: F.length(w) > 2)
-    key = F.lower(F.array_join(F.slice(words, 1, 5), " "))
-    return F.when(key == "", F.lit("unknown vendor")).otherwise(key)
+    s = f"coalesce({memo}, '')"
+    s = rf"regexp_replace({s}, r'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{{2,}}', '')"
+    s = rf"regexp_replace({s}, r'(?U)https?://\S+', '')"
+    s = rf"regexp_replace({s}, r'(?U)[^A-Za-z\s]', ' ')"
+    key = rf"lower(array_join(slice(filter(split({s}, r'(?U)\s+'), w -> length(w) > 2), 1, 5), ' '))"
+    return f"CASE WHEN {key} = '' THEN 'unknown vendor' ELSE {key} END"
 
 
-def keyword_account_col(memo_col, accounts: list[str] | None = None):
-    """G15 rules as a native when-chain (ref: (pyc) parse.classify_transaction_type).
+def keyword_account_sql(memo: str, accounts: list[str] | None = None) -> str:
+    """G15 rules over the column `memo` as a native CASE chain (ref: (pyc)
+    parse.classify_transaction_type); null when no keyword fires.
 
     Word-boundary 'fee' matching per the extraction_core re-spec. The
     keyword→account targets are literals, so a runtime-supplied chart is
@@ -81,19 +97,14 @@ def keyword_account_col(memo_col, accounts: list[str] | None = None):
             kw: core.force_map_to_allowed(acct, accounts)
             for kw, acct in _KEYWORD_TARGETS.items()
         }
-    lo = F.lower(F.coalesce(memo_col, F.lit("")))
+    lo = f"lower(coalesce({memo}, ''))"
     return (
-        F.when(lo.contains("interest"), F.lit(mapped["interest"]))
-        .when(lo.rlike(r"\bfees?\b"), F.lit(mapped["fee"]))
-        .when(
-            lo.contains("payment") | lo.contains("thank you"),
-            F.lit(mapped["payment"]),
-        )
-        .when(
-            lo.contains("credit") | lo.contains("refund"),
-            F.lit(mapped["credit"]),
-        )
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN contains({lo}, 'interest') THEN {_sql_string(mapped['interest'])}"
+        rf" WHEN {lo} RLIKE r'\bfees?\b' THEN {_sql_string(mapped['fee'])}"
+        f" WHEN contains({lo}, 'payment') OR contains({lo}, 'thank you')"
+        f" THEN {_sql_string(mapped['payment'])}"
+        f" WHEN contains({lo}, 'credit') OR contains({lo}, 'refund')"
+        f" THEN {_sql_string(mapped['credit'])} END"
     )
 
 
@@ -112,13 +123,8 @@ def _latest_per_key(memory: DataFrame, keys: list[str]) -> DataFrame:
     a seq/updated_at column. Dedup runs before the broadcast so duplicate
     key rows can never fan out transactions (double-counted journal legs)."""
     seq = next((c for c in _MEMORY_SEQ_COLS if c in memory.columns), None)
-    if seq is None:
-        return memory.groupBy(*keys).agg(F.max("account").alias("account"))
-    return memory.groupBy(*keys).agg(
-        F.max_by(
-            "account", F.struct(F.col(seq), F.col("account"))
-        ).alias("account")
-    )
+    latest = "max(account)" if seq is None else f"max_by(account, struct({seq}, account))"
+    return memory.groupBy(*keys).agg(F.expr(f"{latest} AS account"))
 
 
 def classify(
@@ -135,54 +141,44 @@ def classify(
     `accounts` overrides the chart of accounts (default: the reference's
     static chart); keyword targets and the fallback resolve against it.
     """
-    t = txns.withColumn("vendor_key", vendor_key_col(F.col("memo")))
-    # Absent memory tables join nothing: emit the null column directly
+    t = txns.withColumn("vendor_key", F.expr(vendor_key_sql("memo")))
+    # Absent memory tables join nothing: the cascade reads a null literal
     # instead of a broadcast join against an empty frame. Each skipped join
     # removes a broadcast exchange (a driver-side build + job) from the
     # critical path — pure fixed cost that a small-corpus run pays without
     # any benefit. Callers with real memory tables get the broadcast joins.
+    user = glob = "CAST(NULL AS STRING)"
     if user_memory is not None:
         u = F.broadcast(
-            _latest_per_key(user_memory, ["uid", "vendor_key"])
-            .select(
-                F.col("uid").alias("u_uid"),
-                F.col("vendor_key").alias("u_vk"),
-                F.col("account").alias("user_account"),
+            _latest_per_key(user_memory, ["uid", "vendor_key"]).selectExpr(
+                "uid AS u_uid", "vendor_key AS u_vk", "account AS user_account"
             )
         )
-        t = t.join(
-            u, (t["uid"] == u["u_uid"]) & (t["vendor_key"] == u["u_vk"]), "left"
-        ).drop("u_uid", "u_vk")
-    else:
-        t = t.withColumn("user_account", F.lit(None).cast("string"))
+        t = t.join(u, F.expr("uid = u_uid AND vendor_key = u_vk"), "left").drop(
+            "u_uid", "u_vk"
+        )
+        user = "user_account"
     if global_memory is not None:
         g = F.broadcast(
-            _latest_per_key(global_memory, ["vendor_key"]).select(
-                F.col("vendor_key").alias("g_vk"),
-                F.col("account").alias("global_account"),
+            _latest_per_key(global_memory, ["vendor_key"]).selectExpr(
+                "vendor_key AS g_vk", "account AS global_account"
             )
         )
-        t = t.join(g, t["vendor_key"] == g["g_vk"], "left").drop("g_vk")
-    else:
-        t = t.withColumn("global_account", F.lit(None).cast("string"))
+        t = t.join(g, F.expr("vendor_key = g_vk"), "left").drop("g_vk")
+        glob = "global_account"
 
-    kw = keyword_account_col(F.col("memo"), accounts)
+    kw = keyword_account_sql("memo", accounts)
     fb = (
         FALLBACK_ACCOUNT if accounts is None else core.fallback_account(accounts)
     )
-    account = F.coalesce(
-        F.col("user_account"), F.col("global_account"), kw, F.lit(fb)
-    )
-    source = (
-        F.when(F.col("user_account").isNotNull(), F.lit("memory:user"))
-        .when(F.col("global_account").isNotNull(), F.lit("memory:global"))
-        .otherwise(F.lit("ai"))  # deterministic LLM replacement (SURVEY §2.11 U1)
-    )
-    return (
-        t.withColumn("account", account)
-        .withColumn("classificationSource", source)
-        .drop("user_account", "global_account")
-    )
+    return t.withColumns({
+        "account": F.expr(f"coalesce({user}, {glob}, {kw}, {_sql_string(fb)})"),
+        # 'ai': the deterministic LLM replacement (SURVEY §2.11 U1)
+        "classificationSource": F.expr(
+            f"CASE WHEN {user} IS NOT NULL THEN 'memory:user'"
+            f" WHEN {glob} IS NOT NULL THEN 'memory:global' ELSE 'ai' END"
+        ),
+    }).drop("user_account", "global_account")
 
 
 def learning_aggregate(

@@ -3,7 +3,12 @@
 The reference computes displayAmount per row with a Firestore range probe per
 transaction (utils/display_amount.py:41-55 — an RPC per row). Here the probe
 becomes ONE banded self-join producing a has_bank_match flag, then G10 is a
-native `when` chain (whole-stage codegen, no Python).
+native CASE expression (whole-stage codegen, no Python).
+
+Column expressions are Spark SQL text (`DISPLAY_AMOUNT`, the banding keys
+of operators/banding.py) placed with `selectExpr`/`where`/`F.expr`, so
+building the plan costs a few Python→JVM round trips per operation
+instead of one or more per expression node.
 """
 
 from __future__ import annotations
@@ -12,6 +17,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators import banding
+
+_SOURCE = "lower(trim(coalesce(sourceType, '')))"
+_AMOUNT = "coalesce(amount, 0.0D)"
+# G10 (ref: utils/display_amount.py:57-79)
+DISPLAY_AMOUNT = f"""CASE
+    WHEN {_SOURCE} = 'bank' THEN
+        CASE WHEN {_AMOUNT} >= 0 THEN abs({_AMOUNT}) ELSE -abs({_AMOUNT}) END
+    WHEN {_SOURCE} = 'card' THEN
+        CASE WHEN {_AMOUNT} > 0 THEN abs({_AMOUNT})
+             WHEN has_bank_match THEN abs({_AMOUNT})
+             ELSE -abs({_AMOUNT}) END
+    ELSE {_AMOUNT} END"""
 
 
 def assign_source_type(txns: DataFrame, default: str = "bank") -> DataFrame:
@@ -47,10 +64,11 @@ def bank_match_flags(txns: DataFrame) -> DataFrame:
     uses it only there), so the probe side is pre-filtered — at scale this
     is a small fraction of rows.
     """
-    need = txns.filter((F.col("sourceType") == "card") & (F.col("amount") < 0))
-    probe = banding.with_probe_keys(
-        need.select("txn_id", "amount", "dateKey")
-    ).select("txn_id", "_cents_p", "_bucket_p", "_cents", "_day")
+    probe = (
+        txns.where("sourceType = 'card' AND amount < 0")
+        .selectExpr("txn_id", f"{banding.CENTS} AS _cents", f"{banding.DAY} AS _day")
+        .selectExpr("txn_id", banding.PROBES, "_cents", "_day")
+    )
 
     # aggregate the build side to DISTINCT (cents, bucket, day) keys — the
     # flag only asks "does ANY bank row match", so thousands of identical
@@ -58,28 +76,22 @@ def bank_match_flags(txns: DataFrame) -> DataFrame:
     # of fanning the join |probe-hits| x |duplicates| wide before the final
     # distinct. (The old txn_id != b_txn_id predicate was vacuous: the
     # probe side is card-only, the build side bank-only.)
-    bank = banding.with_build_keys(
-        txns.filter(F.col("sourceType") == "bank").select("txn_id", "amount", "dateKey")
-    ).select(
-        F.col("_cents").alias("b_cents"),
-        F.col("_day").alias("b_day"),
-        F.col("_bucket").alias("b_bucket"),
-    ).distinct()
+    bank = (
+        txns.where("sourceType = 'bank'")
+        .selectExpr(f"{banding.CENTS} AS b_cents", f"{banding.DAY} AS b_day")
+        # b_bucket over b_day in its own projection: with DAY repeated in
+        # one projection the planner sizes this side differently and the
+        # broadcast join builds on the bank side instead of the probe side
+        .selectExpr("*", f"{banding.bucket('b_day')} AS b_bucket")
+        .distinct()
+    )
 
     return (
-        probe.join(
-            bank,
-            (probe["_cents_p"] == bank["b_cents"])
-            & (probe["_bucket_p"] == bank["b_bucket"]),
-            "inner",
-        )
-        .filter(
-            (F.abs(F.col("_cents") - F.col("b_cents")) <= 1)
-            & (F.abs(F.col("_day") - F.col("b_day")) <= 5)
-        )
-        .select("txn_id")
+        probe.join(bank, F.expr("_cents_p = b_cents AND _bucket_p = b_bucket"), "inner")
+        .where(banding.within_tolerance("b_cents", "b_day"))
+        .selectExpr("txn_id")
         .distinct()
-        .withColumn("has_bank_match", F.lit(True))
+        .selectExpr("txn_id", "true AS has_bank_match")
     )
 
 
@@ -96,23 +108,10 @@ def with_bank_match(txns: DataFrame) -> DataFrame:
     # collect+rebroadcast that costs the same at every cluster size (pure
     # Amdahl fraction) and is unbounded on adversarial data at 100 TB.
     return txns.join(matched, "txn_id", "left").withColumn(
-        "has_bank_match", F.coalesce(F.col("has_bank_match"), F.lit(False))
+        "has_bank_match", F.expr("coalesce(has_bank_match, false)")
     )
 
 
 def with_display_amount(txns: DataFrame) -> DataFrame:
     """G10 as a native expression (ref: utils/display_amount.py:57-79)."""
-    st = F.lower(F.trim(F.coalesce(F.col("sourceType"), F.lit(""))))
-    amt = F.coalesce(F.col("amount"), F.lit(0.0))
-    abs_amt = F.abs(amt)
-    disp = (
-        F.when(st == "bank", F.when(amt >= 0, abs_amt).otherwise(-abs_amt))
-        .when(
-            st == "card",
-            F.when(amt > 0, abs_amt)
-            .when(F.col("has_bank_match"), abs_amt)
-            .otherwise(-abs_amt),
-        )
-        .otherwise(amt)
-    )
-    return txns.withColumn("displayAmount", disp)
+    return txns.withColumn("displayAmount", F.expr(DISPLAY_AMOUNT))

@@ -30,11 +30,16 @@ row → ONE min_by aggregate computes both argmins in a single pass over the
 join output → unordered-pair regroup keeps pairs where both sides chose
 each other. No cartesian, no window sort over the candidate fan-out, no
 per-band quadratic blow-up under repeated amounts, no Python.
+
+Every operator's expressions are Spark SQL text (`selectExpr`, `where`,
+`F.expr` inside `agg`/`groupBy`; the band keys come from banding.py), so
+the pairing subtree costs a few Python→JVM round trips per operation at
+plan-build time rather than one or more per expression node.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators import banding
@@ -77,61 +82,42 @@ def _banded_candidates(txns: DataFrame) -> DataFrame:
     Each group pair may still appear up to 3x (one per matching probe
     band); duplicates carry identical ordering structs, so the downstream
     argmin is unaffected and the dedupe shuffle is skipped."""
-    leaders = (
-        banding.with_build_keys(
-            txns.filter(
-                (F.col("sourceType") == "bank") & (F.col("amount") >= 0)
-            ).select(F.col("txn_id").alias("l_id"), "amount", "dateKey")
-        )
+    keys = f"{banding.CENTS} AS _cents", f"{banding.DAY} AS _day"
+    probes = (
+        txns.where("sourceType = 'bank' AND amount >= 0")
+        .selectExpr("txn_id AS l_id", *keys)
         .groupBy("_cents", "_day")
-        .agg(F.min("l_id").alias("l_id"))
-    )
-    probes = banding.fan_group_probe(leaders).select(
-        "l_id", "_cents", "_day", "_cents_p", "_bucket_p"
+        .agg(F.expr("min(l_id) AS l_id"))
+        .selectExpr("l_id", "_cents", "_day", banding.PROBES)
     )
 
     shadows = (
-        banding.with_build_keys(
-            txns.filter(
-                (F.col("amount") < 0)
-                & F.col("sourceType").isin("card", "loan", "bank")
-            ).select(
-                F.col("txn_id").alias("s_id"),
-                F.col("sourceType").alias("s_type"),
-                "amount",
-                "dateKey",
-            )
-        )
+        txns.where("amount < 0 AND sourceType IN ('card', 'loan', 'bank')")
+        .selectExpr("txn_id AS s_id", "sourceType AS s_type", *keys)
         .groupBy("_cents", "_day")
         # representative = min s_id; struct min is lexicographic and s_id
         # is unique, so this is (min s_id, its own sourceType)
-        .agg(F.min(F.struct("s_id", "s_type")).alias("_m"))
-        .select(
-            F.col("_cents").alias("s_cents"),
-            F.col("_day").alias("s_day"),
-            F.floor(F.col("_day") / 6).cast("long").alias("s_bucket"),
-            F.col("_m.s_id").alias("s_id"),
-            F.col("_m.s_type").alias("s_type"),
+        .agg(F.expr("min(struct(s_id, s_type)) AS _m"))
+        .selectExpr(
+            "_cents AS s_cents",
+            "_day AS s_day",
+            f"{banding.bucket('_day')} AS s_bucket",
+            "_m.s_id AS s_id",
+            "_m.s_type AS s_type",
         )
     )
 
     return (
         probes.join(
-            shadows,
-            (F.col("_cents_p") == F.col("s_cents"))
-            & (F.col("_bucket_p") == F.col("s_bucket")),
-            "inner",
+            shadows, F.expr("_cents_p = s_cents AND _bucket_p = s_bucket"), "inner"
         )
-        .filter(
-            (F.abs(F.col("_cents") - F.col("s_cents")) <= 1)
-            & (F.abs(F.col("_day") - F.col("s_day")) <= 5)
-        )
-        .select(
+        .where(banding.within_tolerance("s_cents", "s_day"))
+        .selectExpr(
             "l_id",
             "s_id",
             "s_type",
-            F.abs(F.col("_day") - F.col("s_day")).alias("day_dist"),
-            F.abs(F.col("_cents") - F.col("s_cents")).alias("cents_dist"),
+            "abs(_day - s_day) AS day_dist",
+            "abs(_cents - s_cents) AS cents_dist",
         )
     )
 
@@ -166,33 +152,17 @@ def matched_pairs(txns: DataFrame) -> DataFrame:
     either argmin — the pre-aggregation dropDuplicates shuffle is skipped.
     """
     base = _banded_candidates(txns)
-    both = base.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("L").alias("role"),
-                    F.col("l_id").alias("key"),
-                    F.col("s_id").alias("other"),
-                    F.col("s_type").alias("s_type"),
-                    F.col("day_dist").alias("day_dist"),
-                    F.col("cents_dist").alias("cents_dist"),
-                ),
-                F.struct(
-                    F.lit("S").alias("role"),
-                    F.col("s_id").alias("key"),
-                    F.col("l_id").alias("other"),
-                    F.col("s_type").alias("s_type"),
-                    F.col("day_dist").alias("day_dist"),
-                    F.col("cents_dist").alias("cents_dist"),
-                ),
-            )
-        ).alias("c")
-    ).select("c.*")
+    both = base.selectExpr(
+        "inline(array("
+        "named_struct('role', 'L', 'key', l_id, 'other', s_id, 's_type', s_type,"
+        " 'day_dist', day_dist, 'cents_dist', cents_dist),"
+        "named_struct('role', 'S', 'key', s_id, 'other', l_id, 's_type', s_type,"
+        " 'day_dist', day_dist, 'cents_dist', cents_dist)))"
+    )
     best = both.groupBy("role", "key").agg(
-        F.min_by(
-            F.struct("other", "s_type"),
-            F.struct("day_dist", "cents_dist", "other"),
-        ).alias("b")
+        F.expr(
+            "min_by(struct(other, s_type), struct(day_dist, cents_dist, other)) AS b"
+        )
     )
     # Mutuality without a self-join of `best`: leader ids and shadow ids are
     # disjoint (amount >= 0 vs < 0), so an unordered pair {a, b} receives at
@@ -201,29 +171,23 @@ def matched_pairs(txns: DataFrame) -> DataFrame:
     # exchange on the pair key replaces the join of the two argmin branches.
     return (
         best.groupBy(
-            F.least("key", F.col("b.other")).alias("p_lo"),
-            F.greatest("key", F.col("b.other")).alias("p_hi"),
+            F.expr("least(key, b.other) AS p_lo"),
+            F.expr("greatest(key, b.other) AS p_hi"),
         )
         .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.when(F.col("role") == "L", F.col("key"))).alias("l_id"),
-            F.max(F.when(F.col("role") == "L", F.col("b.other"))).alias("s_id"),
-            F.max(F.when(F.col("role") == "L", F.col("b.s_type"))).alias("s_type"),
+            F.expr("count(1) AS n"),
+            F.expr("max(CASE WHEN role = 'L' THEN key END) AS l_id"),
+            F.expr("max(CASE WHEN role = 'L' THEN b.other END) AS s_id"),
+            F.expr("max(CASE WHEN role = 'L' THEN b.s_type END) AS s_type"),
         )
-        .filter(F.col("n") == 2)
-        .select(
+        .where("n = 2")
+        .selectExpr(
             "l_id",
             "s_id",
-            F.concat(
-                F.lit("pair:"),
-                F.least("l_id", "s_id"),
-                F.lit(":"),
-                F.greatest("l_id", "s_id"),
-            ).alias("pairId"),
-            F.when(F.col("s_type") == "card", F.lit("card_payment"))
-            .when(F.col("s_type") == "loan", F.lit("loan_payment"))
-            .otherwise(F.lit("bank_transfer"))
-            .alias("pairReason"),
+            "concat('pair:', least(l_id, s_id), ':', greatest(l_id, s_id)) AS pairId",
+            "CASE WHEN s_type = 'card' THEN 'card_payment'"
+            " WHEN s_type = 'loan' THEN 'loan_payment'"
+            " ELSE 'bank_transfer' END AS pairReason",
         )
     )
 
@@ -240,23 +204,10 @@ def pair_decorations(txns: DataFrame) -> DataFrame:
     # subtree once per branch (only the last exchange is AQE-reusable);
     # exploding each pair into its leader and shadow legs keeps the
     # decoration build a single linear plan.
-    return pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("l_id").alias("txn_id"),
-                    F.col("pairId").alias("pairId"),
-                    F.lit(True).alias("eventLeader"),
-                    F.col("s_id").alias("pairedWith"),
-                    F.col("pairReason").alias("pairReason"),
-                ),
-                F.struct(
-                    F.col("s_id").alias("txn_id"),
-                    F.col("pairId").alias("pairId"),
-                    F.lit(False).alias("eventLeader"),
-                    F.col("l_id").alias("pairedWith"),
-                    F.lit("shadow").alias("pairReason"),
-                ),
-            )
-        ).alias("d")
-    ).select("d.*")
+    return pairs.selectExpr(
+        "inline(array("
+        "named_struct('txn_id', l_id, 'pairId', pairId, 'eventLeader', true,"
+        " 'pairedWith', s_id, 'pairReason', pairReason),"
+        "named_struct('txn_id', s_id, 'pairId', pairId, 'eventLeader', false,"
+        " 'pairedWith', l_id, 'pairReason', 'shadow')))"
+    )

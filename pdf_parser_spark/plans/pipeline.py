@@ -75,6 +75,18 @@ def transactions_pipeline(
     those stage boundaries. At 10^12 rows the same fusion halves the
     widest shuffle in the chain.
 
+    Every tail expression is Spark SQL text (operators/banding,
+    normalize, pairing, classify): the plan is built in this Python
+    process after the barrier fills, while executors wait, and an
+    operation over expression text costs a handful of Python→JVM round
+    trips where the same expressions built from `F.*` Column calls cost
+    thousands per pass.
+    The barrier itself must never be bound to a `{t}` placeholder of
+    SparkSession.sql's DataFrame formatter: the formatter registers a temp
+    view and drops it afterwards, and dropping the view UNCACHES every
+    cache entry with the same plan — every branch would re-run extraction
+    (tests/test_pipeline_spark guards the 5 cached barrier reads).
+
     Storage level is SERIALIZED memory-and-disk, not the deserialized
     default: the barriers hold wide string-heavy rows (memo/url/source), and
     deserialized JVM string objects inflate 3-5× — at millions of rows per
@@ -121,14 +133,14 @@ def transactions_pipeline(
     out = (
         base.join(flags, "txn_id", "left")
         .join(decorations, "txn_id", "left")
-        .withColumn("has_bank_match", F.coalesce(F.col("has_bank_match"), F.lit(False)))
+        .withColumn("has_bank_match", F.expr("coalesce(has_bank_match, false)"))
     )
     out = normalize_op.with_display_amount(out)
     out = classify_op.classify(out, user_memory, global_memory)
     # restore the FIXTURES.md F3 column order (pair legs last)
-    pair_cols = ["pairId", "eventLeader", "pairedWith", "pairReason"]
-    return out.select(
-        *[c for c in out.columns if c not in pair_cols], *pair_cols
+    pair_cols = pairing_op.PAIR_COLS
+    return out.selectExpr(
+        *[f"`{c}`" for c in out.columns if c not in pair_cols], *pair_cols
     )
 
 

@@ -131,20 +131,33 @@ def test_classification_memory_precedence(spark, txns):
 
 def test_classify_runtime_chart(spark):
     """A runtime-supplied chart resolves through the same D4 cascade as the
-    default chart — keyword targets and fallback land on the custom list."""
+    default chart — keyword targets and fallback land on the custom list,
+    byte-equal, also when the names carry SQL string-literal metacharacters
+    (they reach the plan as literals in expression text)."""
     from pdf_parser_spark.operators import classify as classify_op
 
-    chart = ["100 - Interest Paid", "900 - Uncategorized Expense", "200 - Fees"]
+    charts = [
+        ["100 - Interest Paid", "900 - Uncategorized Expense", "200 - Fees"],
+        ["300 - Owner's Draw", "400 - A\\B Fees", "900 - Uncategorized \\'Other\\'"],
+    ]
+    targets = {
+        "interest charge": "7100 - Interest Expense",
+        "monthly fee": "7110 - Loan Fees",
+        "totally unknown merchant": None,
+    }
     txns = spark.createDataFrame(
-        [("u1", "interest charge"), ("u1", "totally unknown merchant")],
-        "uid string, memo string",
+        [("u1", memo) for memo in targets], "uid string, memo string"
     )
-    out = {r["memo"]: r["account"]
-           for r in classify_op.classify(txns, accounts=chart).collect()}
-    assert out["interest charge"] == core.force_map_to_allowed(
-        "7100 - Interest Expense", chart
-    )
-    assert out["totally unknown merchant"] == core.fallback_account(chart)
+    for chart in charts:
+        out = {r["memo"]: r["account"]
+               for r in classify_op.classify(txns, accounts=chart).collect()}
+        for memo, target in targets.items():
+            want = (core.force_map_to_allowed(target, chart) if target
+                    else core.fallback_account(chart))
+            assert out[memo] == want, (chart, memo)
+    # every hostile name came back through the plan: two keyword targets
+    # and the fallback
+    assert set(out.values()) == set(charts[1])
 
 
 def test_learning_aggregate_skewed_uids(spark):
@@ -302,6 +315,56 @@ def test_pairing_plan_single_join_subtree(spark):
     assert "Window" not in plan
 
 
+def _barrier_reads(plan) -> int:
+    """InMemoryRelation leaves of a logical plan that read the pipeline's
+    barrier (the only cached relation carrying sourceType)."""
+    if plan.nodeName() == "InMemoryRelation":
+        out = plan.output()
+        return int(any(out.apply(i).name() == "sourceType" for i in range(out.size())))
+    kids = plan.children()
+    return sum(_barrier_reads(kids.apply(i)) for i in range(kids.size()))
+
+
+def test_pipeline_reads_barrier_from_cache(pages_tiny):
+    """Every branch of the tail reads the ONE persisted barrier: the wide
+    join's base side, the flags probe and build sides, and pairing's
+    leaders and shadows — 5 cached reads, no re-run of extraction. Building
+    a branch through spark.sql's {t} DataFrame formatter drops the temp
+    view it registers, which uncaches every entry with the barrier's plan.
+
+    The input is filtered so that its plan differs from the `txns`
+    fixture's, whose cached output would otherwise stand in for the whole
+    pipeline."""
+    out = pipeline.transactions_pipeline(pages_tiny.where("html IS NOT NULL"))
+    assert _barrier_reads(out._jdf.queryExecution().withCachedData()) == 5
+
+
+def test_pipeline_plan_build_round_trips(pages_tiny, monkeypatch):
+    """Building the plan is a fixed Python-side cost per chain pass, paid
+    while every executor waits: the tail's expressions are SQL text, so a warm
+    transactions_pipeline call costs ~750–950 Python→JVM round trips
+    (py4j's release of garbage proxies adds up to ~200 of them); the same
+    chain built from F.* Column calls costs ~5,500–6,800."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    pipeline.transactions_pipeline(pages_tiny)
+    gc.collect()
+    sent = 0
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal sent
+        sent += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    pipeline.transactions_pipeline(pages_tiny)
+    monkeypatch.undo()
+    assert 0 < sent <= 1600, sent
+
+
 def test_pdf_magic_routes_regardless_of_url(spark):
     """PDF bytes at a non-.pdf url must take the PDF path (or fail into
     the funnel) — never be regex-parsed as HTML with parse_failed=False."""
@@ -381,7 +444,7 @@ def test_classify_memory_latest_wins_with_seq(spark, txns):
 
 
 def test_vendor_key_native_parity(spark):
-    """The native vendor_key_col must agree byte-for-byte with the Python
+    """The native vendor_key_sql must agree byte-for-byte with the Python
     reference twin (core.vendor_key) — it replaced the chain's only
     post-extraction Python stage, so its parity IS the byte-identity story
     for classification keys. Cases cover every clause: emails, urls,
@@ -410,7 +473,7 @@ def test_vendor_key_native_parity(spark):
     got = {
         r["memo"]: r["vk"]
         for r in df.select(
-            "memo", classify_op.vendor_key_col(F.col("memo")).alias("vk")
+            "memo", F.expr(classify_op.vendor_key_sql("memo")).alias("vk")
         ).collect()
     }
     for m in memos:
@@ -442,7 +505,7 @@ def test_vendor_key_native_parity_hypothesis(spark):
     # already excludes them
     df = spark.createDataFrame([(m,) for m in collected], "memo string")
     rows = df.select(
-        "memo", classify_op.vendor_key_col(F.col("memo")).alias("vk")
+        "memo", F.expr(classify_op.vendor_key_sql("memo")).alias("vk")
     ).collect()
     for r in rows:
         assert r["vk"] == core.vendor_key(r["memo"]), repr(r["memo"])
