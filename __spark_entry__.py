@@ -1441,10 +1441,10 @@ def r19_snapshot_log(spark, sf_dir):
     import tempfile
 
     from pdf_parser_spark.plans.snapshots import SnapshotTable
+    from pdf_parser_spark.sources.pages import bucket_of
 
     d = _t(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "n_chars",
-        F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int").alias("bucket"),
+        "doc_id", "lang", "n_chars", bucket_of("doc_id", 8).alias("bucket"),
     )
     t = SnapshotTable(
         spark, tempfile.mkdtemp(prefix="snaplog-"), stats_cols=("n_chars",)
@@ -1799,10 +1799,9 @@ def r31_snapshot_changes(spark, sf_dir):
     import tempfile
 
     from pdf_parser_spark.plans.snapshots import SnapshotTable
+    from pdf_parser_spark.sources.pages import bucket_of
 
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int")
-    )
+    d = _t(spark, sf_dir, "documents").withColumn("bucket", bucket_of("doc_id", 8))
     root = tempfile.mkdtemp(prefix="cdc-")
     try:
         t = SnapshotTable(spark, root, stats_cols=("doc_id",))

@@ -151,12 +151,12 @@ def _finish_line(page: int, cluster: list[tuple], char_w: float) -> Line:
 # ---------------------------------------------------------------------------
 
 
-def detect_columns(lines: list[Line], page_width: float = 800.0) -> dict[int, float]:
-    """Per page: x-split point if the page is two-column, else None.
+def detect_columns(lines: list[Line]) -> dict[int, float]:
+    """Per page: x-split point if the page is two-column (absent otherwise).
 
     A page is two-column when a vertical gutter (no line crosses it) separates
     two non-empty line populations. Deterministic gutter probe at midpoints of
-    the sorted distinct x-extents.
+    the sorted distinct x-extents; the result does not depend on line order.
     """
     splits: dict[int, float] = {}
     by_page: dict[int, list[Line]] = {}
@@ -185,16 +185,18 @@ def detect_columns(lines: list[Line], page_width: float = 800.0) -> dict[int, fl
     return splits
 
 
-def reading_order(lines: list[Line]) -> list[Line]:
-    """Reading-order sort: page asc → column (left first) → y desc → x asc."""
-    splits = detect_columns(lines)
+def column_of(ln: Line, splits: dict[int, float]) -> int:
+    """0 for the left (or only) column of the line's page, 1 for the right."""
+    split = splits.get(ln.page)
+    return 0 if split is None or ln.x1 <= split else 1
 
-    def key(ln: Line):
-        split = splits.get(ln.page)
-        col = 0 if split is None or ln.x1 <= split else 1
-        return (ln.page, col, -ln.y, ln.x0)
 
-    return sorted(lines, key=key)
+def reading_order(lines: list[Line], splits: dict[int, float]) -> list[Line]:
+    """Reading-order sort: page asc → column (left first) → y desc → x asc.
+
+    ``splits`` is ``detect_columns(lines)``.
+    """
+    return sorted(lines, key=lambda ln: (ln.page, column_of(ln, splits), -ln.y, ln.x0))
 
 
 # ---------------------------------------------------------------------------
@@ -202,15 +204,13 @@ def reading_order(lines: list[Line]) -> list[Line]:
 # ---------------------------------------------------------------------------
 
 
-def group_lines_to_blocks(ordered: list[Line]) -> list[LayoutBlock]:
-    """Vertically-adjacent same-column lines form a block (pdfminer textbox)."""
-    splits = detect_columns(ordered)
+def group_lines_to_blocks(ordered: list[Line], splits: dict[int, float]) -> list[LayoutBlock]:
+    """Vertically-adjacent same-column lines form a block (pdfminer textbox).
+
+    ``splits`` is ``detect_columns(ordered)``.
+    """
     blocks: list[LayoutBlock] = []
     cur: list[Line] = []
-
-    def col_of(ln: Line) -> int:
-        split = splits.get(ln.page)
-        return 0 if split is None or ln.x1 <= split else 1
 
     def flush() -> None:
         if not cur:
@@ -218,7 +218,7 @@ def group_lines_to_blocks(ordered: list[Line]) -> list[LayoutBlock]:
         blocks.append(
             LayoutBlock(
                 page=cur[0].page,
-                column=col_of(cur[0]),
+                column=column_of(cur[0], splits),
                 y_top=cur[0].y,
                 y_bottom=cur[-1].y,
                 x0=min(ln.x0 for ln in cur),
@@ -233,7 +233,7 @@ def group_lines_to_blocks(ordered: list[Line]) -> list[LayoutBlock]:
     for ln in ordered:
         if prev is not None and (
             ln.page != prev.page
-            or col_of(ln) != col_of(prev)
+            or column_of(ln, splits) != column_of(prev, splits)
             or (prev.y - ln.y) > BLOCK_GAP_FACTOR * LINE_H
         ):
             flush()
@@ -292,35 +292,33 @@ def extract_layout_text(
     """
     if not chars:
         return ("", [], []) if return_pages else ("", [])
-    lines = reading_order(group_chars_to_lines(chars))
+    lines = group_chars_to_lines(chars)
     splits = detect_columns(lines)
-
-    def col_of(ln: Line) -> int:
-        split = splits.get(ln.page)
-        return 0 if split is None or ln.x1 <= split else 1
+    lines = reading_order(lines, splits)
 
     # column text origin = leftmost line start in that (page, column);
     # leading indentation is reconstructed from x0 relative to it
     origins: dict[tuple[int, int], float] = {}
     for ln in lines:
-        key = (ln.page, col_of(ln))
+        key = (ln.page, column_of(ln, splits))
         origins[key] = min(origins.get(key, ln.x0), ln.x0)
 
     out: list[str] = []
     page_of_line: list[int] = []
     prev: Line | None = None
     for ln in lines:
-        if prev is not None and ln.page == prev.page and col_of(ln) == col_of(prev):
+        col = column_of(ln, splits)
+        if prev is not None and ln.page == prev.page and col == column_of(prev, splits):
             n_blank = max(0, round((prev.y - ln.y) / LINE_H) - 1)
             out.extend([""] * n_blank)
             page_of_line.extend([ln.page] * n_blank)
-        indent = max(0, round((ln.x0 - origins[(ln.page, col_of(ln))]) / ln.char_w))
+        indent = max(0, round((ln.x0 - origins[(ln.page, col)]) / ln.char_w))
         out.append(" " * indent + ln.text)
         page_of_line.append(ln.page)
         prev = ln
     text = "\n".join(out)
 
-    blocks = group_lines_to_blocks(lines)
+    blocks = group_lines_to_blocks(lines, splits)
     spans = [
         {
             "page": b.page,

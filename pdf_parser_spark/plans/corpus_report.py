@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators import sketches as sk
 from pdf_parser_spark.plans.snapshots import SnapshotTable
+from pdf_parser_spark.sources.pages import bucket_of
 
 __all__ = ["CorpusRollup"]
 
@@ -124,9 +125,7 @@ class CorpusRollup:
                 ).alias("hist"),
             )
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64(g), F.lit(self.n_buckets)).cast("int")
-            )
+            .withColumn("bucket", bucket_of(g, self.n_buckets))
         )
 
     def ingested_batches(self) -> set[int]:

@@ -54,6 +54,7 @@ from pdf_parser_spark.operators.dedupe import (
     minhash_signature,
 )
 from pdf_parser_spark.plans.snapshots import SnapshotTable, pin_meta
+from pdf_parser_spark.sources.pages import bucket_of
 
 # bound on the driver-side manifest Bloom probe (see dedup_batch): batches
 # whose distinct band-hash count exceeds this fall back to the unpruned
@@ -272,13 +273,9 @@ class IncrementalNearDup:
         )
         surv_bands = survivors.select(
             "doc_id", F.posexplode("bands").alias("band", "band_hash")
-        ).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("band_hash"), F.lit(self.n_buckets)).cast("int"),
-        )
+        ).withColumn("bucket", bucket_of("band_hash", self.n_buckets))
         surv_sigs = survivors.select("doc_id", "sig").withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int"),
+            "bucket", bucket_of("doc_id", self.n_buckets)
         )
         self._append_once(self.bands, surv_bands, batch_id)
         self._append_once(self.sigs, surv_sigs, batch_id)

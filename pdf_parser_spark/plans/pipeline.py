@@ -124,12 +124,8 @@ def transactions_pipeline(
     base.count()
     flags = normalize_op.bank_match_flags(base)
     decorations = pairing_op.pair_decorations(base)
-    # Joins back-to-back, scalar decorations after: the vendor-key pandas
-    # UDF (ArrowEvalPython) does not propagate its child's output
-    # partitioning, so placing it between the joins re-exchanges the wide
-    # table; after both joins it is a plain per-row projection. It also
-    # keeps the wide exchange narrower — account/vendor columns are
-    # computed post-shuffle.
+    # Joins back-to-back, scalar decorations after: the wide exchange stays
+    # narrower — account/vendor columns are computed post-shuffle.
     out = (
         base.join(flags, "txn_id", "left")
         .join(decorations, "txn_id", "left")

@@ -19,7 +19,7 @@ to parquet target file sizing, not hand-rolled chunking).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 N_BUCKETS_DEFAULT = 64
@@ -37,14 +37,20 @@ def read_pages_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def bucket_of(key: str | Column, n_buckets: int) -> Column:
+    """Iceberg bucket(N, key) transform: int pmod(xxhash64(key), N) — the
+    one definition every bucketed table of the package is laid out by."""
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, col: str = "url", n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
-    """Iceberg bucket(N, url) transform: pmod(xxhash64(url), N).
+    """Iceberg bucket(N, url) transform as the ``bucket`` column.
 
     Key by url hash, never by host — Common-Crawl hosts are Zipfian and a
     host-keyed layout would put 30% of bytes in one partition (the fixture
     corpus reproduces exactly that skew on host0).
     """
-    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int"))
+    return df.withColumn("bucket", bucket_of(col, n_buckets))
 
 
 def write_table(

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from pdf_parser_spark.plans.snapshots import SnapshotTable
+from pdf_parser_spark.sources.pages import bucket_of
 
 CHANGE_RE = re.compile(r"changes-(\d+)\.parquet$")
 
@@ -128,7 +129,7 @@ class IncrementalSync:
         batch = self.spark.read.parquet(*[p for _, p in pending])
         stored = self.store.read(base) if base else None
         merged = apply_changes(stored, batch, self.key).withColumn(
-            _BUCKET, F.pmod(F.xxhash64(self.key), F.lit(_N_BUCKETS)).cast("int")
+            _BUCKET, bucket_of(self.key, _N_BUCKETS)
         )
         self.store.overwrite_partitions(merged, base=base, ids=[pending[-1][0]])
         return {"applied_files": len(pending), "cursor": self.cursor()}

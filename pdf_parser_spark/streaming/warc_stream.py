@@ -88,15 +88,10 @@ class WarcIngest:
             return  # replayed batch: the snapshot log already has it
         if self.transform is not None:
             df = self.transform(df)
+        # one Spark action per batch, the write: row counts come from the
+        # snapshot's parquet footers (SnapshotTable.snapshots().n_rows)
         out = pages_src.with_bucket(df, "url", self.n_buckets)
-        out.persist()
-        try:
-            n = out.count()
-            self.table.append(out, summary={"pages": int(n)}, ids=[batch_id])
-        finally:
-            # without the finally, a failed transform/append pins the
-            # cached raw-html batch in executor storage for the session
-            out.unpersist()
+        self.table.append(out, ids=[batch_id])
 
     def run_available_now(self, timeout_s: float = 120.0) -> dict:
         """Drain everything currently in the directory, then stop.

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from pdf_parser_spark import fixtures
+from pdf_parser_spark import fixtures, pdf_layout
 from pdf_parser_spark.pdf_layout import (
     decode_pdf_chars,
     detect_columns,
@@ -54,9 +54,10 @@ def test_multi_page_round_trip():
 def test_reading_order_two_columns():
     text = "\n".join(f"L{i}" for i in range(10))
     chars = synthesize_char_boxes(text, two_column=True)
-    lines = reading_order(group_chars_to_lines(chars))
-    assert [ln.text for ln in lines] == [f"L{i}" for i in range(10)]
-    assert detect_columns(lines)  # split detected on page 0
+    lines = group_chars_to_lines(chars)
+    splits = detect_columns(lines)
+    assert splits  # split detected on page 0
+    assert [ln.text for ln in reading_order(lines, splits)] == [f"L{i}" for i in range(10)]
 
 
 def test_table_region_detection():
@@ -65,8 +66,9 @@ def test_table_region_detection():
         "01/05/2024  COFFEE             4.50\n"
         "01/06/2024  BOOKS              12.00"
     )
-    lines = reading_order(group_chars_to_lines(synthesize_char_boxes(text)))
-    blocks = group_lines_to_blocks(lines)
+    lines = group_chars_to_lines(synthesize_char_boxes(text))
+    splits = detect_columns(lines)
+    blocks = group_lines_to_blocks(reading_order(lines, splits), splits)
     assert any(b.region == "table" for b in blocks)
 
 
@@ -76,9 +78,22 @@ def test_prose_not_table():
         "with no aligned columns at all in it\n"
         "just flowing prose across the lines"
     )
-    lines = reading_order(group_chars_to_lines(synthesize_char_boxes(text)))
-    blocks = group_lines_to_blocks(lines)
+    lines = group_chars_to_lines(synthesize_char_boxes(text))
+    splits = detect_columns(lines)
+    blocks = group_lines_to_blocks(reading_order(lines, splits), splits)
     assert all(b.region == "text" for b in blocks)
+
+
+def test_columns_detected_once_per_document(monkeypatch):
+    # reading order, indentation origins and block grouping share one split
+    calls = []
+    detect = pdf_layout.detect_columns
+    monkeypatch.setattr(pdf_layout, "detect_columns", lambda lines: calls.append(1) or detect(lines))
+    text = "\n".join(f"line number {i} of the column test" for i in range(20))
+    out, spans = extract_layout_text(synthesize_char_boxes(text, two_column=True))
+    assert out == text
+    assert {s["column"] for s in spans} == {0, 1}
+    assert len(calls) == 1
 
 
 def test_block_spans_metadata():
