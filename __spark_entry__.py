@@ -1028,7 +1028,8 @@ def r07_winnowing(spark, sf_dir):
 
 
 def r08_media_features(spark, sf_dir):
-    """Multimodal plumbing: binary media table → decode(stub) → feature vectors.
+    """Multimodal features: binary media table (every minted format) →
+    real decode → moment-profile feature vectors.
 
     The array<double> feature is scalarized (md5 of its CSV form) for the
     driver canonicalizer; pytest covers the array-typed values."""
@@ -1036,7 +1037,7 @@ def r08_media_features(spark, sf_dir):
     from pdf_parser_spark.operators import multimodal as mm
 
     media = mm.media_table(spark, n_rows=96, partitions=8)
-    out = mm.extract_features(media, fake=True)
+    out = mm.extract_features(media)
     return out.select(
         "media_id",
         "decoded",
@@ -1047,12 +1048,13 @@ def r08_media_features(spark, sf_dir):
 
 
 def r09_frame_sample(spark, sf_dir):
-    """Video frame-sampling fan-out (metadata-driven explode before decode)."""
+    """Video frame-sampling fan-out: metadata-driven frame count, each
+    sampled frame decoded from the real video payload."""
     _ship_package(spark)
     from pdf_parser_spark.operators import multimodal as mm
 
     media = mm.media_table(spark, n_rows=96, partitions=8)
-    return mm.sample_frames(media, every_ms=1000, fake=True)
+    return mm.sample_frames(media, every_ms=1000)
 
 
 def r10_cosine_neardup_lsh(spark, sf_dir):
@@ -1613,9 +1615,9 @@ def r25_image_phash_neardup(spark, sf_dir):
     _ship_package(spark)
     from pdf_parser_spark.operators import multimodal as mm
 
-    media = mm.media_table(spark, n_rows=96, partitions=8, real_payloads=True)
-    sig = mm.image_phash(media, fake=False)
-    pairs = mm.image_near_duplicates(media, max_hamming=16, fake=False)
+    media = mm.media_table(spark, n_rows=96, partitions=8)
+    sig = mm.image_phash(media)
+    pairs = mm.image_near_duplicates(media, max_hamming=16)
     partners = (
         pairs.select(F.col("a_id").alias("media_id"))
         .unionAll(pairs.select(F.col("b_id").alias("media_id")))
@@ -1644,8 +1646,8 @@ def r26_audio_spectrogram(spark, sf_dir):
     _ship_package(spark)
     from pdf_parser_spark.operators import multimodal as mm
 
-    media = mm.media_table(spark, n_rows=96, partitions=8, real_payloads=True)
-    out = mm.audio_spectrogram_features(media, fake=False)
+    media = mm.media_table(spark, n_rows=96, partitions=8)
+    out = mm.audio_spectrogram_features(media)
     return out.select(
         "media_id",
         "n_frames",
@@ -2347,7 +2349,7 @@ def r45_media_probe(spark, sf_dir):
     _ship_package(spark)
     from pdf_parser_spark.operators import multimodal as mm
 
-    media = mm.media_table(spark, n_rows=96, partitions=8, real_payloads=True)
+    media = mm.media_table(spark, n_rows=96, partitions=8)
     return mm.probe_media(media).orderBy("media_id")
 
 

@@ -23,7 +23,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from pdf_parser_spark import extraction_core as core
 from pdf_parser_spark import html_extract, pdf_layout
@@ -138,25 +137,27 @@ def extract_documents(pages: DataFrame, keep_text: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang, ...) → one extraction row per doc.
 
     Column pruning matters at 100 TB: only url/html/lang/source_type_hint/
-    charset are consumed, so the select() ahead of mapInPandas lets Parquet
-    skip the heavy `text` column.
+    charset are consumed, so the select ahead of mapInPandas lets Parquet
+    skip the heavy `text` column. An optional column the table lacks is
+    selected as a typed null — fresh-crawl pages (the WARC source) carry
+    no lang label or hint, and only the WARC source carries the
+    HTTP-declared charset — so the UDF sees one shape for every table.
     """
-    cols = ["url", "html", "lang", "source_type_hint", "charset"]
-    have_hint = "source_type_hint" in pages.columns
-    # fresh-crawl pages (e.g. the WARC source) arrive without a lang label;
-    # only the WARC source carries the HTTP-declared charset
-    have_lang = "lang" in pages.columns
-    have_charset = "charset" in pages.columns
-    pruned = pages.select(*[c for c in cols if c in pages.columns])
+    pruned = pages.selectExpr(
+        "url",
+        "html",
+        *[
+            c if c in pages.columns else f"CAST(NULL AS STRING) AS {c}"
+            for c in ("lang", "source_type_hint", "charset")
+        ],
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            hints = pdf["source_type_hint"] if have_hint else [None] * len(pdf)
-            langs = pdf["lang"] if have_lang else [None] * len(pdf)
-            charsets = pdf["charset"] if have_charset else [None] * len(pdf)
             for url, html, lang, hint, charset in zip(
-                pdf["url"], pdf["html"], langs, hints, charsets
+                pdf["url"], pdf["html"], pdf["lang"],
+                pdf["source_type_hint"], pdf["charset"],
             ):
                 rec = _extract_one(url, html, keep_text, charset)
                 rec["lang"] = lang
@@ -167,52 +168,41 @@ def extract_documents(pages: DataFrame, keep_text: bool = False) -> DataFrame:
     return pruned.mapInPandas(run, schema=EXTRACT_SCHEMA)
 
 
-def extracted_transactions(extracted: DataFrame, uid: str = "batch") -> DataFrame:
+def extracted_transactions(extracted: DataFrame) -> DataFrame:
     """Explode nested txns → one row per transaction (flagship F3 shape).
 
     txn_id is deterministic f"{url}#{txn_index}" (FIXTURES.md F3 — replaces
-    the reference's uuid4/Firestore auto-ids so results are reproducible).
-    sourceType derives from the source-type hint cycle when present upstream;
-    here it is assigned by the caller via join or left to 'bank' default as
-    the reference does (main.py:230 src_type_default).
+    the reference's uuid4/Firestore auto-ids so results are reproducible);
+    uid is the batch label 'batch'. The plan is built from SQL text, a few
+    Python→JVM round trips per operation instead of one or more per
+    expression node.
     """
-    t = (
-        extracted.select(
-            "url",
-            "lang",
-            "source_type_hint",
-            F.explode("txns").alias("t"),
-        )
-        .select(
-            F.concat_ws("#", "url", F.col("t.txn_index").cast("string")).alias("txn_id"),
-            "url",
-            "lang",
-            "source_type_hint",
-            F.col("t.date").alias("date"),
-            F.col("t.dateKey").alias("dateKey"),
-            F.col("t.memo").alias("memo"),
-            F.col("t.amount").alias("amount"),
-            F.col("t.source").alias("source"),
-        )
-        .withColumn("uploadId", F.col("url"))
-        .withColumn("uid", F.lit(uid))
+    return extracted.selectExpr(
+        "url", "lang", "source_type_hint", "explode(txns) AS t"
+    ).selectExpr(
+        "concat_ws('#', url, CAST(t.txn_index AS STRING)) AS txn_id",
+        "url",
+        "lang",
+        "source_type_hint",
+        "t.date AS date",
+        "t.dateKey AS dateKey",
+        "t.memo AS memo",
+        "t.amount AS amount",
+        "t.source AS source",
+        "url AS uploadId",
+        "'batch' AS uid",
     )
-    return t
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:
-    """A8 — per-partition lineage/metrics rows (north star: docs/sec,
-    parse-failure rate, bytes in/out). Partition id is the lineage unit
-    (mirrors the per-upload metadata row, ref main.py:235-245)."""
-    return (
-        extracted.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("chars_out").alias("chars_out"),
-            F.sum("n_txns").alias("txns"),
-            F.sum(F.col("parse_failed").cast("int")).alias("parse_failures"),
-            F.sum((F.col("n_txns") == 0).cast("int")).alias("empty_docs"),
-        )
+    """A8 — the failure funnel of an extraction frame as ONE row: docs,
+    txns, bytes in/out and parse failures (north star: docs/sec,
+    parse-failure rate). The extraction job records it per commit as
+    lineage (mirrors the per-upload metadata row, ref main.py:235-245)."""
+    return extracted.selectExpr(
+        "count(*) AS docs",
+        "sum(n_txns) AS txns",
+        "sum(bytes_in) AS bytes_in",
+        "sum(chars_out) AS chars_out",
+        "sum(CAST(parse_failed AS BIGINT)) AS parse_failures",
     )

@@ -5,21 +5,17 @@ an opaque ``binary`` column plus a typed metadata struct, with
 decode / feature-extract / resize / frame-sample implemented as Arrow-batched
 pandas UDFs over ``mapInPandas``.
 
-Decode paths (round 4): image, audio AND video REALLY decode — PNG,
-baseline JPEG, 16-bit PCM WAV, YUV4MPEG2 raw video, raw-RGB mp4
-(ISO BMFF container demux, mp4_demux.py), and raw-RGB mkv/webm (EBML
-container demux, mkv_demux.py) are implemented from their
-public specs (stdlib + numpy), so ``fake=False`` runs a genuine
-bytes→pixels/samples/frames→features/resize pipeline for those payloads.
-What still raises ``NotImplementedError`` on the real path is the
-compressed BITSTREAM layer with no in-container decoder (mp3,
-h264/vp9; AV1 now decodes via the system dav1d/libaom) — the mp4/mkv/webm
-containers themselves demux for any codec; ``fake=True`` (the
-default, and
-what the r08/r09 contract entries exercise) produces a deterministic
-synthetic decode (a pure function of the payload bytes) so the Spark-side
-plumbing — schema, partitioning, UDF signature, batch shape — is testable
-for all three kinds including video.
+Decode paths: image, audio AND video REALLY decode — PNG, JPEG, GIF,
+WebP, BMP/ICO, TIFF, 16-bit PCM WAV, FLAC, YUV4MPEG2 raw video, raw-RGB
+mp4 (ISO BMFF container demux, mp4_demux.py), and raw-RGB mkv/webm (EBML
+container demux, mkv_demux.py) are implemented from their public specs
+(stdlib + numpy), so every operator runs one genuine
+bytes→pixels/samples/frames→features/resize pipeline. What raises
+``NotImplementedError`` is the compressed BITSTREAM layer with no
+in-container decoder (mp3, h264/vp9; AV1 decodes via the system
+dav1d/libaom) — the mp4/mkv/webm containers themselves demux for any
+codec. Such rows come back ``decoded=False`` (or drop out of the frame
+fan-out), never with made-up features.
 
 Format-coverage table (the one place to size real-crawl media coverage;
 each row names its implementing module and what happens OUTSIDE scope —
@@ -147,9 +143,9 @@ def _real_payload(i: int, kind: str) -> tuple[bytes, str]:
     Image rows rotate PNG / JPEG (baseline + progressive) / WebP
     (lossless + lossy VP8) / GIF / BMP / ICO / TIFF / AVIF / HEIC, audio
     rows alternate WAV and FLAC, video rows rotate raw mp4 / raw mkv-webm /
-    Y4M / animated WebP / AV1-in-mp4 / AV1-in-webm — so the fake=False
-    operator paths exercise EVERY real decoder end to end, including in
-    the benched contract entries. The AV1/HEIC slots need the optional
+    Y4M / animated WebP / AV1-in-mp4 / AV1-in-webm — so the operators
+    exercise EVERY real decoder end to end, including in the benched
+    contract entries. The AV1/HEIC slots need the optional
     librav1e / libheif encoders and fall back to PNG/Y4M where absent.
     lru_cached: payloads are pure functions of (i, kind) and Spark
     reuses python workers across jobs, so the bench's many media entries
@@ -326,13 +322,10 @@ def _real_payload(i: int, kind: str) -> tuple[bytes, str]:
     )
 
 
-def media_table(spark, n_rows: int = 64, partitions: int = 4,
-                real_payloads: bool = False) -> DataFrame:
-    """Deterministic synthetic media table (pure function of media_id).
-
-    real_payloads=True: image/audio payloads are valid PNG/WAV bytes
-    (media_codecs), so the fake=False operator paths exercise the actual
-    decoders end to end."""
+def media_table(spark, n_rows: int = 64, partitions: int = 4) -> DataFrame:
+    """Deterministic media table (pure function of media_id): every
+    payload is a valid file minted by _real_payload, so the operators
+    run their actual decoders end to end."""
     ids = spark.range(0, n_rows, 1, partitions)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -341,15 +334,7 @@ def media_table(spark, n_rows: int = 64, partitions: int = 4,
             for i in pdf["id"]:
                 i = int(i)
                 kind = ("image", "audio", "video")[i % 3]
-                if real_payloads:
-                    payload, mime = _real_payload(i, kind)
-                else:
-                    payload = (f"media-{i}-" * (i % 7 + 1)).encode()
-                    mime = {
-                        "image": "image/png",
-                        "audio": "audio/wav",
-                        "video": "video/mp4",
-                    }[kind]
+                payload, mime = _real_payload(i, kind)
                 rows.append(
                     {
                         "media_id": i,
@@ -370,11 +355,11 @@ def media_table(spark, n_rows: int = 64, partitions: int = 4,
     return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def _decode(payload: bytes, kind: str, fake: bool) -> np.ndarray:
+def _decode(payload: bytes, kind: str) -> np.ndarray:
     """Decode a media payload to an array.
 
-    fake=False (REAL): image payloads decode as PNG, JPEG, GIF, WebP,
-    or AVIF (magic-byte dispatch), audio as 16-bit PCM WAV or FLAC, and
+    Image payloads decode as PNG, JPEG, GIF, WebP, or AVIF (magic-byte
+    dispatch), audio as 16-bit PCM WAV or FLAC, and
     video as YUV4MPEG2 frame stacks, mp4 (raw RGB or av01/AV1), or
     mkv/webm (raw RGB or V_AV1) via the from-scratch codecs
     (media_codecs.py, jpeg_codec.py, av1_codec.py's OBU layer — audio
@@ -383,105 +368,95 @@ def _decode(payload: bytes, kind: str, fake: bool) -> np.ndarray:
     formats with neither a from-scratch decoder nor an in-container
     library (mp3; h264/vp9 video BITSTREAMS — the mp4/mkv containers
     themselves demux fine) raise NotImplementedError.
-
-    fake=True: deterministic pseudo-pixels from a crc32-seeded generator —
-    same payload ⇒ same array on every executor.
     """
-    if not fake:
-        from pdf_parser_spark import media_codecs
+    from pdf_parser_spark import media_codecs
 
-        data = payload or b""
-        if kind == "image" and data.startswith(b"\x89PNG"):
-            return media_codecs.decode_png(data)
-        if kind == "image" and data[:2] == b"\xff\xd8":
-            from pdf_parser_spark import jpeg_codec
+    data = payload or b""
+    if kind == "image" and data.startswith(b"\x89PNG"):
+        return media_codecs.decode_png(data)
+    if kind == "image" and data[:2] == b"\xff\xd8":
+        from pdf_parser_spark import jpeg_codec
 
-            return jpeg_codec.decode_jpeg(data)
-        if kind == "image" and data[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-            from pdf_parser_spark import tiff_codec
+        return jpeg_codec.decode_jpeg(data)
+    if kind == "image" and data[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
+        from pdf_parser_spark import tiff_codec
 
-            arr = tiff_codec.decode_tiff(data)
-            return arr
-        if kind == "image" and data[:2] == b"BM":
-            from pdf_parser_spark import bmp_codec
+        return tiff_codec.decode_tiff(data)
+    if kind == "image" and data[:2] == b"BM":
+        from pdf_parser_spark import bmp_codec
 
-            return bmp_codec.decode_bmp(data)
-        if kind == "image" and data[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
-            from pdf_parser_spark import bmp_codec
+        return bmp_codec.decode_bmp(data)
+    if kind == "image" and data[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
+        from pdf_parser_spark import bmp_codec
 
-            # favicons: the largest entry is the image a pipeline wants
-            return bmp_codec.decode_ico(data)
-        if data[:4] == b"RIFF" and data[8:12] == b"WEBP" and kind in (
-            "image", "video",
-        ):
-            from pdf_parser_spark import webp_codec
+        # favicons: the largest entry is the image a pipeline wants
+        return bmp_codec.decode_ico(data)
+    if data[:4] == b"RIFF" and data[8:12] == b"WEBP" and kind in (
+        "image", "video",
+    ):
+        from pdf_parser_spark import webp_codec
 
-            # VP8L, lossy VP8, ALPH alpha, and VP8X/ANIM all decode
-            # fully AFTER the (real) RIFF container parse; animated
-            # WebP carried as video keeps the (n, H, W, 4) stack,
-            # mirroring the GIF handling below
-            frames, _durs = webp_codec.decode_webp_frames(data)
-            return frames[0] if kind == "image" else frames
-        if data[:6] in (b"GIF87a", b"GIF89a") and kind in ("image", "video"):
-            from pdf_parser_spark import gif_codec
+        # VP8L, lossy VP8, ALPH alpha, and VP8X/ANIM all decode
+        # fully AFTER the (real) RIFF container parse; animated
+        # WebP carried as video keeps the (n, H, W, 4) stack,
+        # mirroring the GIF handling below
+        frames, _durs = webp_codec.decode_webp_frames(data)
+        return frames[0] if kind == "image" else frames
+    if data[:6] in (b"GIF87a", b"GIF89a") and kind in ("image", "video"):
+        from pdf_parser_spark import gif_codec
 
-            frames, _delays = gif_codec.decode_gif(data)
-            # image rows take the first composited frame; animated GIFs
-            # carried as video keep the full (n, H, W, 4) stack
-            return frames[0] if kind == "image" else frames
-        if kind == "video" and data.startswith(b"YUV4MPEG2"):
-            return media_codecs.decode_y4m(data)
-        if kind == "image" and data[4:8] == b"ftyp":
-            from pdf_parser_spark import avif_codec, heif_codec
+        frames, _delays = gif_codec.decode_gif(data)
+        # image rows take the first composited frame; animated GIFs
+        # carried as video keep the full (n, H, W, 4) stack
+        return frames[0] if kind == "image" else frames
+    if kind == "video" and data.startswith(b"YUV4MPEG2"):
+        return media_codecs.decode_y4m(data)
+    if kind == "image" and data[4:8] == b"ftyp":
+        from pdf_parser_spark import avif_codec, heif_codec
 
-            # AVIF/HEIC: from-scratch BMFF item layer; AV1 frames via
-            # the system dav1d/libaom, HEVC frames via libheif — RGB out,
-            # or RGBA when an auxiliary alpha item/channel is present
-            if avif_codec.is_avif(data):
-                return avif_codec.decode_avif(data)
-            if heif_codec.is_heic(data):
-                return heif_codec.decode_heic(data)
-        if kind == "video" and data[4:8] == b"ftyp":
-            from pdf_parser_spark import mp4_demux
+        # AVIF/HEIC: from-scratch BMFF item layer; AV1 frames via
+        # the system dav1d/libaom, HEVC frames via libheif — RGB out,
+        # or RGBA when an auxiliary alpha item/channel is present
+        if avif_codec.is_avif(data):
+            return avif_codec.decode_avif(data)
+        if heif_codec.is_heic(data):
+            return heif_codec.decode_heic(data)
+    if kind == "video" and data[4:8] == b"ftyp":
+        from pdf_parser_spark import mp4_demux
 
-            # raw-RGB tracks decode fully; compressed codecs raise from
-            # decode_mp4 AFTER the (real) container demux
-            return mp4_demux.decode_mp4(data)
-        if kind == "video" and data.startswith(b"\x1a\x45\xdf\xa3"):
-            from pdf_parser_spark import mkv_demux
+        # raw-RGB tracks decode fully; compressed codecs raise from
+        # decode_mp4 AFTER the (real) container demux
+        return mp4_demux.decode_mp4(data)
+    if kind == "video" and data.startswith(b"\x1a\x45\xdf\xa3"):
+        from pdf_parser_spark import mkv_demux
 
-            # mkv/webm: same split — real EBML demux, raw RGB decodes,
-            # compressed bitstreams raise from decode_mkv
-            return mkv_demux.decode_mkv(data)
-        if kind == "audio" and data.startswith(b"RIFF"):
-            samples, _rate = media_codecs.decode_wav(data)
-            # int16 → uint8 (offset binary): keeps the moment-profile
-            # feature kernel shared across kinds
-            return ((samples.astype(np.int32) + (1 << 15)) >> 8).astype(
-                np.uint8
-            ).reshape(-1)
-        if kind == "audio" and data.startswith(b"fLaC"):
-            from pdf_parser_spark import flac_codec
+        # mkv/webm: same split — real EBML demux, raw RGB decodes,
+        # compressed bitstreams raise from decode_mkv
+        return mkv_demux.decode_mkv(data)
+    if kind == "audio" and data.startswith(b"RIFF"):
+        samples, _rate = media_codecs.decode_wav(data)
+        # int16 → uint8 (offset binary): keeps the moment-profile
+        # feature kernel shared across kinds
+        return ((samples.astype(np.int32) + (1 << 15)) >> 8).astype(
+            np.uint8
+        ).reshape(-1)
+    if kind == "audio" and data.startswith(b"fLaC"):
+        from pdf_parser_spark import flac_codec
 
-            samples, _rate = flac_codec.decode_flac(data)
-            # same int16-range → uint8 rebias as the WAV path, so a FLAC
-            # and a WAV of the same recording produce identical features
-            return ((samples.astype(np.int32) + (1 << 15)) >> 8).astype(
-                np.uint8
-            ).reshape(-1)
-        raise NotImplementedError(
-            f"real {kind} decode supports PNG/JPEG/GIF/WebP-lossless/WAV/"
-            "Y4M/raw-mp4/raw-mkv only (from-scratch codecs); other formats "
-            "need codec libraries not present in this container — run with "
-            "fake=True for plumbing tests"
-        )
-    seed = zlib.crc32(payload or b"")
-    rng = np.random.default_rng(seed)
-    shape = {"image": (8, 8, 3), "audio": (1024,), "video": (4, 8, 8, 3)}[kind]
-    return rng.integers(0, 256, size=shape, dtype=np.uint8)
+        samples, _rate = flac_codec.decode_flac(data)
+        # same int16-range → uint8 rebias as the WAV path, so a FLAC
+        # and a WAV of the same recording produce identical features
+        return ((samples.astype(np.int32) + (1 << 15)) >> 8).astype(
+            np.uint8
+        ).reshape(-1)
+    raise NotImplementedError(
+        f"no {kind} decoder for this payload: unknown format, or a "
+        "compressed bitstream (mp3, h264, vp9) that needs a codec library "
+        "not present in this container"
+    )
 
 
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """decode → fixed-dim feature vector per media row (mapInPandas).
 
     The feature is a deterministic moment-profile of the decoded array
@@ -494,7 +469,7 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
             feats, ok = [], []
             for payload, kind in zip(pdf["payload"], pdf["kind"]):
                 try:
-                    arr = _decode(bytes(payload), kind, fake).astype(np.float64)
+                    arr = _decode(bytes(payload), kind).astype(np.float64)
                     flat = arr.reshape(-1)
                     chunks = np.array_split(flat, FEATURE_DIM // 2)
                     v = np.concatenate(
@@ -562,7 +537,7 @@ def _phash_bits(arr: np.ndarray, hash_size: int = 8, resample: int = 32) -> int:
     return out
 
 
-def image_phash(media: DataFrame, fake: bool = True, hash_size: int = 8,
+def image_phash(media: DataFrame, hash_size: int = 8,
                 resample: int = 32) -> DataFrame:
     """(media_id, phash long, decoded boolean) — DCT perceptual hash per image.
 
@@ -580,7 +555,7 @@ def image_phash(media: DataFrame, fake: bool = True, hash_size: int = 8,
             hashes, ok = [], []
             for payload in pdf["payload"]:
                 try:
-                    arr = _decode(bytes(payload), "image", fake)
+                    arr = _decode(bytes(payload), "image")
                     hashes.append(_phash_bits(arr, hash_size, resample))
                     ok.append(True)
                 except (ValueError, NotImplementedError):
@@ -602,7 +577,7 @@ def image_phash(media: DataFrame, fake: bool = True, hash_size: int = 8,
 
 
 def image_near_duplicates(media: DataFrame, max_hamming: int = 6,
-                          fake: bool = True, n_blocks: int | None = None) -> DataFrame:
+                          n_blocks: int | None = None) -> DataFrame:
     """(a_id, b_id, hamming) image near-dup pairs by pHash Hamming distance.
 
     The multimodal twin of dedupe.simhash_near_duplicates: pHash the image
@@ -615,7 +590,7 @@ def image_near_duplicates(media: DataFrame, max_hamming: int = 6,
     """
     from pdf_parser_spark.operators import dedupe
 
-    sig = image_phash(media, fake=fake).filter(F.col("decoded")).select(
+    sig = image_phash(media).filter(F.col("decoded")).select(
         F.col("media_id").alias("doc_id"), F.col("phash").alias("simhash")
     )
     cand = dedupe.simhash_candidates(sig, max_hamming, n_blocks)
@@ -629,8 +604,7 @@ def image_near_duplicates(media: DataFrame, max_hamming: int = 6,
 
 
 def video_frame_phashes(media: DataFrame, every_ms: int = 1000,
-                        fake: bool = True, hash_size: int = 8,
-                        resample: int = 32) -> DataFrame:
+                        hash_size: int = 8, resample: int = 32) -> DataFrame:
     """(media_id, frame_index, phash long) — DCT pHash per sampled frame.
 
     Same metadata-driven sampling rule as sample_frames (one frame per
@@ -649,7 +623,7 @@ def video_frame_phashes(media: DataFrame, every_ms: int = 1000,
                 pdf["media_id"], pdf["payload"], pdf["duration_ms"]
             ):
                 try:
-                    sampled = _decode_sampled(bytes(payload), dur, every_ms, fake)
+                    sampled = _decode_sampled(bytes(payload), dur, every_ms)
                 except (ValueError, NotImplementedError):
                     continue  # corrupt/undecodable video: drop the row
                 for j, frame in sampled:
@@ -668,7 +642,7 @@ def video_frame_phashes(media: DataFrame, every_ms: int = 1000,
 
 
 def video_near_duplicates(media: DataFrame, min_shared: int = 2,
-                          every_ms: int = 1000, fake: bool = True,
+                          every_ms: int = 1000,
                           max_frame_freq: int = 1024) -> DataFrame:
     """(a_id, b_id, n_shared) video pairs sharing ≥ min_shared frame hashes.
 
@@ -686,7 +660,7 @@ def video_near_duplicates(media: DataFrame, min_shared: int = 2,
     aggregate.
     """
     per_video = (
-        video_frame_phashes(media, every_ms=every_ms, fake=fake)
+        video_frame_phashes(media, every_ms=every_ms)
         .select("media_id", "phash")
         .distinct()
     )
@@ -707,14 +681,13 @@ def video_near_duplicates(media: DataFrame, min_shared: int = 2,
 
 
 def audio_spectrogram_features(media: DataFrame, n_bands: int = 16,
-                               frame_len: int = 512, hop: int = 256,
-                               fake: bool = True) -> DataFrame:
+                               frame_len: int = 512, hop: int = 256) -> DataFrame:
     """(media_id, feature array<double>, n_frames int, peak_hz double, decoded)
     — real signal-level audio features via framed FFT (mapInPandas).
 
-    Per audio row: decode to mono float in [-1, 1] (real path reads the
-    int16 PCM straight from the WAV — not the uint8 rebias the shared
-    moment kernel uses), slice into Hann-windowed frames of ``frame_len``
+    Per audio row: decode to mono float in [-1, 1] (int16 PCM straight
+    from the WAV or FLAC — not the uint8 rebias the shared moment kernel
+    uses), slice into Hann-windowed frames of ``frame_len``
     samples every ``hop``, take the real FFT power spectrum per frame,
     pool the frame_len/2+1 bins into ``n_bands`` contiguous bands, and
     emit log10 band energies: per-band mean over frames concatenated with
@@ -734,25 +707,20 @@ def audio_spectrogram_features(media: DataFrame, n_bands: int = 16,
         window = np.hanning(frame_len)
         for pdf in batches:
             feats, nfr, peaks, ok = [], [], [], []
-            for payload, rate in zip(pdf["payload"], pdf["sample_rate"]):
+            for payload in pdf["payload"]:
                 try:
                     data = bytes(payload)
-                    if not fake:
-                        if data.startswith(b"RIFF"):
-                            samples, rate = media_codecs.decode_wav(data)
-                        elif data.startswith(b"fLaC"):
-                            from pdf_parser_spark import flac_codec
+                    if data.startswith(b"RIFF"):
+                        samples, rate = media_codecs.decode_wav(data)
+                    elif data.startswith(b"fLaC"):
+                        from pdf_parser_spark import flac_codec
 
-                            samples, rate = flac_codec.decode_flac(data)
-                        else:
-                            raise NotImplementedError(
-                                "real audio decode supports WAV and FLAC only"
-                            )
-                        mono = samples.astype(np.float64).mean(axis=1) / 32768.0
+                        samples, rate = flac_codec.decode_flac(data)
                     else:
-                        raw = _decode(data, "audio", fake=True)
-                        mono = raw.astype(np.float64) / 127.5 - 1.0
-                        rate = int(rate) if rate == rate and rate else 16000
+                        raise NotImplementedError(
+                            "audio decode supports WAV and FLAC only"
+                        )
+                    mono = samples.astype(np.float64).mean(axis=1) / 32768.0
                     if len(mono) < frame_len:
                         mono = np.pad(mono, (0, frame_len - len(mono)))
                     n_frames = 1 + (len(mono) - frame_len) // hop
@@ -790,7 +758,7 @@ def audio_spectrogram_features(media: DataFrame, n_bands: int = 16,
 
     return (
         media.filter(F.col("kind") == "audio")
-        .select("media_id", "payload", F.col("meta.sample_rate").alias("sample_rate"))
+        .select("media_id", "payload")
         .mapInPandas(
             run,
             schema=(
@@ -861,16 +829,15 @@ def probe_media(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(media: DataFrame, width: int = 32, height: int = 32,
-                  fake: bool = True) -> DataFrame:
+def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
     """Image resize stage: decode → nearest-neighbour resample → re-encode.
 
-    fake=False: format-preserving — every corpus image format re-encodes
+    Format-preserving: every corpus image format re-encodes
     in its own container (PNG/JPEG/GIF/BMP/TIFF/ICO via the from-scratch
     codecs; WebP back as WebP in the lossless flavor; AVIF via the
     optional native encoder, PNG fallback where librav1e is absent) —
     output payloads are themselves decodable, so resize chains compose.
-    The fake path re-encodes raw bytes via zlib. Non-image rows pass
+    Undecodable images pass through as they are; non-image rows pass
     through untouched (filter pushdown keeps them out of the UDF
     entirely).
     """
@@ -933,17 +900,13 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32,
             for payload in pdf["payload"]:
                 data = bytes(payload)
                 try:
-                    arr = _decode(data, "image", fake)
+                    arr = _decode(data, "image")
                 except (ValueError, NotImplementedError):
                     out_payload.append(data)  # undecodable: pass through
                     continue
                 ys = (np.arange(height) * arr.shape[0] // height)
                 xs = (np.arange(width) * arr.shape[1] // width)
-                resized = arr[ys][:, xs]
-                if fake:
-                    out_payload.append(zlib.compress(resized.tobytes()))
-                else:
-                    out_payload.append(reencode(data, resized))
+                out_payload.append(reencode(data, arr[ys][:, xs]))
             pdf = pdf.assign(payload=out_payload)
             yield pdf
 
@@ -1078,35 +1041,32 @@ def _decode_frame_indices(data: bytes, indices: list[int]):
     return None  # composited formats (GIF/animated WebP) and unknowns
 
 
-def _decode_sampled(data: bytes, duration_ms, every_ms: int, fake: bool):
+def _decode_sampled(data: bytes, duration_ms, every_ms: int):
     """The shared sampling rule: j in range(min(n, total)) with frame
     ``j % total`` — decoded selectively where the container allows, full
     decode otherwise. Output is identical either way (asserted in
     tests)."""
-    n = max(1, int(duration_ms or 0) // every_ms)
-    if not fake:
-        from pdf_parser_spark import media_probe
+    from pdf_parser_spark import media_probe
 
-        try:
-            total = media_probe.probe_bytes(data)["n_frames"]
-            if total:
-                needed = sorted({j % total for j in range(min(n, total))})
-                got = _decode_frame_indices(data, needed)
-                if got is not None:
-                    return [
-                        (j, got[j % total]) for j in range(min(n, total))
-                    ]
-        except (ValueError, NotImplementedError):
-            pass  # fall through to the full decode (its errors decide)
-    frames = _decode(data, "video", fake)
+    n = max(1, int(duration_ms or 0) // every_ms)
+    try:
+        total = media_probe.probe_bytes(data)["n_frames"]
+        if total:
+            needed = sorted({j % total for j in range(min(n, total))})
+            got = _decode_frame_indices(data, needed)
+            if got is not None:
+                return [(j, got[j % total]) for j in range(min(n, total))]
+    except (ValueError, NotImplementedError):
+        pass  # fall through to the full decode (its errors decide)
+    frames = _decode(data, "video")
     return [(j, frames[j % len(frames)]) for j in range(min(n, len(frames)))]
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> DataFrame:
+def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame sampling: one output row per sampled frame (fan-out map).
 
-    Frame count derives from meta.duration_ms, and the real path decodes
-    SELECTIVELY (_decode_frame_indices): sample-table byte ranges for raw
+    Frame count derives from meta.duration_ms, and the decode is
+    SELECTIVE (_decode_frame_indices): sample-table byte ranges for raw
     mp4/mkv, per-temporal-unit AV1 decode from the nearest sync frame,
     offset arithmetic for y4m — so a 2h video decodes once per sampled
     frame, not whole-file (composited GIF/animated-WebP rows fall back
@@ -1120,7 +1080,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> 
             rows = []
             for mid, payload, dur in zip(pdf["media_id"], pdf["payload"], pdf["duration_ms"]):
                 try:
-                    sampled = _decode_sampled(bytes(payload), dur, every_ms, fake)
+                    sampled = _decode_sampled(bytes(payload), dur, every_ms)
                 except (ValueError, NotImplementedError):
                     continue  # corrupt/undecodable video: drop the row
                 for j, frame in sampled:

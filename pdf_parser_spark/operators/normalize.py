@@ -31,17 +31,13 @@ DISPLAY_AMOUNT = f"""CASE
     ELSE {_AMOUNT} END"""
 
 
-def assign_source_type(txns: DataFrame, default: str = "bank") -> DataFrame:
-    """sourceType column; reference default is 'bank' (main.py:230).
-
-    If the upstream pages table carried a source_type_hint it is used
-    (fixtures cycle bank/card/loan per doc — FIXTURES.md F3); else default.
+def assign_source_type(txns: DataFrame) -> DataFrame:
+    """sourceType column: the row's source_type_hint (fixtures cycle
+    bank/card/loan per doc — FIXTURES.md F3), else the reference default
+    'bank' (main.py:230). extracted_transactions always carries the hint
+    column, null where the pages table had none.
     """
-    if "source_type_hint" in txns.columns:
-        return txns.withColumn(
-            "sourceType", F.coalesce(F.col("source_type_hint"), F.lit(default))
-        )
-    return txns.withColumn("sourceType", F.lit(default))
+    return txns.selectExpr("*", "coalesce(source_type_hint, 'bank') AS sourceType")
 
 
 def bank_match_flags(txns: DataFrame) -> DataFrame:

@@ -22,6 +22,11 @@ text-byte fixtures too.
 Word ordering by vertical position ((pyc) main.extract_text_lines_with_ocr
 sorts by 'top') is real in the raster engine and preserved in the fake via
 line order.
+
+The fake read stays on purpose: raster.rasterize_pdf rasterizes the
+DECODED text layer, so on a real ``%PDF-`` the OCR pass cannot find rows
+pass 1 missed, and the fake read is the only input that reaches the
+OCR-result merge in extract_with_ocr_fallback.
 """
 
 from __future__ import annotations

@@ -128,17 +128,11 @@ class SnapshotExtractionJob:
                 extract_op.extracted_transactions(extracted),
                 "url", self.n_buckets,
             )
-            stats = extracted.agg(
-                F.count("*").alias("docs"),
-                F.sum("n_txns").alias("txns"),
-                F.sum("bytes_in").alias("bytes_in"),
-                F.sum("chars_out").alias("chars_out"),
-                F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-            ).first().asDict()
+            stats = extract_op.extraction_metrics(extracted).first().asDict()
             stats = {k: int(n or 0) for k, n in stats.items()}
 
             def _summary() -> dict:
-                # called AFTER the data write (summary_factory), so the
+                # called AFTER the data write (overwrite_partitions), so the
                 # wall clock — and the docs/sec the north star reads from
                 # lineage() — includes the write
                 wall = time.perf_counter() - t0
@@ -153,9 +147,7 @@ class SnapshotExtractionJob:
                     ),
                 }
 
-            self.table.overwrite_partitions(
-                txns, summary_factory=_summary, ids=group
-            )
+            self.table.overwrite_partitions(txns, ids=group, summary=_summary)
             extracted.unpersist()
         return {
             "n_buckets": self.n_buckets,

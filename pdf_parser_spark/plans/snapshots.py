@@ -432,8 +432,7 @@ class SnapshotTable:
         each: one read of the head snapshot, unaffected by expiry."""
         return {int(i): v for i, v in self.snapshot().get("ids", {}).items()}
 
-    def append(self, df: DataFrame, summary: dict | None = None,
-               ids=()) -> int:
+    def append(self, df: DataFrame, ids=()) -> int:
         """New snapshot = old files + df's files; ``ids`` (integers) join
         the committed id set in the same atomic publish.
 
@@ -445,13 +444,11 @@ class SnapshotTable:
         base = self.current_version()
         new = self._write_data_files(df.repartition(self.partition_col), base + 1)
         return self._publish(
-            "append", self.snapshot(base)["files"] + new, base, summary, ids
+            "append", self.snapshot(base)["files"] + new, base, ids=ids
         )
 
-    def overwrite_partitions(self, df: DataFrame,
-                             summary: dict | None = None,
-                             base: int | None = None,
-                             summary_factory=None, ids=()) -> int:
+    def overwrite_partitions(self, df: DataFrame, base: int | None = None,
+                             ids=(), summary=None) -> int:
         """Replace exactly the partitions present in df (dynamic overwrite).
 
         A file is replaced iff its partition_col min==max value appears in
@@ -465,21 +462,17 @@ class SnapshotTable:
         Default (None) reads the current head, which is only safe when df
         does not derive from the table itself.
 
-        ``summary_factory`` (() -> dict) is called AFTER the data write,
-        just before the publish — for summaries that must observe the
-        write's cost (wall-clock throughput metrics) while still riding
-        the same atomic commit. Mutually exclusive with ``summary``.
-
         ``ids`` join the committed id set (see append).
+
+        ``summary`` (() -> dict) is called AFTER the data write, just
+        before the publish — so a summary can observe the write's cost
+        (wall-clock throughput metrics) while still riding the same
+        atomic commit.
         """
         if base is None:
             base = self.current_version()
         out = df.repartition(self.partition_col)
         new = self._write_data_files(out, base + 1)
-        if summary_factory is not None:
-            if summary is not None:
-                raise ValueError("pass summary or summary_factory, not both")
-            summary = summary_factory()
         touched = {f["min"][self.partition_col] for f in new}
         # every data file is single-partition (see _write_data_files), so
         # membership of its one value decides replacement exactly
@@ -489,11 +482,11 @@ class SnapshotTable:
             if f["min"].get(self.partition_col) not in touched
         ]
         return self._publish(
-            "overwrite_partitions", kept + new, base, summary, ids
+            "overwrite_partitions", kept + new, base,
+            summary() if summary is not None else None, ids,
         )
 
-    def merge_rows(self, df: DataFrame, key_cols: tuple[str, ...],
-                   summary: dict | None = None) -> int:
+    def merge_rows(self, df: DataFrame, key_cols: tuple[str, ...]) -> int:
         """MERGE (upsert): rows in df replace same-key rows, others append.
 
         The copy-on-write formulation Iceberg calls MERGE INTO: only the
@@ -532,14 +525,14 @@ class SnapshotTable:
             out = keep.unionByName(df, allowMissingColumns=True)
         else:
             out = df
-        return self.overwrite_partitions(out, summary, base=base)
+        return self.overwrite_partitions(out, base=base)
 
-    def rollback(self, version: int, summary: dict | None = None) -> int:
+    def rollback(self, version: int) -> int:
         """New snapshot re-publishing `version`'s file set and committed
         ids (history kept)."""
         return self._publish(
             "rollback", self.snapshot(version)["files"],
-            self.current_version(), summary, ids_of=version,
+            self.current_version(), ids_of=version,
         )
 
     # -- reads --------------------------------------------------------------

@@ -20,6 +20,9 @@ operator in two:
   HTTP server, so the client code path is REAL and tested, while nothing
   ever leaves the machine.
 
+The fake mode stays on purpose: it is the only path that runs without an
+endpoint.
+
 At 100 TB the knobs that matter: ``batch_size`` bounds request payloads,
 input partition count bounds endpoint concurrency (repartition upstream to
 match the service's rate limit), and failures raise after ``retries``

@@ -115,8 +115,8 @@ def test_multimodal_gate_decodes_gif():
 
     img = _pal_image(20, 24, seed=8)
     single = gif_codec.encode_gif(img)
-    got = _decode(single, "image", fake=False)
+    got = _decode(single, "image")
     assert got.shape == (20, 24, 4)
     anim = gif_codec.encode_gif(np.stack([img, img[::-1]]))
-    vid = _decode(anim, "video", fake=False)
+    vid = _decode(anim, "video")
     assert vid.shape == (2, 20, 24, 4)

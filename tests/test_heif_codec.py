@@ -182,7 +182,7 @@ def test_probe_and_operator_dispatch():
 
     from pdf_parser_spark.operators import multimodal as mm
 
-    arr = mm._decode(_PLAIN, "image", fake=False)
+    arr = mm._decode(_PLAIN, "image")
     assert arr.shape == (64, 96, 3)
 
 

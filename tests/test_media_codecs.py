@@ -105,8 +105,8 @@ def test_wav_rejects_non_wav():
 def test_extract_features_real_branch(spark):
     from pdf_parser_spark.operators import multimodal
 
-    media = multimodal.media_table(spark, n_rows=24, real_payloads=True)
-    rows = {r["media_id"]: r for r in multimodal.extract_features(media, fake=False).collect()}
+    media = multimodal.media_table(spark, n_rows=24)
+    rows = {r["media_id"]: r for r in multimodal.extract_features(media).collect()}
     kinds = {i: ("image", "audio", "video")[i % 3] for i in range(24)}
     for i, r in rows.items():
         # every kind decodes for real now: PNG / WAV / Y4M stdlib codecs
@@ -126,10 +126,10 @@ def test_resize_images_real_produces_decodable_output(spark):
     from pdf_parser_spark import jpeg_codec
     from pdf_parser_spark.operators import multimodal
 
-    media = multimodal.media_table(spark, n_rows=30, real_payloads=True)
+    media = multimodal.media_table(spark, n_rows=30)
     in_fmt = {r["media_id"]: bytes(r["payload"])[:2]
               for r in media.filter(F.col("kind") == "image").collect()}
-    out = multimodal.resize_images(media, width=16, height=10, fake=False)
+    out = multimodal.resize_images(media, width=16, height=10)
     imgs = out.filter(F.col("kind") == "image").select("media_id", "payload").collect()
     assert imgs
     seen_fmts = set()
@@ -144,7 +144,7 @@ def test_resize_images_real_produces_decodable_output(spark):
             assert data[:2] in (b"\x00\x00", b"\x89P")
         else:
             assert data[:2] == in_fmt[r["media_id"]]
-        arr = multimodal._decode(data, "image", fake=False)
+        arr = multimodal._decode(data, "image")
         assert arr.shape[:2] == (10, 16)
         seen_fmts.add(bytes(in_fmt[r["media_id"]]))
     # the 30-row corpus spans PNG, JPEG, WebP, GIF, BMP, TIFF, ICO,
@@ -202,8 +202,8 @@ def test_sample_frames_real_branch(spark):
 
     from pdf_parser_spark.operators import multimodal
 
-    media = multimodal.media_table(spark, n_rows=12, real_payloads=True)
-    out = multimodal.sample_frames(media, every_ms=1000, fake=False).collect()
+    media = multimodal.media_table(spark, n_rows=12)
+    out = multimodal.sample_frames(media, every_ms=1000).collect()
     assert out
     vids = {r["media_id"] for r in out}
     assert vids == {i for i in range(12) if i % 3 == 2}
@@ -290,16 +290,16 @@ def test_mp4_real_video_rows_flow_through_operators(spark):
 
     from pdf_parser_spark.operators import multimodal
 
-    media = multimodal.media_table(spark, n_rows=24, real_payloads=True)
+    media = multimodal.media_table(spark, n_rows=24)
     vids = media.filter(F.col("kind") == "video").collect()
     sigs = {int(r["media_id"]): bytes(r["payload"])[:12] for r in vids}
     assert any(sig[4:8] == b"ftyp" for sig in sigs.values())
     assert any(sig.startswith(b"YUV4MPEG2") for sig in sigs.values())
     feats = {r["media_id"]: r for r in
-             multimodal.extract_features(media, fake=False).collect()}
+             multimodal.extract_features(media).collect()}
     for i in sigs:
         assert feats[i]["decoded"], f"video {i} failed real decode"
-    frames = multimodal.sample_frames(media, every_ms=1000, fake=False).collect()
+    frames = multimodal.sample_frames(media, every_ms=1000).collect()
     assert {r["media_id"] for r in frames} == set(sigs)
 
 
@@ -371,14 +371,14 @@ def test_all_three_video_containers_flow_through_operators(spark):
 
     from pdf_parser_spark.operators import multimodal
 
-    media = multimodal.media_table(spark, n_rows=27, real_payloads=True)
+    media = multimodal.media_table(spark, n_rows=27)
     vids = media.filter(F.col("kind") == "video").collect()
     sigs = {int(r["media_id"]): bytes(r["payload"])[:12] for r in vids}
     assert any(s[4:8] == b"ftyp" for s in sigs.values())
     assert any(s.startswith(b"\x1a\x45\xdf\xa3") for s in sigs.values())
     assert any(s.startswith(b"YUV4MPEG2") for s in sigs.values())
     feats = {r["media_id"]: r for r in
-             multimodal.extract_features(media, fake=False).collect()}
+             multimodal.extract_features(media).collect()}
     for i in sigs:
         assert feats[i]["decoded"], f"video {i} failed real decode"
     mimes = {r["media_id"]: r["meta"]["mime"] for r in vids}
@@ -402,8 +402,8 @@ def test_selective_decode_equals_full_decode():
         payload, mime = mm._real_payload(i, "video")
         dur = (i % 30 + 1) * 1000
         for ev in (700, 1500):
-            sel = mm._decode_sampled(payload, dur, ev, fake=False)
-            frames = mm._decode(payload, "video", fake=False)
+            sel = mm._decode_sampled(payload, dur, ev)
+            frames = mm._decode(payload, "video")
             n = max(1, dur // ev)
             ref = [(j, frames[j % len(frames)]) for j in range(min(n, len(frames)))]
             assert len(sel) == len(ref), (i, mime, ev)
@@ -437,9 +437,9 @@ def test_selective_decode_does_not_touch_unrequested_samples():
     blob[track.samples[-1].offset] |= 0x80  # OBU forbidden bit
     blob = bytes(blob)
     with pytest.raises(ValueError, match="forbidden bit"):
-        mm._decode(blob, "video", fake=False)
+        mm._decode(blob, "video")
     got = mm._decode_frame_indices(blob, [0, 1, 2])
     assert sorted(got) == [0, 1, 2]
     # and the sampling rule rides the selective path for those frames
-    sampled = mm._decode_sampled(blob, 3000, 1000, fake=False)
+    sampled = mm._decode_sampled(blob, 3000, 1000)
     assert [j for j, _ in sampled] == [0, 1, 2]

@@ -23,7 +23,7 @@ def test_probe_matches_decode_over_whole_corpus():
         kind = ("image", "audio", "video")[i % 3]
         payload, mime = mm._real_payload(i, kind)
         p = media_probe.probe_bytes(payload)
-        arr = mm._decode(payload, kind, fake=False)
+        arr = mm._decode(payload, kind)
         if kind == "image":
             assert (p["height"], p["width"]) == arr.shape[:2], (i, mime, p)
             assert p["n_frames"] == 1
@@ -122,7 +122,7 @@ def test_probe_malformed_raises_typed():
 def test_probe_media_operator_degrades_per_row(spark):
     from pyspark.sql import functions as F
 
-    media = mm.media_table(spark, n_rows=24, partitions=2, real_payloads=True)
+    media = mm.media_table(spark, n_rows=24, partitions=2)
     # corrupt one row's payload
     corrupt = media.withColumn(
         "payload",

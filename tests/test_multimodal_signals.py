@@ -95,15 +95,15 @@ def test_image_phash_matches_local_kernel(spark):
     ]
     got = {
         r["media_id"]: r["phash"]
-        for r in mm.image_phash(_image_df(spark, arrays), fake=False).collect()
+        for r in mm.image_phash(_image_df(spark, arrays)).collect()
     }
     want = {i: mm._phash_bits(a) for i, a in enumerate(arrays)}
     assert got == want
 
 
 def test_image_phash_filters_to_images_only(spark):
-    media = mm.media_table(spark, n_rows=24, partitions=2, real_payloads=True)
-    out = mm.image_phash(media, fake=False)
+    media = mm.media_table(spark, n_rows=24, partitions=2)
+    out = mm.image_phash(media)
     rows = out.collect()
     image_ids = {i for i in range(24) if i % 3 == 0}
     assert {r["media_id"] for r in rows} == image_ids
@@ -124,7 +124,7 @@ def test_image_near_duplicates_brute_force_parity(spark):
         arrays.extend([base, near, base + 20])
     max_h = 10
     pairs = mm.image_near_duplicates(
-        _image_df(spark, arrays), max_hamming=max_h, fake=False
+        _image_df(spark, arrays), max_hamming=max_h
     ).collect()
     got = {(r["a_id"], r["b_id"]): r["hamming"] for r in pairs}
     # brute force over the same hashes
@@ -157,9 +157,7 @@ def test_spectrogram_peak_finds_pure_tone(spark):
     rate, f = 16000, 2000.0
     t = np.arange(rate) / rate  # 1 second
     tone = (10000 * np.sin(2 * np.pi * f * t)).astype(np.int16)
-    out = mm.audio_spectrogram_features(
-        _wav_df(spark, [(0, tone, rate)]), fake=False
-    ).collect()
+    out = mm.audio_spectrogram_features(_wav_df(spark, [(0, tone, rate)])).collect()
     assert len(out) == 1 and out[0]["decoded"]
     # bin resolution = rate / frame_len = 31.25 Hz
     assert abs(out[0]["peak_hz"] - f) <= 16000 / 512
@@ -173,7 +171,7 @@ def test_spectrogram_matches_numpy_twin(spark):
     rate, frame_len, hop, n_bands = 16000, 512, 256, 16
     row = mm.audio_spectrogram_features(
         _wav_df(spark, [(0, samples, rate)]),
-        n_bands=n_bands, frame_len=frame_len, hop=hop, fake=False,
+        n_bands=n_bands, frame_len=frame_len, hop=hop,
     ).collect()[0]
     # direct per-frame recomputation (loop form, no strided view)
     mono = samples.astype(np.float64) / 32768.0
@@ -193,19 +191,19 @@ def test_spectrogram_matches_numpy_twin(spark):
 def test_spectrogram_short_clip_pads_to_one_frame(spark):
     samples = (np.ones(100) * 5000).astype(np.int16)
     row = mm.audio_spectrogram_features(
-        _wav_df(spark, [(0, samples, 16000)]), fake=False
+        _wav_df(spark, [(0, samples, 16000)])
     ).collect()[0]
     assert row["decoded"] and row["n_frames"] == 1
 
 
-def test_spectrogram_fake_plumbing_covers_audio_rows_only(spark):
+def test_spectrogram_covers_audio_rows_only(spark):
     media = mm.media_table(spark, n_rows=30, partitions=3)
-    rows = mm.audio_spectrogram_features(media, fake=True).collect()
+    rows = mm.audio_spectrogram_features(media).collect()
     audio_ids = {i for i in range(30) if i % 3 == 1}
     assert {r["media_id"] for r in rows} == audio_ids
     assert all(r["decoded"] and len(r["feature"]) == 32 for r in rows)
     # deterministic: same table twice -> same features
-    again = mm.audio_spectrogram_features(media, fake=True).collect()
+    again = mm.audio_spectrogram_features(media).collect()
     assert {r["media_id"]: r["feature"] for r in rows} == {
         r["media_id"]: r["feature"] for r in again
     }
@@ -232,7 +230,7 @@ def _frames(seed, n, h=32, w=32):
 
 def test_video_frame_phashes_sampling_and_determinism(spark):
     fa = _frames(1, 6)
-    out = mm.video_frame_phashes(_video_df(spark, [(0, fa)]), fake=False).collect()
+    out = mm.video_frame_phashes(_video_df(spark, [(0, fa)])).collect()
     assert sorted(r["frame_index"] for r in out) == list(range(6))
     want = {j: mm._phash_bits(fa[j]) for j in range(6)}
     assert {r["frame_index"]: r["phash"] for r in out} == want
@@ -243,7 +241,7 @@ def test_video_near_duplicates_shared_frames(spark):
     fb = np.concatenate([fa[:3], _frames(2, 3)])  # shares 3 frames with A
     fc = _frames(3, 6)                            # shares none
     df = _video_df(spark, [(0, fa), (1, fb), (2, fc)])
-    pairs = mm.video_near_duplicates(df, min_shared=2, fake=False).collect()
+    pairs = mm.video_near_duplicates(df, min_shared=2).collect()
     assert [(r["a_id"], r["b_id"], r["n_shared"]) for r in pairs] == [(0, 1, 3)]
 
 
@@ -256,25 +254,33 @@ def test_video_near_duplicates_stop_frame_guard(spark):
     ]
     df = _video_df(spark, rows)
     unguarded = mm.video_near_duplicates(
-        df, min_shared=1, fake=False, max_frame_freq=1024
+        df, min_shared=1, max_frame_freq=1024
     ).count()
     guarded = mm.video_near_duplicates(
-        df, min_shared=1, fake=False, max_frame_freq=3
+        df, min_shared=1, max_frame_freq=3
     ).count()
     assert unguarded == 10  # C(5,2) via the stop frame
     assert guarded == 0     # stop frame dropped, unique frames pair nothing
 
 
-def test_video_frame_phashes_fake_plumbing(spark):
+def test_video_frame_phashes_cover_video_rows(spark):
+    from pdf_parser_spark import media_probe
+
     media = mm.media_table(spark, n_rows=30, partitions=3)
-    out = mm.video_frame_phashes(media, fake=True).collect()
+    out = mm.video_frame_phashes(media).collect()
     video_ids = {i for i in range(30) if i % 3 == 2}
     assert {r["media_id"] for r in out} == video_ids
-    # fake decode yields 4 frames; sampling caps at min(duration_s, 4)
+    # sampling caps at min(duration_s, the payload's frame count)
     by_id = {}
     for r in out:
         by_id.setdefault(r["media_id"], []).append(r["frame_index"])
-    assert all(len(v) == min((i % 30) + 1, 4) for i, v in by_id.items())
+    n_frames = {
+        r["media_id"]: media_probe.probe_bytes(bytes(r["payload"]))["n_frames"]
+        for r in media.where("kind = 'video'").collect()
+    }
+    assert all(
+        len(v) == min((i % 30) + 1, n_frames[i]) for i, v in by_id.items()
+    )
 
 
 def test_decode_dispatch_webp_matches_png():
@@ -285,15 +291,15 @@ def test_decode_dispatch_webp_matches_png():
     rng = np.random.default_rng(21)
     rgb = rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
     rgba = np.dstack([rgb, np.full((24, 32, 1), 255, dtype=np.uint8)])
-    via_webp = mm._decode(webp_codec.encode_webp_lossless(rgba), "image", fake=False)
-    via_png = mm._decode(media_codecs.encode_png(rgb), "image", fake=False)
+    via_webp = mm._decode(webp_codec.encode_webp_lossless(rgba), "image")
+    via_png = mm._decode(media_codecs.encode_png(rgb), "image")
     assert np.array_equal(via_webp[:, :, :3], via_png[:, :, :3])
     # a truncated lossy VP8 chunk fails typed AFTER a real container
     # parse; real lossy frames decode via vp8_codec (test_vp8_codec.py)
     lossy = (b"RIFF" + (20).to_bytes(4, "little") + b"WEBP" + b"VP8 "
              + (4).to_bytes(4, "little") + b"\x00" * 4)
     with pytest.raises(ValueError):
-        mm._decode(lossy, "image", fake=False)
+        mm._decode(lossy, "image")
 
 
 def test_decode_dispatch_flac_matches_wav():
@@ -303,8 +309,8 @@ def test_decode_dispatch_flac_matches_wav():
 
     t = np.arange(12000)
     pcm = (9000 * np.sin(t * 0.02) + 800 * np.sin(t * 0.31)).astype(np.int16)
-    via_flac = mm._decode(flac_codec.encode_flac(pcm, 16000), "audio", fake=False)
-    via_wav = mm._decode(media_codecs.encode_wav(pcm, 16000), "audio", fake=False)
+    via_flac = mm._decode(flac_codec.encode_flac(pcm, 16000), "audio")
+    via_wav = mm._decode(media_codecs.encode_wav(pcm, 16000), "audio")
     assert np.array_equal(via_flac, via_wav)
 
 
@@ -314,10 +320,10 @@ def test_decode_dispatch_bmp_and_ico():
     rng = np.random.default_rng(8)
     rgb = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
     rgba = np.dstack([rgb, np.full((16, 16, 1), 255, dtype=np.uint8)])
-    via_bmp = mm._decode(bmp_codec.encode_bmp(rgba), "image", fake=False)
-    via_png = mm._decode(media_codecs.encode_png(rgb), "image", fake=False)
+    via_bmp = mm._decode(bmp_codec.encode_bmp(rgba), "image")
+    via_png = mm._decode(media_codecs.encode_png(rgb), "image")
     assert np.array_equal(via_bmp[:, :, :3], via_png[:, :, :3])
-    via_ico = mm._decode(bmp_codec.encode_ico([rgba]), "image", fake=False)
+    via_ico = mm._decode(bmp_codec.encode_ico([rgba]), "image")
     assert np.array_equal(via_ico, rgba)
 
 
@@ -327,8 +333,8 @@ def test_decode_dispatch_tiff():
     rng = np.random.default_rng(12)
     rgb = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
     via_tiff = mm._decode(tiff_codec.encode_tiff(rgb, compression="lzw"),
-                          "image", fake=False)
-    via_png = mm._decode(media_codecs.encode_png(rgb), "image", fake=False)
+                          "image")
+    via_png = mm._decode(media_codecs.encode_png(rgb), "image")
     assert np.array_equal(via_tiff, via_png[:, :, :3])
 
 
@@ -345,9 +351,9 @@ def test_corrupt_payloads_degrade_per_row(spark):
     rows = [(0, "u0", "image", good, meta),
             (1, "u1", "image", bytes(bad), meta)]
     df = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-    got = mm.extract_features(df, fake=False).orderBy("media_id").collect()
+    got = mm.extract_features(df).orderBy("media_id").collect()
     assert [r["decoded"] for r in got] == [True, False]
-    hashed = mm.image_phash(df, fake=False).orderBy("media_id").collect()
+    hashed = mm.image_phash(df).orderBy("media_id").collect()
     assert [r["decoded"] for r in hashed] == [True, False]  # row flagged
 
 
@@ -362,7 +368,7 @@ def test_audio_features_accept_flac(spark):
             (1, "u1", "audio", media_codecs.encode_wav(pcm, 16000), meta)]
     df = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
     got = (
-        mm.audio_spectrogram_features(df, fake=False)
+        mm.audio_spectrogram_features(df)
         .orderBy("media_id")
         .collect()
     )

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import re
-import zlib
 
 import numpy as np
 import pytest
@@ -231,32 +230,59 @@ def test_media_table_schema_and_determinism(spark):
     assert a == b  # partitioning never changes content
 
 
-def test_extract_features_fake_decode(spark):
+def test_extract_features_decodes_every_minted_row(spark):
     media = mm.media_table(spark, n_rows=24, partitions=4)
-    feats = mm.extract_features(media, fake=True).collect()
+    feats = mm.extract_features(media).collect()
     assert len(feats) == 24
     for r in feats:
         assert r["decoded"] and len(r["feature"]) == mm.FEATURE_DIM
         assert all(0.0 <= x <= 1.0 for x in r["feature"])
     # determinism across runs
-    again = mm.extract_features(media, fake=True).collect()
+    again = mm.extract_features(media).collect()
     assert sorted(map(str, feats)) == sorted(map(str, again))
 
 
+def test_extract_features_default_is_the_png_moment_profile(spark):
+    """With default arguments the feature is the moment profile of the
+    pixels media_codecs.decode_png returns — never a synthetic stand-in."""
+    from pdf_parser_spark import media_codecs
+
+    png = media_codecs.encode_png(
+        np.random.default_rng(4).integers(0, 256, size=(20, 28, 3), dtype=np.uint8)
+    )
+    meta = {"mime": "image/png", "width": 28, "height": 20,
+            "duration_ms": None, "sample_rate": None}
+    df = spark.createDataFrame([(0, "u0", "image", png, meta)], schema=mm.MEDIA_SCHEMA)
+    (row,) = mm.extract_features(df).collect()
+    flat = media_codecs.decode_png(png).astype(np.float64).reshape(-1)
+    want = []
+    for c in np.array_split(flat, mm.FEATURE_DIM // 2):
+        want += [round(float(c.mean() / 255.0), 6), round(float(c.std() / 255.0), 6)]
+    assert row["decoded"] and row["feature"] == want
+
+
 def test_extract_features_real_decode_is_gated(spark):
-    media = mm.media_table(spark, n_rows=6, partitions=2)
-    rows = mm.extract_features(media, fake=False).collect()
+    # bytes no decoder recognises, labelled with each kind's usual mime
+    meta = {"mime": None, "width": None, "height": None,
+            "duration_ms": None, "sample_rate": None}
+    rows = [
+        (i, f"u{i}", ("image", "audio", "video")[i % 3],
+         (f"media-{i}-" * (i % 7 + 1)).encode(), meta)
+        for i in range(6)
+    ]
+    media = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
+    rows = mm.extract_features(media).collect()
+    assert len(rows) == 6
     assert all(not r["decoded"] and r["feature"] is None for r in rows)
 
 
 def test_resize_images_only_touches_images(spark):
     media = mm.media_table(spark, n_rows=30, partitions=3)
-    out = mm.resize_images(media, 16, 16, fake=True)
+    out = mm.resize_images(media, 16, 16)
     assert out.count() == 30
     imgs = out.filter(F.col("kind") == "image").collect()
     for r in imgs:
-        raw = zlib.decompress(bytes(r["payload"]))
-        assert len(raw) == 16 * 16 * 3
+        assert mm._decode(bytes(r["payload"]), "image").shape[:2] == (16, 16)
     # non-images untouched
     others = {r["media_id"]: bytes(r["payload"]) for r in out.filter(F.col("kind") != "image").collect()}
     orig = {r["media_id"]: bytes(r["payload"]) for r in media.filter(F.col("kind") != "image").collect()}
@@ -264,13 +290,22 @@ def test_resize_images_only_touches_images(spark):
 
 
 def test_sample_frames_fanout_driven_by_metadata(spark):
+    from pdf_parser_spark import media_probe
+
     media = mm.media_table(spark, n_rows=30, partitions=3)
-    frames = mm.sample_frames(media, every_ms=1000, fake=True)
+    frames = mm.sample_frames(media, every_ms=1000)
     pdf = frames.toPandas()
     vids = media.filter(F.col("kind") == "video").select(
-        "media_id", F.col("meta.duration_ms").alias("d")
+        "media_id", "payload", F.col("meta.duration_ms").alias("d")
     ).collect()
-    expect = {r["media_id"]: min(max(1, r["d"] // 1000), 4) for r in vids}
+    # one frame per second of duration, capped at the payload's frame count
+    expect = {
+        r["media_id"]: min(
+            max(1, r["d"] // 1000),
+            media_probe.probe_bytes(bytes(r["payload"]))["n_frames"],
+        )
+        for r in vids
+    }
     got = pdf.groupby("media_id").size().to_dict()
     assert got == expect
     assert (pdf["ts_ms"] == pdf["frame_index"] * 1000).all()
