@@ -355,6 +355,19 @@ def media_table(spark, n_rows: int = 64, partitions: int = 4) -> DataFrame:
     return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
+def _decode_pcm(data: bytes) -> tuple[np.ndarray, int]:
+    """WAV or FLAC payload → (int16 samples (n, channels), sample rate)."""
+    from pdf_parser_spark import media_codecs
+
+    if data.startswith(b"RIFF"):
+        return media_codecs.decode_wav(data)
+    if data.startswith(b"fLaC"):
+        from pdf_parser_spark import flac_codec
+
+        return flac_codec.decode_flac(data)
+    raise NotImplementedError("audio decode supports WAV and FLAC only")
+
+
 def _decode(payload: bytes, kind: str) -> np.ndarray:
     """Decode a media payload to an array.
 
@@ -433,19 +446,11 @@ def _decode(payload: bytes, kind: str) -> np.ndarray:
         # mkv/webm: same split — real EBML demux, raw RGB decodes,
         # compressed bitstreams raise from decode_mkv
         return mkv_demux.decode_mkv(data)
-    if kind == "audio" and data.startswith(b"RIFF"):
-        samples, _rate = media_codecs.decode_wav(data)
+    if kind == "audio":
+        samples, _rate = _decode_pcm(data)
         # int16 → uint8 (offset binary): keeps the moment-profile
-        # feature kernel shared across kinds
-        return ((samples.astype(np.int32) + (1 << 15)) >> 8).astype(
-            np.uint8
-        ).reshape(-1)
-    if kind == "audio" and data.startswith(b"fLaC"):
-        from pdf_parser_spark import flac_codec
-
-        samples, _rate = flac_codec.decode_flac(data)
-        # same int16-range → uint8 rebias as the WAV path, so a FLAC
-        # and a WAV of the same recording produce identical features
+        # feature kernel shared across kinds, and a FLAC and a WAV of the
+        # same recording produce identical features
         return ((samples.astype(np.int32) + (1 << 15)) >> 8).astype(
             np.uint8
         ).reshape(-1)
@@ -702,24 +707,12 @@ def audio_spectrogram_features(media: DataFrame, n_bands: int = 16,
     eps = 1e-12
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_parser_spark import media_codecs
-
         window = np.hanning(frame_len)
         for pdf in batches:
             feats, nfr, peaks, ok = [], [], [], []
             for payload in pdf["payload"]:
                 try:
-                    data = bytes(payload)
-                    if data.startswith(b"RIFF"):
-                        samples, rate = media_codecs.decode_wav(data)
-                    elif data.startswith(b"fLaC"):
-                        from pdf_parser_spark import flac_codec
-
-                        samples, rate = flac_codec.decode_flac(data)
-                    else:
-                        raise NotImplementedError(
-                            "audio decode supports WAV and FLAC only"
-                        )
+                    samples, rate = _decode_pcm(bytes(payload))
                     mono = samples.astype(np.float64).mean(axis=1) / 32768.0
                     if len(mono) < frame_len:
                         mono = np.pad(mono, (0, frame_len - len(mono)))
