@@ -10,9 +10,10 @@ these codecs are implemented here from the specs and the multimodal
 operators run their REAL branch for image/audio payloads. Video:
 YUV4MPEG2 (.y4m, the mjpegtools raw interchange format — a text header
 plus raw planar frames) is implemented below; the mp4 and mkv/webm
-CONTAINERS are demuxed from scratch too (mp4_demux.py, mkv_demux.py) —
-only compressed video bitstreams (h264/vp9/av1) stay gated, at the codec
-layer, after a real demux.
+CONTAINERS are demuxed from scratch too (mp4_demux.py, mkv_demux.py), and
+decode_track below turns either demuxed track's raw-RGB or AV1 samples
+into frames — only compressed video bitstreams (h264/vp9) stay gated, at
+the codec layer, after a real demux.
 
 Scope (everything the synthetic corpus and tests produce, plus the common
 real-world cases): 8-bit depth, color types 0 (grayscale), 2 (RGB),
@@ -28,9 +29,11 @@ from __future__ import annotations
 
 import functools
 import io
+import itertools
 import struct
 import wave
 import zlib
+from typing import NamedTuple
 
 import numpy as np
 
@@ -258,57 +261,165 @@ def encode_y4m(frames: "np.ndarray", fps: tuple[int, int] = (25, 1),
     return b"".join(out)
 
 
-@format_boundary("Y4M")
-def decode_y4m(data: bytes) -> "np.ndarray":
-    """(n_frames, h, w, 3) uint8 YUV frames from a YUV4MPEG2 stream.
+class Y4mLayout(NamedTuple):
+    width: int
+    height: int
+    colorspace: str
+    fps: tuple[int, int]
+    frame_bytes: int
+    offsets: tuple  # body offset of each frame, in stream order
 
-    Supports C444 and the C420 family (C420 / C420jpeg / C420mpeg2 /
-    C420paldv share the plane layout; chroma siting differences do not
-    change the stored bytes) — 4:2:0 chroma is upsampled 2x2
-    nearest-neighbor back to full resolution. Frame parameters after the
-    FRAME marker are tolerated and ignored. Raises on anything else
-    rather than mis-decoding.
+
+def parse_y4m(data: bytes) -> Y4mLayout:
+    """The stream header and the FRAME walk of a YUV4MPEG2 stream.
+
+    The one place the Y4M layout is read: decode_y4m and the header
+    probe (media_probe) both start here. C444 and the C420 family
+    (C420 / C420jpeg / C420mpeg2 / C420paldv share the plane layout);
+    parameters after a FRAME marker are skipped. Odd C420 dimensions and a
+    truncated last frame are left to the decoder, so a probe still counts
+    such frames.
     """
     if not data.startswith(_Y4M_SIG):
         raise ValueError("not a Y4M stream (bad signature)")
     nl = data.index(b"\n")
-    params = data[len(_Y4M_SIG):nl].split()
     w = h = None
+    fps = (25, 1)
     cs = "C420jpeg"  # the spec's default when no C tag is present
-    for p in params:
+    for p in data[len(_Y4M_SIG):nl].split():
         if p[:1] == b"W":
             w = int(p[1:])
         elif p[:1] == b"H":
             h = int(p[1:])
+        elif p[:1] == b"F":
+            num, den = p[1:].split(b":")
+            fps = (int(num), int(den))
         elif p[:1] == b"C":
             cs = p.decode()
     if not w or not h:
         raise ValueError("Y4M header missing W/H")
     if cs == "C444":
-        plane_y, plane_c = h * w, h * w
+        frame_bytes = 3 * w * h
     elif cs.startswith("C420"):
-        if h % 2 or w % 2:
-            raise ValueError("C420 stream with odd dimensions")
-        plane_y, plane_c = h * w, (h // 2) * (w // 2)
+        frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
     else:
         raise ValueError(f"unsupported Y4M colorspace {cs}")
-    frames = []
+    offsets = []
     pos = nl + 1
-    frame_bytes = plane_y + 2 * plane_c
     while pos < len(data):
         if data[pos:pos + 5] != b"FRAME":
             raise ValueError(f"expected FRAME marker at offset {pos}")
         pos = data.index(b"\n", pos) + 1
-        if pos + frame_bytes > len(data):
+        offsets.append(pos)
+        pos += frame_bytes
+    return Y4mLayout(w, h, cs, fps, frame_bytes, tuple(offsets))
+
+
+def _picks(indices, n: int):
+    """Frame numbers to decode out of ``n``: all of them for None, else
+    the ascending, non-negative ``indices`` up to the last frame (so
+    ``range(k)`` asks for at most the first k frames)."""
+    if indices is None:
+        return range(n)
+    return list(itertools.takewhile(lambda i: i < n, indices))
+
+
+def _stack(frames: list, h: int, w: int) -> "np.ndarray":
+    return np.stack(frames) if frames else np.zeros((0, h, w, 3), np.uint8)
+
+
+@format_boundary("Y4M")
+def decode_y4m(data: bytes, indices=None) -> "np.ndarray":
+    """(n_frames, h, w, 3) uint8 YUV frames from a YUV4MPEG2 stream.
+
+    4:2:0 chroma is upsampled 2x2 nearest-neighbor back to full
+    resolution. ``indices`` picks the frames to decode (None: all of
+    them; ascending, numbers past the last frame are skipped). Raises on
+    odd C420 dimensions and on a truncated frame it is asked to decode,
+    rather than mis-decoding.
+    """
+    y4m = parse_y4m(data)
+    w, h = y4m.width, y4m.height
+    if y4m.colorspace == "C444":
+        plane_c = h * w
+    elif h % 2 or w % 2:
+        raise ValueError("C420 stream with odd dimensions")
+    else:
+        plane_c = (h // 2) * (w // 2)
+    plane_y = h * w
+    frames = []
+    for i in _picks(indices, len(y4m.offsets)):
+        pos = y4m.offsets[i]
+        if pos + y4m.frame_bytes > len(data):
             raise ValueError("truncated Y4M frame")
         y = np.frombuffer(data, np.uint8, plane_y, pos).reshape(h, w)
         u = np.frombuffer(data, np.uint8, plane_c, pos + plane_y)
         v = np.frombuffer(data, np.uint8, plane_c, pos + plane_y + plane_c)
-        if cs == "C444":
+        if y4m.colorspace == "C444":
             u, v = u.reshape(h, w), v.reshape(h, w)
         else:
             u = u.reshape(h // 2, w // 2).repeat(2, 0).repeat(2, 1)
             v = v.reshape(h // 2, w // 2).repeat(2, 0).repeat(2, 1)
         frames.append(np.stack([y, u, v], axis=2))
-        pos += frame_bytes
-    return np.stack(frames) if frames else np.zeros((0, h, w, 3), np.uint8)
+    return _stack(frames, h, w)
+
+
+def decode_track(data: bytes, container: str, codec: str, width: int,
+                 height: int, samples: list, av1c: bytes | None,
+                 indices=None) -> "np.ndarray":
+    """(n_frames, h, w, 3) uint8 frames of one demuxed video track.
+
+    The sample decoder mp4_demux and mkv_demux share. ``samples`` lists
+    each frame's (offset, size, is_key) in ``data``; ``codec`` is "raw"
+    (each sample is h*w*3 RGB bytes) or "av1" (each sample is one temporal
+    unit carried without its TD OBU, as the AV1-ISOBMFF and Matroska
+    bindings store it, with the sequence header in the ``av1c`` record;
+    frames come back as YUV, see av1_codec.decode_av1). ``indices`` picks
+    the frames to decode (None: all; ascending, numbers past the last
+    frame are skipped); an AV1 frame then decodes from the nearest
+    preceding key frame through itself, so unrequested samples stay
+    untouched.
+    """
+    picks = _picks(indices, len(samples))
+    if codec == "raw":
+        want = height * width * 3
+        frames = []
+        for i in picks:
+            off, size, _key = samples[i]
+            if size != want:
+                raise ValueError(
+                    f"{container} raw sample size {size} != {want} for "
+                    f"{width}x{height} RGB"
+                )
+            frames.append(
+                np.frombuffer(data[off:off + size], np.uint8)
+                .reshape(height, width, 3)
+            )
+        return _stack(frames, height, width)
+    from pdf_parser_spark import av1_codec
+
+    if av1c is None:
+        raise ValueError(
+            f"{container}: AV1 track without its av1C record "
+            "(the mp4 av1C box, the mkv CodecPrivate)"
+        )
+    config = av1_codec.parse_av1c(av1c)["config_obus"]
+
+    def tu(i: int) -> bytes:  # reinsert the TD so the stream splits per frame
+        off, size, _key = samples[i]
+        chunk = data[off:off + size]
+        return chunk if chunk.startswith(b"\x12") else b"\x12\x00" + chunk
+
+    if indices is None:
+        return av1_codec.decode_av1(
+            b"".join(tu(i) for i in picks), config_obus=config
+        )
+    frames = []
+    for i in picks:
+        start = i
+        while start > 0 and not samples[start][2]:
+            start -= 1
+        frames.append(av1_codec.decode_av1(
+            b"".join(tu(k) for k in range(start, i + 1)), config_obus=config
+        )[-1])
+    return _stack(frames, height, width)

@@ -24,12 +24,13 @@ them inside its Arrow-batched mapInPandas stages.
 from __future__ import annotations
 
 import io
+import re
 import struct
 import wave
 
-from pdf_parser_spark.media_codecs import format_boundary
+from pdf_parser_spark.media_codecs import format_boundary, parse_y4m
 
-__all__ = ["probe_bytes"]
+__all__ = ["probe_bytes", "sniff"]
 
 _EMPTY = {
     "format": None, "codec": None, "width": None, "height": None,
@@ -296,37 +297,12 @@ def _probe_flac(data: bytes) -> dict:
 
 
 def _probe_y4m(data: bytes) -> dict:
-    nl = data.index(b"\n")
-    w = h = None
-    fps = (25, 1)
-    cs = "C420jpeg"
-    for p in data[9:nl].split():
-        if p[:1] == b"W":
-            w = int(p[1:])
-        elif p[:1] == b"H":
-            h = int(p[1:])
-        elif p[:1] == b"F":
-            num, den = p[1:].split(b":")
-            fps = (int(num), int(den))
-        elif p[:1] == b"C":
-            cs = p.decode()
-    if not w or not h:
-        raise ValueError("Y4M header missing W/H")
-    if cs == "C444":
-        frame_bytes = 3 * w * h
-    elif cs.startswith("C420"):
-        frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
-    else:
-        raise ValueError(f"Y4M colorspace {cs} not understood")
-    frames, pos = 0, nl + 1
-    while pos < len(data):
-        if data[pos:pos + 5] != b"FRAME":
-            raise ValueError(f"Y4M: expected FRAME at {pos}")
-        pos = data.index(b"\n", pos) + 1 + frame_bytes
-        frames += 1
+    y4m = parse_y4m(data)
+    frames = len(y4m.offsets)
+    num, den = y4m.fps
     return _out(
-        format="y4m", codec="raw", width=w, height=h, n_frames=frames,
-        duration_ms=frames * 1000 * fps[1] // max(1, fps[0]),
+        format="y4m", codec="raw", width=y4m.width, height=y4m.height,
+        n_frames=frames, duration_ms=frames * 1000 * den // max(1, num),
         bit_depth=8, n_keyframes=frames,
     )
 
@@ -638,65 +614,85 @@ def _probe_ivf(data: bytes) -> dict:
 # dispatch
 # ---------------------------------------------------------------------------
 
+# Format names by leading bytes, tried in this order (the first match
+# wins). An ISO BMFF ``ftyp`` is split into avif / heic / mp4 by its
+# brands; bare mp3 frame sync has no magic and is tried last.
+_MAGIC = re.compile(
+    b"|".join(b"(?P<%s>%s)" % (name, pattern) for name, pattern in (
+        (b"png", rb"\x89PNG\r\n\x1a\n"),
+        (b"jpeg", rb"\xff\xd8"),
+        (b"gif", rb"GIF8[79]a"),
+        (b"webp", rb"RIFF....WEBP"),
+        (b"wav", rb"RIFF....WAVE"),
+        (b"bmp", rb"BM"),
+        (b"ico", rb"\x00\x00[\x01\x02]\x00"),
+        (b"tiff", rb"II\x2a\x00|MM\x00\x2a"),
+        (b"flac", rb"fLaC"),
+        (b"y4m", rb"YUV4MPEG2"),
+        (b"mp4", rb"....ftyp"),
+        (b"mkv", rb"\x1a\x45\xdf\xa3"),
+        (b"ivf", rb"DKIF"),
+        # low-overhead AV1 OBU stream: a TD or sequence header first
+        (b"av1", rb"[\x12\x0a]"),
+        (b"mp3", rb"ID3"),
+    )),
+    re.DOTALL,
+)
+
+
+def sniff(data: bytes) -> str:
+    """The format name of a media payload, from its leading bytes alone:
+    png, jpeg, gif, webp, wav, bmp, ico, tiff, flac, y4m, avif, heic, mp4,
+    mkv, ivf, av1 or mp3. Raises ValueError for a payload under 12 bytes
+    or with no known magic. The one magic-byte table of the engine:
+    probe_bytes and the multimodal decoders dispatch on its name."""
+    if len(data) < 12:
+        raise ValueError("payload too short to identify")
+    m = _MAGIC.match(data)
+    if m is None:
+        if _is_bare_mp3(data):
+            return "mp3"
+        raise ValueError(f"unrecognized media magic {data[:8]!r}")
+    if m.lastgroup == "mp4":
+        from pdf_parser_spark import avif_codec, heif_codec
+
+        if avif_codec.is_avif(data):
+            return "avif"
+        if heif_codec.is_heic(data):
+            return "heic"
+    return m.lastgroup
+
+
+def _is_bare_mp3(data: bytes) -> bool:
+    """Bare mp3 sync is promiscuous (11 set bits): only a header whose own
+    frame length lands exactly on a second valid header counts. Free-format
+    bits (bitrate_index 0) in an unconfirmed sync are no evidence of mp3
+    either: such a payload is unrecognized, not a "free-format mp3"."""
+    try:
+        first = _mp3_frame_header(data, 0)
+        return first is not None and _mp3_frame_header(data, first[0]) is not None
+    except ValueError:
+        return False
+
+
+_PROBES = {
+    "png": _probe_png, "jpeg": _probe_jpeg, "gif": _probe_gif,
+    "webp": _probe_webp, "wav": _probe_wav, "bmp": _probe_bmp,
+    "ico": _probe_ico, "tiff": _probe_tiff, "flac": _probe_flac,
+    "y4m": _probe_y4m, "avif": _probe_avif, "heic": _probe_heic,
+    "mp4": _probe_mp4, "mkv": _probe_mkv, "ivf": _probe_ivf,
+    "av1": _probe_av1_stream, "mp3": _probe_mp3,
+}
+
 
 @format_boundary("media payload")
 def probe_bytes(data: bytes) -> dict:
     """Identify a media payload from its header bytes alone.
 
     Returns {format, codec, width, height, n_frames, duration_ms,
-    sample_rate, bit_depth, n_keyframes} (absent fields None). Raises
+    sample_rate, bit_depth, n_keyframes} (absent fields None); ``format``
+    is the sniff name, except "av1-obu" for a bare AV1 stream. Raises
     ValueError for unknown or malformed payloads — never decodes pixels
     or samples, so gated-bitstream payloads (h264/vp9 tracks) still
     probe."""
-    if len(data) < 12:
-        raise ValueError("payload too short to identify")
-    if data.startswith(b"\x89PNG\r\n\x1a\n"):
-        return _probe_png(data)
-    if data[:2] == b"\xff\xd8":
-        return _probe_jpeg(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return _probe_gif(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        return _probe_webp(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        return _probe_wav(data)
-    if data[:2] == b"BM":
-        return _probe_bmp(data)
-    if data[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
-        return _probe_ico(data)
-    if data[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-        return _probe_tiff(data)
-    if data[:4] == b"fLaC":
-        return _probe_flac(data)
-    if data.startswith(b"YUV4MPEG2"):
-        return _probe_y4m(data)
-    if data[4:8] == b"ftyp":
-        from pdf_parser_spark import avif_codec, heif_codec
-
-        if avif_codec.is_avif(data):
-            return _probe_avif(data)
-        if heif_codec.is_heic(data):
-            return _probe_heic(data)
-        return _probe_mp4(data)
-    if data[:4] == b"\x1a\x45\xdf\xa3":
-        return _probe_mkv(data)
-    if data[:4] == b"DKIF":
-        return _probe_ivf(data)
-    if data[0] in (0x12, 0x0A) and not data[0] & 0x80:
-        # low-overhead AV1 OBU stream (TD or sequence-header first)
-        return _probe_av1_stream(data)
-    if data[:3] == b"ID3":
-        return _probe_mp3(data)
-    # bare mp3 sync is promiscuous (11 set bits); require that the header's
-    # own frame length lands exactly on a second valid header before
-    # classifying — every other magic above was tried first. Free-format
-    # bits (bitrate_index 0) in an unconfirmed sync are no evidence of mp3
-    # either: such a payload is unrecognized, not a "free-format mp3".
-    try:
-        first = _mp3_frame_header(data, 0)
-        is_mp3 = first is not None and _mp3_frame_header(data, first[0]) is not None
-    except ValueError:
-        is_mp3 = False
-    if is_mp3:
-        return _probe_mp3(data)
-    raise ValueError(f"unrecognized media magic {data[:8]!r}")
+    return _PROBES[sniff(data)](data)

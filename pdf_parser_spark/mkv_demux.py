@@ -41,7 +41,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from pdf_parser_spark.media_codecs import format_boundary
+from pdf_parser_spark.media_codecs import decode_track, format_boundary
 
 # Matroska element IDs (public registry), as the raw on-disk byte strings
 _ID_EBML = b"\x1a\x45\xdf\xa3"
@@ -247,50 +247,30 @@ def demux_mkv(data: bytes) -> MkvTrack:
 
 
 @format_boundary("mkv")
-def decode_mkv(data: bytes) -> "np.ndarray":
+def decode_mkv(data: bytes, indices=None) -> "np.ndarray":
     """mkv/webm → (n_frames, h, w, 3) uint8 frame stack.
 
     Real decode for ``V_UNCOMPRESSED`` RGB frames and ``V_AV1`` (the
     from-scratch OBU layer rebuilds the stream from the CodecPrivate av1C
     record + block frames; reconstruction via the system decoder — frames
-    come back as YUV, see av1_codec.decode_av1). Other compressed codecs
+    come back as YUV, see media_codecs.decode_track). ``indices`` picks
+    the frames to decode (None: all). Other compressed codecs
     demux fine but raise here — those bitstream decoders are out of
     from-scratch scope AND absent from this container (demux_mkv still
     returns the full frame table)."""
     track = demux_mkv(data)
-    if track.codec == "V_AV1":
-        from pdf_parser_spark import av1_codec
-
-        if track.codec_private is None:
-            raise ValueError("mkv: V_AV1 track without CodecPrivate (av1C)")
-        config = av1_codec.parse_av1c(track.codec_private)["config_obus"]
-        # each block is one temporal unit carried without its TD OBU
-        parts = []
-        for f in track.frames:
-            chunk = data[f.offset : f.offset + f.size]
-            if not chunk.startswith(b"\x12"):
-                parts.append(b"\x12\x00")
-            parts.append(chunk)
-        return av1_codec.decode_av1(b"".join(parts), config_obus=config)
-    if track.codec != _RAW_CODEC_ID:
+    codec = {_RAW_CODEC_ID: "raw", "V_AV1": "av1"}.get(track.codec)
+    if codec is None:
         raise NotImplementedError(
             f"mkv codec {track.codec!r}: compressed bitstream decode needs a "
             "codec library not present in this container (demux_mkv still "
             "returns the full frame table)"
         )
-    h, w = track.height, track.width
-    want = h * w * 3
-    out = []
-    for f in track.frames:
-        if f.size != want:
-            raise ValueError(
-                f"mkv raw frame size {f.size} != {want} for {w}x{h} RGB"
-            )
-        out.append(
-            np.frombuffer(data[f.offset : f.offset + f.size], dtype=np.uint8)
-            .reshape(h, w, 3)
-        )
-    return np.stack(out) if out else np.zeros((0, h, w, 3), np.uint8)
+    return decode_track(
+        data, "mkv", codec, track.width, track.height,
+        [(f.offset, f.size, f.is_key) for f in track.frames],
+        track.codec_private, indices,
+    )
 
 
 # ---------------------------------------------------------------------------

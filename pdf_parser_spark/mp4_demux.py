@@ -55,7 +55,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from pdf_parser_spark.media_codecs import format_boundary
+from pdf_parser_spark.media_codecs import decode_track, format_boundary
 
 _RAW_FOURCC = b"raw "  # ISO/QuickTime uncompressed RGB video sample entry
 
@@ -274,54 +274,32 @@ def demux_mp4(data: bytes) -> Mp4Track:
 
 
 @format_boundary("mp4")
-def decode_mp4(data: bytes) -> "np.ndarray":
+def decode_mp4(data: bytes, indices=None) -> "np.ndarray":
     """mp4 → (n_frames, h, w, 3) uint8 frame stack.
 
     Real decode for two sample entries: uncompressed ``raw `` (each sample
     is h*w*3 RGB bytes) and ``av01`` (AV1 — the from-scratch OBU layer
     rebuilds the stream from the av1C config + samples, reconstruction via
     the system decoder; frames come back as YUV like decode_y4m's, see
-    av1_codec.decode_av1). Other compressed codecs (H.264/VP9) demux fine
+    media_codecs.decode_track). ``indices`` picks the frames to decode
+    (None: all). Other compressed codecs (H.264/VP9) demux fine
     but raise here — those bitstream decoders are genuinely out of
     from-scratch scope AND absent from this container; the sample table
     above is still available via demux_mp4.
     """
     track = demux_mp4(data)
-    if track.codec == "av01":
-        from pdf_parser_spark import av1_codec
-
-        if track.codec_config is None:
-            raise ValueError("mp4: av01 track without an av1C box")
-        config = av1_codec.parse_av1c(track.codec_config)["config_obus"]
-        # each mp4 sample is one temporal unit, carried without its TD OBU
-        # (the AV1-ISOBMFF binding keeps TDs out of samples) — reinsert
-        # them so the rebuilt stream splits back into per-frame TUs
-        parts = []
-        for s in track.samples:
-            chunk = data[s.offset : s.offset + s.size]
-            if not chunk.startswith(b"\x12"):
-                parts.append(b"\x12\x00")
-            parts.append(chunk)
-        return av1_codec.decode_av1(b"".join(parts), config_obus=config)
-    if track.codec != _RAW_FOURCC.decode("latin-1"):
+    codec = {_RAW_FOURCC.decode("latin-1"): "raw", "av01": "av1"}.get(track.codec)
+    if codec is None:
         raise NotImplementedError(
             f"mp4 codec {track.codec!r}: compressed bitstream decode needs a "
             "codec library not present in this container (demux_mp4 still "
             "returns the full sample table)"
         )
-    h, w = track.height, track.width
-    want = h * w * 3
-    frames = []
-    for s in track.samples:
-        if s.size != want:
-            raise ValueError(
-                f"mp4 raw sample size {s.size} != {want} for {w}x{h} RGB"
-            )
-        frames.append(
-            np.frombuffer(data[s.offset : s.offset + s.size], dtype=np.uint8)
-            .reshape(h, w, 3)
-        )
-    return np.stack(frames) if frames else np.zeros((0, h, w, 3), np.uint8)
+    return decode_track(
+        data, "mp4", codec, track.width, track.height,
+        [(s.offset, s.size, s.is_sync) for s in track.samples],
+        track.codec_config, indices,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,11 @@ fan-out), never with made-up features.
 Format-coverage table (the one place to size real-crawl media coverage;
 each row names its implementing module and what happens OUTSIDE scope —
 "refuses" means a loud ValueError/NotImplementedError, never a silent
-mis-decode):
+mis-decode). Every payload's format is named in one place, the magic
+table of media_probe.sniff; the decode dispatch (_decode, _decode_pcm,
+_decode_sampled) and resize_images' re-encoder are lookups keyed by that
+name, and a name with no entry for the row's kind raises
+NotImplementedError:
 
     kind   format / layer                  real decode?  out-of-scope behavior
     -----  ------------------------------  ------------  -------------------------------
@@ -72,16 +76,22 @@ mis-decode):
            stereo decorrelation modes,                   stream MD5 verified)
            rice residuals)
     audio  mp3 / AAC bitstreams            no            NotImplementedError at the
-                                                         codec layer (multimodal.py
-                                                         _decode gate); mp3 HEADER
+                                                         codec layer (no "mp3" entry
+                                                         in multimodal.py's decoder
+                                                         tables); mp3 HEADER
                                                          probe (frame walk: exact
                                                          frame count/duration/rate,
                                                          VBR included) works without
                                                          decode (media_probe.py)
-    video  YUV4MPEG2 (raw frames)          yes           media_codecs.py
+    video  YUV4MPEG2 (raw frames)          yes           media_codecs.py (one header
+                                                         parser, parse_y4m, for the
+                                                         decoder and the probe)
     video  mp4/ISO-BMFF container          demux: yes    mp4_demux.py; raw RGB and
            (any codec inside)              decode: raw   av01 (AV1 via av1_codec +
-                                           RGB + AV1     system decoder) decode fully;
+                                           RGB + AV1     system decoder) decode fully
+                                                         or per requested frame
+                                                         (media_codecs.decode_track,
+                                                         shared with mkv);
                                                          h264/h265/vp9 fourccs →
                                                          NotImplementedError AFTER
                                                          a real demux (stsz/stco/stts
@@ -119,6 +129,7 @@ Scale notes:
 from __future__ import annotations
 
 import functools
+import importlib
 import zlib
 from typing import Iterator
 
@@ -355,97 +366,76 @@ def media_table(spark, n_rows: int = 64, partitions: int = 4) -> DataFrame:
     return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
+def _codec(path: str):
+    """The function ``module.name`` of pdf_parser_spark, imported on first
+    use so a worker loads only the codecs its rows need."""
+    module, name = path.split(".")
+    return getattr(importlib.import_module(f"pdf_parser_spark.{module}"), name)
+
+
+# Decoders by the format name media_probe.sniff gives a payload, one
+# table per kind a format decodes as.
+_IMAGE = {
+    "png": "media_codecs.decode_png",
+    "jpeg": "jpeg_codec.decode_jpeg",
+    "bmp": "bmp_codec.decode_bmp",
+    "ico": "bmp_codec.decode_ico",  # favicons: the largest entry
+    "tiff": "tiff_codec.decode_tiff",
+    "avif": "avif_codec.decode_avif",
+    "heic": "heif_codec.decode_heic",
+}
+# (frames, durations) decoders: an image row takes the first composited
+# frame, a video row the whole (n, H, W, 4) stack. Every frame composites
+# from frame 0, so these always decode in full.
+_ANIMATED = {
+    "gif": "gif_codec.decode_gif",
+    "webp": "webp_codec.decode_webp_frames",
+}
+# video containers whose decoders take the frame numbers to decode
+_VIDEO = {
+    "y4m": "media_codecs.decode_y4m",
+    "mp4": "mp4_demux.decode_mp4",
+    "mkv": "mkv_demux.decode_mkv",
+}
+_AUDIO = {
+    "wav": "media_codecs.decode_wav",
+    "flac": "flac_codec.decode_flac",
+}
+
+
+def _sniff(data: bytes) -> str | None:
+    """media_probe.sniff's format name, or None for bytes it cannot name."""
+    from pdf_parser_spark import media_probe
+
+    try:
+        return media_probe.sniff(data)
+    except ValueError:
+        return None
+
+
 def _decode_pcm(data: bytes) -> tuple[np.ndarray, int]:
     """WAV or FLAC payload → (int16 samples (n, channels), sample rate)."""
-    from pdf_parser_spark import media_codecs
-
-    if data.startswith(b"RIFF"):
-        return media_codecs.decode_wav(data)
-    if data.startswith(b"fLaC"):
-        from pdf_parser_spark import flac_codec
-
-        return flac_codec.decode_flac(data)
-    raise NotImplementedError("audio decode supports WAV and FLAC only")
+    path = _AUDIO.get(_sniff(data))
+    if path is None:
+        raise NotImplementedError("audio decode supports WAV and FLAC only")
+    return _codec(path)(data)
 
 
 def _decode(payload: bytes, kind: str) -> np.ndarray:
     """Decode a media payload to an array.
 
-    Image payloads decode as PNG, JPEG, GIF, WebP, or AVIF (magic-byte
-    dispatch), audio as 16-bit PCM WAV or FLAC, and
-    video as YUV4MPEG2 frame stacks, mp4 (raw RGB or av01/AV1), or
-    mkv/webm (raw RGB or V_AV1) via the from-scratch codecs
-    (media_codecs.py, jpeg_codec.py, av1_codec.py's OBU layer — audio
-    samples re-biased to uint8 so every kind feeds the same feature
-    kernel). AV1 reconstruction dispatches to the system dav1d/libaom;
-    formats with neither a from-scratch decoder nor an in-container
-    library (mp3; h264/vp9 video BITSTREAMS — the mp4/mkv containers
-    themselves demux fine) raise NotImplementedError.
+    Image payloads decode as PNG, JPEG, GIF, WebP, BMP, ICO, TIFF, AVIF
+    or HEIC, audio as 16-bit PCM WAV or FLAC, and video as YUV4MPEG2
+    frame stacks, mp4 (raw RGB or av01/AV1), mkv/webm (raw RGB or V_AV1)
+    or animated GIF/WebP, dispatched on media_probe.sniff's format name
+    to the from-scratch codecs (audio samples re-biased to uint8 so every
+    kind feeds the same feature kernel). AV1 reconstruction dispatches to
+    the system dav1d/libaom, HEVC to libheif; formats with neither a
+    from-scratch decoder nor an in-container library (mp3; h264/vp9
+    video BITSTREAMS — the mp4/mkv containers themselves demux fine) and
+    a format outside its kind raise NotImplementedError.
     """
-    from pdf_parser_spark import media_codecs
-
     data = payload or b""
-    if kind == "image" and data.startswith(b"\x89PNG"):
-        return media_codecs.decode_png(data)
-    if kind == "image" and data[:2] == b"\xff\xd8":
-        from pdf_parser_spark import jpeg_codec
-
-        return jpeg_codec.decode_jpeg(data)
-    if kind == "image" and data[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-        from pdf_parser_spark import tiff_codec
-
-        return tiff_codec.decode_tiff(data)
-    if kind == "image" and data[:2] == b"BM":
-        from pdf_parser_spark import bmp_codec
-
-        return bmp_codec.decode_bmp(data)
-    if kind == "image" and data[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
-        from pdf_parser_spark import bmp_codec
-
-        # favicons: the largest entry is the image a pipeline wants
-        return bmp_codec.decode_ico(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP" and kind in (
-        "image", "video",
-    ):
-        from pdf_parser_spark import webp_codec
-
-        # VP8L, lossy VP8, ALPH alpha, and VP8X/ANIM all decode
-        # fully AFTER the (real) RIFF container parse; animated
-        # WebP carried as video keeps the (n, H, W, 4) stack,
-        # mirroring the GIF handling below
-        frames, _durs = webp_codec.decode_webp_frames(data)
-        return frames[0] if kind == "image" else frames
-    if data[:6] in (b"GIF87a", b"GIF89a") and kind in ("image", "video"):
-        from pdf_parser_spark import gif_codec
-
-        frames, _delays = gif_codec.decode_gif(data)
-        # image rows take the first composited frame; animated GIFs
-        # carried as video keep the full (n, H, W, 4) stack
-        return frames[0] if kind == "image" else frames
-    if kind == "video" and data.startswith(b"YUV4MPEG2"):
-        return media_codecs.decode_y4m(data)
-    if kind == "image" and data[4:8] == b"ftyp":
-        from pdf_parser_spark import avif_codec, heif_codec
-
-        # AVIF/HEIC: from-scratch BMFF item layer; AV1 frames via
-        # the system dav1d/libaom, HEVC frames via libheif — RGB out,
-        # or RGBA when an auxiliary alpha item/channel is present
-        if avif_codec.is_avif(data):
-            return avif_codec.decode_avif(data)
-        if heif_codec.is_heic(data):
-            return heif_codec.decode_heic(data)
-    if kind == "video" and data[4:8] == b"ftyp":
-        from pdf_parser_spark import mp4_demux
-
-        # raw-RGB tracks decode fully; compressed codecs raise from
-        # decode_mp4 AFTER the (real) container demux
-        return mp4_demux.decode_mp4(data)
-    if kind == "video" and data.startswith(b"\x1a\x45\xdf\xa3"):
-        from pdf_parser_spark import mkv_demux
-
-        # mkv/webm: same split — real EBML demux, raw RGB decodes,
-        # compressed bitstreams raise from decode_mkv
-        return mkv_demux.decode_mkv(data)
     if kind == "audio":
         samples, _rate = _decode_pcm(data)
         # int16 → uint8 (offset binary): keeps the moment-profile
@@ -454,6 +444,14 @@ def _decode(payload: bytes, kind: str) -> np.ndarray:
         return ((samples.astype(np.int32) + (1 << 15)) >> 8).astype(
             np.uint8
         ).reshape(-1)
+    fmt = _sniff(data)
+    if kind == "image" and fmt in _IMAGE:
+        return _codec(_IMAGE[fmt])(data)
+    if kind == "video" and fmt in _VIDEO:
+        return _codec(_VIDEO[fmt])(data)
+    if kind in ("image", "video") and fmt in _ANIMATED:
+        frames, _durations = _codec(_ANIMATED[fmt])(data)
+        return frames[0] if kind == "image" else frames
     raise NotImplementedError(
         f"no {kind} decoder for this payload: unknown format, or a "
         "compressed bitstream (mp3, h264, vp9) that needs a codec library "
@@ -826,10 +824,12 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
     """Image resize stage: decode → nearest-neighbour resample → re-encode.
 
     Format-preserving: every corpus image format re-encodes
-    in its own container (PNG/JPEG/GIF/BMP/TIFF/ICO via the from-scratch
-    codecs; WebP back as WebP in the lossless flavor; AVIF via the
-    optional native encoder, PNG fallback where librav1e is absent) —
-    output payloads are themselves decodable, so resize chains compose.
+    in its own container, picked by the input's sniff name (PNG/JPEG/GIF/
+    BMP/TIFF/ICO via the from-scratch codecs; WebP back as WebP in the
+    lossless flavor; AVIF and HEIC via the optional native encoders, PNG
+    where an encoder is absent or refuses the size, e.g. under rav1e's
+    16x16 floor) — output payloads are themselves decodable, so resize
+    chains compose.
     Undecodable images pass through as they are; non-image rows pass
     through untouched (filter pushdown keeps them out of the UDF
     entirely).
@@ -837,55 +837,42 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
     images = media.filter(F.col("kind") == "image")
     other = media.filter(F.col("kind") != "image")
 
-    def reencode(data: bytes, arr: np.ndarray) -> bytes:
+    def reencode(fmt: str | None, arr: np.ndarray) -> bytes:
         from pdf_parser_spark import (
-            av1_codec, avif_codec, bmp_codec, gif_codec, jpeg_codec,
+            avif_codec, bmp_codec, gif_codec, heif_codec, jpeg_codec,
             media_codecs, tiff_codec, webp_codec,
         )
 
-        def rgb3(a):
-            if a.ndim == 2:
-                a = a[:, :, None]
-            if a.shape[2] == 1:
-                return np.repeat(a, 3, axis=2)
-            return a[:, :, :3]
+        a = arr[:, :, None] if arr.ndim == 2 else arr
+        rgb = np.repeat(a, 3, axis=2) if a.shape[2] == 1 else a[:, :, :3]
+        alpha = (
+            arr[:, :, 3:4] if arr.ndim == 3 and arr.shape[2] == 4
+            else np.full(rgb.shape[:2] + (1,), 255, np.uint8)
+        )
+        rgba = np.concatenate([rgb, alpha], axis=-1)
 
-        def rgba(a):
-            a3 = rgb3(a)
-            if arr.ndim == 3 and arr.shape[2] == 4:
-                alpha = arr[:, :, 3:4]
-            else:
-                alpha = np.full(a3.shape[:2] + (1,), 255, np.uint8)
-            return np.concatenate([a3, alpha], axis=-1)
-
-        if data[:2] == b"\xff\xd8":
-            a = arr if arr.ndim == 2 or arr.shape[2] in (1, 3) else rgb3(arr)
-            return jpeg_codec.encode_jpeg(a, quality=90)
-        if data[:6] in (b"GIF87a", b"GIF89a"):
-            # resize adds no colors, so the exact-palette writer fits
-            return gif_codec.encode_gif(rgb3(arr))
-        if data[:2] == b"BM":
-            return bmp_codec.encode_bmp(rgb3(arr))
-        if data[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-            return tiff_codec.encode_tiff(rgb3(arr), compression="lzw")
-        if data[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
-            return bmp_codec.encode_ico([rgba(arr)])
-        if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-            return webp_codec.encode_webp_lossless(rgba(arr))
-        if data[4:8] == b"ftyp" and avif_codec.is_avif(data):
+        def native(encode):
             try:
-                return avif_codec.encode_avif_rgb(rgb3(arr))
-            except NotImplementedError:
-                pass  # no encoder / under rav1e's 16x16 floor → PNG below
-        if data[4:8] == b"ftyp":
-            from pdf_parser_spark import heif_codec
+                return encode(rgb)
+            except (NotImplementedError, ValueError):
+                # no encoder here, or a size under its floor (rav1e 16x16)
+                return media_codecs.encode_png(arr)
 
-            if heif_codec.is_heic(data):
-                try:
-                    return heif_codec.encode_heic_native(rgb3(arr))
-                except (NotImplementedError, ValueError):
-                    pass  # no x265 / size the encoder refuses → PNG below
-        return media_codecs.encode_png(arr)
+        encoders = {
+            "jpeg": lambda: jpeg_codec.encode_jpeg(
+                arr if arr.ndim == 2 or arr.shape[2] in (1, 3) else rgb,
+                quality=90,
+            ),
+            # resize adds no colors, so the exact-palette writer fits
+            "gif": lambda: gif_codec.encode_gif(rgb),
+            "bmp": lambda: bmp_codec.encode_bmp(rgb),
+            "tiff": lambda: tiff_codec.encode_tiff(rgb, compression="lzw"),
+            "ico": lambda: bmp_codec.encode_ico([rgba]),
+            "webp": lambda: webp_codec.encode_webp_lossless(rgba),
+            "avif": lambda: native(avif_codec.encode_avif_rgb),
+            "heic": lambda: native(heif_codec.encode_heic_native),
+        }
+        return encoders.get(fmt, lambda: media_codecs.encode_png(arr))()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -899,7 +886,7 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
                     continue
                 ys = (np.arange(height) * arr.shape[0] // height)
                 xs = (np.arange(width) * arr.shape[1] // width)
-                out_payload.append(reencode(data, arr[ys][:, xs]))
+                out_payload.append(reencode(_sniff(data), arr[ys][:, xs]))
             pdf = pdf.assign(payload=out_payload)
             yield pdf
 
@@ -907,163 +894,29 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
     return resized.unionByName(other)
 
 
-def _decode_frame_indices(data: bytes, indices: list[int]):
-    """Decode ONLY the requested frame indices of a real video payload.
-
-    Returns {index: frame_array} or None when the container cannot be
-    selectively decoded (animated GIF/WebP composite from frame 0, so
-    selective decode saves nothing there — callers fall back to the full
-    path). This is what makes the sampling operators scale: a 2-hour mp4
-    sampled every minute decodes ~120 frames, not ~200k.
-
-    mp4/mkv raw: direct byte-range slices from the demuxed sample table.
-    mp4 av01 / mkv V_AV1: for each index, decode the temporal units from
-    the nearest preceding sync sample through the target (all-intra
-    streams decode exactly one TU per requested frame).
-    y4m: frame offsets are arithmetic — each needed frame is rewrapped
-    as a 1-frame stream through the normal decoder.
-    """
-    out: dict[int, np.ndarray] = {}
-    if data.startswith(b"YUV4MPEG2"):
-        from pdf_parser_spark import media_codecs
-
-        nl = data.index(b"\n")
-        header = data[: nl + 1]
-        w = h = None
-        cs = "C420jpeg"
-        for prm in data[9:nl].split():
-            if prm[:1] == b"W":
-                w = int(prm[1:])
-            elif prm[:1] == b"H":
-                h = int(prm[1:])
-            elif prm[:1] == b"C":
-                cs = prm.decode()
-        if not w or not h:
-            raise ValueError("Y4M header missing W/H")
-        if cs == "C444":
-            frame_bytes = 3 * w * h
-        elif cs.startswith("C420"):
-            frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
-        else:
-            return None
-        offsets = []
-        pos = nl + 1
-        while pos < len(data):
-            if data[pos:pos + 5] != b"FRAME":
-                raise ValueError(f"Y4M: expected FRAME at {pos}")
-            body = data.index(b"\n", pos) + 1
-            offsets.append((pos, body))
-            pos = body + frame_bytes
-        for idx in indices:
-            mark, body = offsets[idx]
-            mini = header + data[mark:body + frame_bytes]
-            out[idx] = media_codecs.decode_y4m(mini)[0]
-        return out
-    if data[4:8] == b"ftyp":
-        from pdf_parser_spark import av1_codec, mp4_demux
-
-        track = mp4_demux.demux_mp4(data)
-        samples = track.samples
-        if track.codec == "raw ":
-            want = track.height * track.width * 3
-            for idx in indices:
-                sm = samples[idx]
-                if sm.size != want:
-                    raise ValueError("mp4 raw sample size mismatch")
-                out[idx] = np.frombuffer(
-                    data[sm.offset:sm.offset + sm.size], np.uint8
-                ).reshape(track.height, track.width, 3)
-            return out
-        if track.codec == "av01":
-            if track.codec_config is None:
-                raise ValueError("mp4: av01 track without an av1C box")
-            config = av1_codec.parse_av1c(track.codec_config)["config_obus"]
-
-            def tu(i):
-                sm = samples[i]
-                chunk = data[sm.offset:sm.offset + sm.size]
-                return chunk if chunk.startswith(b"\x12") else b"\x12\x00" + chunk
-
-            for idx in indices:
-                start = idx
-                while start > 0 and not samples[start].is_sync:
-                    start -= 1
-                frames = av1_codec.decode_av1(
-                    b"".join(tu(i) for i in range(start, idx + 1)),
-                    config_obus=config,
-                )
-                out[idx] = frames[-1]
-            return out
-        return None
-    if data[:4] == b"\x1a\x45\xdf\xa3":
-        from pdf_parser_spark import av1_codec, mkv_demux
-
-        track = mkv_demux.demux_mkv(data)
-        frames = track.frames
-        if track.codec == "V_UNCOMPRESSED":
-            want = track.height * track.width * 3
-            for idx in indices:
-                fr = frames[idx]
-                if fr.size != want:
-                    raise ValueError("mkv raw frame size mismatch")
-                out[idx] = np.frombuffer(
-                    data[fr.offset:fr.offset + fr.size], np.uint8
-                ).reshape(track.height, track.width, 3)
-            return out
-        if track.codec == "V_AV1":
-            if track.codec_private is None:
-                raise ValueError("mkv: V_AV1 track without CodecPrivate")
-            config = av1_codec.parse_av1c(track.codec_private)["config_obus"]
-
-            def tu(i):
-                fr = frames[i]
-                chunk = data[fr.offset:fr.offset + fr.size]
-                return chunk if chunk.startswith(b"\x12") else b"\x12\x00" + chunk
-
-            for idx in indices:
-                start = idx
-                while start > 0 and not frames[start].is_key:
-                    start -= 1
-                dec = av1_codec.decode_av1(
-                    b"".join(tu(i) for i in range(start, idx + 1)),
-                    config_obus=config,
-                )
-                out[idx] = dec[-1]
-            return out
-        return None
-    return None  # composited formats (GIF/animated WebP) and unknowns
-
-
 def _decode_sampled(data: bytes, duration_ms, every_ms: int):
-    """The shared sampling rule: j in range(min(n, total)) with frame
-    ``j % total`` — decoded selectively where the container allows, full
-    decode otherwise. Output is identical either way (asserted in
-    tests)."""
-    from pdf_parser_spark import media_probe
-
+    """The shared sampling rule: [(j, frame j)] for the first
+    max(1, duration_ms // every_ms) frames, capped at the frame count.
+    Y4M/mp4/mkv rows are parsed once and decode only those frames (a
+    2-hour mp4 sampled every minute decodes ~120 frames, not ~200k); GIF
+    and animated WebP composite every frame from frame 0, so they decode
+    in full."""
     n = max(1, int(duration_ms or 0) // every_ms)
-    try:
-        total = media_probe.probe_bytes(data)["n_frames"]
-        if total:
-            needed = sorted({j % total for j in range(min(n, total))})
-            got = _decode_frame_indices(data, needed)
-            if got is not None:
-                return [(j, got[j % total]) for j in range(min(n, total))]
-    except (ValueError, NotImplementedError):
-        pass  # fall through to the full decode (its errors decide)
-    frames = _decode(data, "video")
-    return [(j, frames[j % len(frames)]) for j in range(min(n, len(frames)))]
+    path = _VIDEO.get(_sniff(data))
+    if path is None:
+        return list(enumerate(_decode(data, "video")[:n]))
+    return list(enumerate(_codec(path)(data, indices=range(n))))
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame sampling: one output row per sampled frame (fan-out map).
 
     Frame count derives from meta.duration_ms, and the decode is
-    SELECTIVE (_decode_frame_indices): sample-table byte ranges for raw
+    SELECTIVE (_decode_sampled): sample-table byte ranges for raw
     mp4/mkv, per-temporal-unit AV1 decode from the nearest sync frame,
-    offset arithmetic for y4m — so a 2h video decodes once per sampled
-    frame, not whole-file (composited GIF/animated-WebP rows fall back
-    to the full decode their format requires)."""
+    frame offsets for y4m — so a 2h video decodes once per sampled
+    frame, not whole-file (composited GIF/animated-WebP rows take the
+    full decode their format requires)."""
     videos = media.filter(F.col("kind") == "video").select(
         "media_id", "payload", F.col("meta.duration_ms").alias("duration_ms")
     )

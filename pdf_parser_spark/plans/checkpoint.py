@@ -90,7 +90,7 @@ class SnapshotExtractionJob:
                     s["lineage_id"],
                     [int(b) for b in s["buckets"]],
                     int(s["docs"]), int(s["txns"]), int(s["bytes_in"]),
-                    int(s.get("chars_out", 0)),
+                    int(s["chars_out"]),
                     int(s["parse_failures"]),
                     float(s["group_wall_s"]), float(s["group_docs_per_sec"]),
                 ))

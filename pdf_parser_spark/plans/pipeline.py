@@ -43,11 +43,7 @@ def release_pipeline_caches() -> None:
 _PERSISTED: list[DataFrame] = []
 
 
-def transactions_pipeline(
-    pages: DataFrame,
-    user_memory: DataFrame | None = None,
-    global_memory: DataFrame | None = None,
-) -> DataFrame:
+def transactions_pipeline(pages: DataFrame) -> DataFrame:
     """pages → fully-decorated transactions table (FIXTURES.md F3 shape).
 
     ONE materialization barrier, always persisted and counted, after the
@@ -132,7 +128,7 @@ def transactions_pipeline(
         .withColumn("has_bank_match", F.expr("coalesce(has_bank_match, false)"))
     )
     out = normalize_op.with_display_amount(out)
-    out = classify_op.classify(out, user_memory, global_memory)
+    out = classify_op.classify(out)
     # restore the FIXTURES.md F3 column order (pair legs last)
     pair_cols = pairing_op.PAIR_COLS
     return out.selectExpr(

@@ -42,6 +42,26 @@ def audit(name, df, require=(), forbid=("CartesianProduct", "BroadcastNestedLoop
     return plan, problems
 
 
+def stable_ids(text: str) -> str:
+    """Renumber expression ids (``#123``, ``#123L``) and ``[plan_id=N]`` in
+    order of first appearance. Spark draws both from session-wide
+    counters, so an unchanged plan prints different numbers on every run;
+    renumbered, a clean rerun leaves PLANS.md as it was while references
+    inside one plan still line up."""
+    for pat in (r"(?<=#)\d+", r"(?<=plan_id=)\d+"):
+        seen: dict[str, int] = {}
+        text = re.sub(
+            pat, lambda m: str(seen.setdefault(m.group(), len(seen) + 1)), text
+        )
+    return text
+
+
+def section(name: str, status: str, plan: str) -> str:
+    """PLANS.md section: the first 40 plan lines, ids renumbered."""
+    head = stable_ids("\n".join(plan.splitlines()[:40]))
+    return f"## {name} — {status}\n\n```\n{head}\n```\n"
+
+
 def main() -> None:
     spark = get_spark(master="local[8]", shuffle_partitions=8, app_name="plan-audit")
     qs = entrymod.queries()
@@ -306,8 +326,7 @@ def main() -> None:
         print(f"{status:60s} {name}")
         if problems:
             failures += 1
-        head = "\n".join(plan.splitlines()[:40])
-        sections.append(f"## {name} — {status}\n\n```\n{head}\n```\n")
+        sections.append(section(name, status, plan))
 
     # ad-hoc: sequence packing (r24) — the global prefix sum must use the
     # order-aligned bucket scheme, never a SinglePartition window, and the
@@ -334,8 +353,7 @@ def main() -> None:
     print(f"{status:60s} r24_sequence_packing")
     if problems:
         failures += 1
-    head = "\n".join(plan.splitlines()[:40])
-    sections.append(f"## r24_sequence_packing — {status}\n\n```\n{head}\n```\n")
+    sections.append(section("r24_sequence_packing", status, plan))
 
     # ad-hoc: mergeable sketches (r33) — the HLL build must partial-max
     # map-side before its (group, register) exchange; the KMV build must
@@ -422,8 +440,7 @@ def main() -> None:
         print(f"{status:60s} {name}")
         if problems:
             failures += 1
-        head = "\n".join(plan.splitlines()[:40])
-        sections.append(f"## {name} — {status}\n\n```\n{head}\n```\n")
+        sections.append(section(name, status, plan))
 
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as fh:
         fh.write(

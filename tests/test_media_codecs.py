@@ -438,8 +438,46 @@ def test_selective_decode_does_not_touch_unrequested_samples():
     blob = bytes(blob)
     with pytest.raises(ValueError, match="forbidden bit"):
         mm._decode(blob, "video")
-    got = mm._decode_frame_indices(blob, [0, 1, 2])
-    assert sorted(got) == [0, 1, 2]
+    assert len(mp4_demux.decode_mp4(blob, indices=[0, 1, 2])) == 3
     # and the sampling rule rides the selective path for those frames
     sampled = mm._decode_sampled(blob, 3000, 1000)
     assert [j for j, _ in sampled] == [0, 1, 2]
+
+
+def test_container_decoders_take_the_frames_to_decode():
+    """decode_y4m / decode_mp4 / decode_mkv with ``indices`` return exactly
+    those frames of the full decode; numbers past the end are skipped."""
+    from pdf_parser_spark import media_codecs, mkv_demux, mp4_demux
+
+    frames = np.random.default_rng(3).integers(
+        0, 256, size=(5, 8, 12, 3), dtype=np.uint8
+    )
+    for decode, blob in (
+        (media_codecs.decode_y4m, media_codecs.encode_y4m(frames)),
+        (mp4_demux.decode_mp4, mp4_demux.encode_mp4_raw(frames)),
+        (mkv_demux.decode_mkv, mkv_demux.encode_mkv_raw(frames)),
+    ):
+        full = decode(blob)
+        assert np.array_equal(decode(blob, indices=[1, 3]), full[[1, 3]])
+        assert np.array_equal(decode(blob, indices=range(9)), full)
+        assert decode(blob, indices=[]).shape == (0, 8, 12, 3)
+
+
+def test_decode_sampled_demuxes_each_container_row_once(monkeypatch):
+    """Sampling an mp4 or mkv row walks its container once: the frame
+    count and the frames come from the same demux."""
+    from pdf_parser_spark import mkv_demux, mp4_demux
+    from pdf_parser_spark.operators import multimodal as mm
+
+    calls = []
+    for module, name in ((mp4_demux, "demux_mp4"), (mkv_demux, "demux_mkv")):
+        def counted(data, _real=getattr(module, name), _name=name):
+            calls.append(_name)
+            return _real(data)
+
+        monkeypatch.setattr(module, name, counted)
+    for i, name in ((2, "demux_mp4"), (5, "demux_mkv")):  # raw mp4, raw mkv
+        payload, _mime = mm._real_payload(i, "video")
+        calls.clear()
+        assert [j for j, _ in mm._decode_sampled(payload, 3000, 1000)] == [0, 1, 2]
+        assert calls == [name]

@@ -341,3 +341,21 @@ def test_probe_ivf_vp8():
     assert p["n_frames"] == 3 and p["n_keyframes"] == 1
     with pytest.raises(ValueError):
         media_probe.probe_bytes(_ivf(b"XXXX", 2, 2, [b"\x00"]))
+
+
+def test_sniff_names_every_corpus_format():
+    """One full rotation of each kind of _real_payload (image slots
+    s = 0..10, both audio slots, all six video slots): sniff names the
+    format the mime implies, and probe_bytes reports that same name."""
+    by_mime = {
+        "image/png": "png", "image/jpeg": "jpeg", "image/webp": "webp",
+        "image/gif": "gif", "image/bmp": "bmp", "image/tiff": "tiff",
+        "image/x-icon": "ico", "image/avif": "avif", "image/heic": "heic",
+        "audio/wav": "wav", "audio/flac": "flac", "video/mp4": "mp4",
+        "video/webm": "mkv", "video/x-yuv4mpeg": "y4m",
+    }
+    ids = [3 * s for s in range(11)] + [1, 4] + [3 * v + 2 for v in range(6)]
+    for i in ids:
+        payload, mime = mm._real_payload(i, ("image", "audio", "video")[i % 3])
+        assert media_probe.sniff(payload) == by_mime[mime], (i, mime)
+        assert media_probe.probe_bytes(payload)["format"] == by_mime[mime], i

@@ -277,12 +277,25 @@ def test_extract_features_real_decode_is_gated(spark):
 
 
 def test_resize_images_only_touches_images(spark):
+    from pdf_parser_spark import media_probe
+
     media = mm.media_table(spark, n_rows=30, partitions=3)
     out = mm.resize_images(media, 16, 16)
     assert out.count() == 30
     imgs = out.filter(F.col("kind") == "image").collect()
     for r in imgs:
         assert mm._decode(bytes(r["payload"]), "image").shape[:2] == (16, 16)
+    # format-preserving: each resized image sniffs as its input did, save
+    # AVIF/HEIC rows under the native encoders' size floor (PNG fallback)
+    fmt_in = {
+        r["media_id"]: media_probe.sniff(bytes(r["payload"]))
+        for r in media.filter(F.col("kind") == "image").collect()
+    }
+    for r in imgs:
+        got, want = media_probe.sniff(bytes(r["payload"])), fmt_in[r["media_id"]]
+        assert got == want or (want in ("avif", "heic") and got == "png"), (
+            r["media_id"], want, got,
+        )
     # non-images untouched
     others = {r["media_id"]: bytes(r["payload"]) for r in out.filter(F.col("kind") != "image").collect()}
     orig = {r["media_id"]: bytes(r["payload"]) for r in media.filter(F.col("kind") != "image").collect()}
