@@ -1416,7 +1416,7 @@ def r18_warc_roundtrip(spark, sf_dir):
             (u, t, bytes(h))
             for u, t, h in zip(pdf["url"], pdf["warc_ts"], pdf["html"])
         ]
-        blob = warc_src.write_warc(rows, per_record_gzip=True)
+        blob = warc_src.write_warc(rows)
         got = {r["url"]: r["html"] for r in warc_src.warc_to_page_rows(blob)}
         bad = [
             {"archive": int(key[0]), "url": u}

@@ -373,11 +373,9 @@ def extract_transactions_from_text(
     """
     strategy = dispatch_strategy(text) if text else ""
     if strategy != "amex":
-        return [], {"strategy": strategy, "source_account": "", "statement_end_date": ""}
+        return [], {"strategy": strategy, "source_account": ""}
     source = extract_source_account(page_texts if page_texts is not None else [text])
-    return _amex_rows(text, source), {
-        "strategy": strategy, "source_account": source, "statement_end_date": "",
-    }
+    return _amex_rows(text, source), {"strategy": strategy, "source_account": source}
 
 
 def txn_records(rows: list[dict]) -> list[dict]:

@@ -12,16 +12,18 @@ text-density + link-density features — Kohlschütter et al., WSDM 2010):
 
 1. Parse the DOM stream once, segmenting character data into *blocks* at
    block-level element boundaries.
-2. Per block, record: total chars, anchor-text chars, descendant tag count,
-   ancestor hints (nav/footer/aside/... and class/id keyword hits), and
-   whether the block is whitespace-verbatim (<pre>).
-3. Score: link_density = link_chars/chars; text_density = chars/(1+tags).
-   A block is content iff it is not inside a structural-boilerplate ancestor
-   and (verbatim, or (chars >= MIN_CONTENT_CHARS and link_density <=
-   MAX_LINK_DENSITY), or it continues an accepted content run (short
-   follow-on paragraphs survive, per boilerpipe's sequence smoothing)).
+2. Per block, record: total chars, anchor-text chars, ancestor hints
+   (nav/footer/aside/... and class/id keyword hits), and whether the block
+   is whitespace-verbatim (<pre>).
+3. Classify by ancestry, link density (link_chars/chars) and length: a
+   block is content iff it is not inside a structural-boilerplate or hinted
+   ancestor and (verbatim, or (chars >= MIN_CONTENT_CHARS and link_density
+   <= MAX_LINK_DENSITY), or it continues an accepted content run (short
+   link-free follow-on paragraphs survive, per boilerpipe's sequence
+   smoothing)).
 4. Emit extracted text = accepted blocks joined by '\n', plus span records
-   (block index, char offsets into the output, source tag, densities).
+   (block index, char offsets into the output, source tag, char count,
+   link density).
 
 <pre> blocks are emitted verbatim (no whitespace collapsing) — this is what
 makes the synthetic statement corpus round-trip byte-identically.
@@ -74,7 +76,6 @@ class Block:
     tag: str
     text: str = ""
     link_chars: int = 0
-    tag_count: int = 0
     verbatim: bool = False
     boiler_ancestor: bool = False
     hint_ancestor: bool = False
@@ -87,17 +88,12 @@ class Block:
     def link_density(self) -> float:
         return self.link_chars / self.n_chars if self.n_chars else 0.0
 
-    @property
-    def text_density(self) -> float:
-        return self.n_chars / (1 + self.tag_count)
-
 
 @dataclass
 class _OpenBlock:
     tag: str
     parts: list[str] = field(default_factory=list)
     link_chars: int = 0
-    tag_count: int = 0
     verbatim: bool = False
     boiler: bool = False
     hint: bool = False
@@ -132,7 +128,6 @@ class _Extractor(HTMLParser):
                 tag=ob.tag,
                 text=text,
                 link_chars=min(ob.link_chars, len(text)),
-                tag_count=ob.tag_count,
                 verbatim=ob.verbatim,
                 boiler_ancestor=ob.boiler,
                 hint_ancestor=ob.hint,
@@ -173,8 +168,6 @@ class _Extractor(HTMLParser):
         else:
             if tag == "a":
                 self._anchor_depth += 1
-            if self._open is not None:
-                self._open.tag_count += 1
             if tag in VOID_TAGS:
                 if tag == "br" and self._open is not None:
                     self._open.parts.append("\n" if self._pre_depth else " ")

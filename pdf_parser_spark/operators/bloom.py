@@ -21,7 +21,10 @@ methodology):
    of the shuffle.
 
 Keys are Spark-side xxhash64 (computed natively, so the Python layer only
-ever sees int64s), split into k bit positions with double hashing.
+ever sees int64s), split into k bit positions by double hashing over two
+splitmix64 finalizations of the key. The same bit layout backs the
+per-file Blooms of the snapshot manifests (plans/snapshots), which persist
+it in their metadata JSON.
 """
 
 from __future__ import annotations
@@ -35,23 +38,48 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _HASH_COL = "_bloom_h"
+_MAYBE_COL = "_bloom_maybe"
+_K = 7  # optimal near the ~10 bits/key sizing build_bloom documents
+
+
+def _splitmix64(v: "np.ndarray") -> "np.ndarray":
+    v = v + np.uint64(0x9E3779B97F4A7C15)
+    v = (v ^ (v >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    v = (v ^ (v >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return v ^ (v >> np.uint64(31))
 
 
 def _positions(h: "np.ndarray", n_bits: int, k: int) -> "np.ndarray":
-    """(len(h), k) bit positions via Kirsch–Mitzenmacher double hashing."""
-    h = h.astype(np.uint64)
-    h1 = h
-    # a fixed odd multiplier decorrelates the second hash from the first
-    h2 = h * np.uint64(0x9E3779B97F4A7C15) | np.uint64(1)
+    """(len(h), k) bit positions via Kirsch–Mitzenmacher double hashing.
+
+    h1 and h2 are splitmix64 of the key and of the key ^ 0xA5A5…, so both
+    mix all 64 key bits and stay independent under a power-of-two n_bits.
+    Position i is (h1 + i·h2) mod n_bits (h2 forced odd).
+    """
+    v = h.astype(np.uint64)
+    h1 = _splitmix64(v)
+    h2 = _splitmix64(v ^ np.uint64(0xA5A5A5A5A5A5A5A5)) | np.uint64(1)
     i = np.arange(k, dtype=np.uint64)
     return ((h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(n_bits)).astype(
         np.int64
     )
 
 
+def _set_bits(bits: "np.ndarray", pos: "np.ndarray") -> None:
+    """Set every position of ``pos`` in the packed (LSB-first) bitmap."""
+    pos = pos.ravel()
+    np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def _test_bits(bits: "np.ndarray", pos: "np.ndarray") -> "np.ndarray":
+    """Per row of ``pos``: True iff all its bits are set (the key may be in)."""
+    return ((bits[pos >> 3] >> (pos & 7)) & 1).astype(bool).all(axis=1)
+
+
 def build_bloom(small: DataFrame, col: str, n_bits: int = 1 << 20,
-                k: int = 7, _stats: dict | None = None) -> "np.ndarray":
-    """Bitmap (packed uint8 array of n_bits/8 bytes) over xxhash64(col).
+                _stats: dict | None = None) -> "np.ndarray":
+    """Bitmap (packed uint8 array of n_bits/8 bytes) over xxhash64(col),
+    k=7 positions per key from the splitmix64 double hashing of _positions.
 
     Two-level tree reduction: each of the P input partitions reduces to ONE
     bitmap row (mapInPandas), those partials are repartitioned to ~√P
@@ -63,7 +91,8 @@ def build_bloom(small: DataFrame, col: str, n_bits: int = 1 << 20,
     driver; the tree ships ≤ 100 partials × 125 MB = 12.5 GB, with each
     intermediate reducer holding a single 125 MB accumulator while it
     streams its ~100 inputs. Size n_bits ≈ 10 × expected distinct keys
-    for ~1% FPR (k=7 is optimal near that load factor).
+    for ~1% FPR (k=7 is optimal near that load factor; 13 bits/key measures
+    ~0.2%).
 
     ``_stats`` (tests only): records ``n_input_partitions`` and
     ``n_partials_collected`` so sub-linearity is assertable.
@@ -79,8 +108,7 @@ def build_bloom(small: DataFrame, col: str, n_bits: int = 1 << 20,
             if len(batch) == 0:
                 continue
             any_rows = True
-            pos = _positions(batch[_HASH_COL].to_numpy(), n_bits, k).ravel()
-            np.bitwise_or.at(bits, pos // 8, (1 << (pos % 8)).astype(np.uint8))
+            _set_bits(bits, _positions(batch[_HASH_COL].to_numpy(), n_bits, _K))
         if any_rows:
             yield pd.DataFrame({"bitmap": [bits.tobytes()]})
 
@@ -112,9 +140,8 @@ def build_bloom(small: DataFrame, col: str, n_bits: int = 1 << 20,
     return out
 
 
-def with_bloom_probe(df: DataFrame, col: str, bitmap: "np.ndarray",
-                     k: int = 7, out_col: str = "_bloom_maybe") -> DataFrame:
-    """Adds boolean ``out_col``: False ⇒ definitely not in the filter set."""
+def with_bloom_probe(df: DataFrame, col: str, bitmap: "np.ndarray") -> DataFrame:
+    """Adds boolean ``_bloom_maybe``: False ⇒ definitely not in the filter set."""
     n_bits = int(bitmap.shape[0]) * 8
     bc = df.sparkSession.sparkContext.broadcast(bitmap)
 
@@ -122,24 +149,22 @@ def with_bloom_probe(df: DataFrame, col: str, bitmap: "np.ndarray",
         bits = np.frombuffer(bc.value, dtype=np.uint8)
         for batch in batches:
             if len(batch) == 0:
-                yield batch.assign(**{out_col: pd.Series([], dtype=bool)})
+                yield batch.assign(**{_MAYBE_COL: pd.Series([], dtype=bool)})
                 continue
-            pos = _positions(batch[_HASH_COL].to_numpy(), n_bits, k)
-            hit = (bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0
-            yield batch.assign(**{out_col: hit.all(axis=1)})
+            pos = _positions(batch[_HASH_COL].to_numpy(), n_bits, _K)
+            yield batch.assign(**{_MAYBE_COL: _test_bits(bits, pos)})
 
     hashed = df.withColumn(_HASH_COL, F.xxhash64(F.col(col)))
     # fresh StructType — StructType.add mutates in place, and mutating
     # hashed.schema would poison the DataFrame's own column list
     schema = T.StructType(
-        list(hashed.schema.fields) + [T.StructField(out_col, T.BooleanType())]
+        list(hashed.schema.fields) + [T.StructField(_MAYBE_COL, T.BooleanType())]
     )
     return hashed.mapInPandas(probe, schema=schema).drop(_HASH_COL)
 
 
 def bloom_pruned_join(big: DataFrame, small: DataFrame, on: str,
-                      how: str = "left_anti", n_bits: int = 1 << 20,
-                      k: int = 7) -> DataFrame:
+                      how: str = "left_anti", n_bits: int = 1 << 20) -> DataFrame:
     """Exact ``big.join(small, on, how)`` with a Bloom pre-filter.
 
     how='left_anti': definitely-not-in rows bypass the join (they are in
@@ -151,51 +176,13 @@ def bloom_pruned_join(big: DataFrame, small: DataFrame, on: str,
     """
     if how not in ("left_anti", "left_semi"):
         raise ValueError("bloom_pruned_join supports left_anti / left_semi")
-    bitmap = build_bloom(small, on, n_bits, k)
-    probed = with_bloom_probe(big, on, bitmap, k)
-    maybe = probed.filter(F.col("_bloom_maybe")).drop("_bloom_maybe")
+    probed = with_bloom_probe(big, on, build_bloom(small, on, n_bits))
+    maybe = probed.filter(F.col(_MAYBE_COL)).drop(_MAYBE_COL)
     joined = maybe.join(small, on, how)
     # match the plain USING-join's column order (key first) so callers can
     # swap this in for big.join(small, on, how) without a select
     order = [on] + [c for c in big.columns if c != on]
     if how == "left_anti":
-        clean = probed.filter(~F.col("_bloom_maybe")).drop("_bloom_maybe")
+        clean = probed.filter(~F.col(_MAYBE_COL)).drop(_MAYBE_COL)
         return clean.unionByName(joined).select(*order)
     return joined.select(*order)
-
-
-def bloom_pruned_left_join(big: DataFrame, small: DataFrame, on: str,
-                           n_bits: int = 1 << 20, k: int = 7) -> DataFrame:
-    """Exact ``big.join(small, on, 'left')`` when most big rows have no match.
-
-    The sparse-decoration shape: a 10^12-row table left-joins a keyed
-    side-table covering a small fraction of its keys (pairing legs,
-    bank-match flags, any per-row annotation). The plain left join
-    shuffles EVERY wide row by the key to discover that most of them match
-    nothing. Here, definitely-not-in rows take the no-shuffle branch and
-    get NULLs for `small`'s columns as a projection; only possible hits
-    (true members + FPR·|big| stragglers) reach the exact left join —
-    false positives come out NULL-decorated there, so the union is
-    byte-identical to the plain join while the shuffle carries
-    |matches| + FPR·|big| wide rows instead of |big|.
-
-    The trade is one extra scan of `big` (both branches read it) for the
-    removal of its shuffle — scans are columnar and local, shuffles are
-    network+disk, so this wins whenever the match density is low. At high
-    density the hot branch approaches |big| and the plain join is better,
-    so callers choose by their match density.
-    """
-    bitmap = build_bloom(small, on, n_bits, k)
-    probed = with_bloom_probe(big, on, bitmap, k)
-    maybe = probed.filter(F.col("_bloom_maybe")).drop("_bloom_maybe")
-    joined = maybe.join(small, on, "left")
-    cold = probed.filter(~F.col("_bloom_maybe")).drop("_bloom_maybe")
-    for f in small.schema.fields:
-        if f.name != on:
-            cold = cold.withColumn(f.name, F.lit(None).cast(f.dataType))
-    order = (
-        [on]
-        + [c for c in big.columns if c != on]
-        + [f.name for f in small.schema.fields if f.name != on]
-    )
-    return joined.select(*order).unionByName(cold.select(*order))

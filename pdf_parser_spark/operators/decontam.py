@@ -11,10 +11,9 @@ Scale shape (10^12 docs vs ~10^4-10^6 eval grams):
 - The eval side is tiny by construction (benchmarks are small): its
   distinct-gram table is broadcast — the corpus is NEVER shuffled by gram.
 - The corpus side explodes distinct k-grams (a Generate, row-local),
-  broadcast-inner-joins the eval grams, and aggregates matches per doc_id —
-  the only exchange is the per-doc match count, keyed by doc_id (uniform).
-- Per-doc totals (`n_grams`) are computed row-locally from the gram array
-  (size of array_distinct) — they never touch the join.
+  broadcast-left-joins the eval grams, and counts grams and matches in one
+  doc_id-keyed aggregate — the only exchange carries ~one partial row per
+  doc, keyed by doc_id (uniform).
 - Gram construction materializes the words array into a bound column before
   slicing (an element_at/slice over an unmaterialized split() inside a
   lambda re-evaluates the split per element — O(words²) regex work).
@@ -60,8 +59,7 @@ def with_kgrams(docs: DataFrame, k: int, text_col: str = "text",
 
 def contamination(docs: DataFrame, eval_docs: DataFrame, k: int = 5,
                   threshold: float = 0.2, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  bloom_bits: int | None = None) -> DataFrame:
+                  id_col: str = "doc_id") -> DataFrame:
     """Per-document contamination vs the eval set's k-gram inventory.
 
     Returns (doc_id, n_grams, n_matched, contamination_frac,
@@ -69,19 +67,12 @@ def contamination(docs: DataFrame, eval_docs: DataFrame, k: int = 5,
     ``n_matched`` those also present in ANY eval document;
     ``is_contaminated`` applies the fraction threshold.
 
-    Two physical shapes for the gram membership test:
-    - bloom_bits=None (default): the eval gram inventory broadcasts as a
-      hash table — right whenever the eval set is benchmark-sized (the
-      common case: a few million grams).
-    - bloom_bits=N: the HUGE-eval-set path (an eval inventory of 10^9
-      grams overflows a broadcast hash table): a Bloom bitmap over the
-      eval grams is built with the tree-reduced distributed OR
-      (operators/bloom, ~10 bits/gram for 1% FPR), corpus grams that are
-      definitely-not-in drop BEFORE any join, and only possible hits
-      (true matches + FPR stragglers) go through the exact — now
-      shuffle-shaped — gram join. Result-identical (the filter is
-      conservative and the exact join decides); pytest asserts parity
-      with a deliberately tiny, collision-heavy bitmap.
+    The eval gram inventory broadcasts as a hash table — benchmarks are
+    small (a few million grams at most). ONE gram pass: hits are decorated
+    by the broadcast LEFT join and counted in the same doc-keyed aggregate
+    as the totals. An eval inventory too large to broadcast would go
+    through operators/bloom.bloom_pruned_join(how='left_semi') on the
+    exploded grams instead.
     """
     corpus = with_kgrams(docs, k, text_col, id_col)
     eval_grams = (
@@ -89,58 +80,21 @@ def contamination(docs: DataFrame, eval_docs: DataFrame, k: int = 5,
         .select(F.explode("_grams").alias("gram"))
         .distinct()
     )
-    if bloom_bits is not None:
-        from pdf_parser_spark.operators import bloom
-
-        # the bloom path needs the gram stream in two shapes (the probe
-        # filter feeds the exact join; totals are per-doc) — persist the
-        # gram arrays so the distinct-k-gram construction, the chain's
-        # dominant CPU stage, runs once instead of twice
-        corpus = corpus.persist()
-        exploded = corpus.select("doc_id", F.explode("_grams").alias("gram"))
-        exploded = bloom.with_bloom_probe(exploded, "gram", bloom.build_bloom(
-            eval_grams, "gram", n_bits=bloom_bits
-        )).filter(F.col("_bloom_maybe")).drop("_bloom_maybe")
-        matched = (
-            exploded.join(eval_grams, "gram")  # exact; no broadcast hint
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_matched"))
-        )
-        totals = corpus.select(
-            "doc_id", F.size("_grams").cast("long").alias("n_grams")
-        )
-        out = totals.join(matched, "doc_id", "left").select(
-            "doc_id",
-            "n_grams",
-            F.coalesce(F.col("n_matched"), F.lit(0)).cast("long").alias("n_matched"),
-        )
-        # release the per-doc gram-array cache HERE instead of leaking it
-        # into the session (the caller never sees `corpus`). The checkpoint
-        # stores 4 scalars per doc — no heavier than the doc-keyed exchange
-        # the aggregate above already paid — mirroring bigram_pmi/bm25.
-        out = out.localCheckpoint()
-        corpus.unpersist()
-    else:
-        # ONE gram pass: hits are decorated by a broadcast LEFT join and
-        # counted in the same doc-keyed aggregate as the totals (partial
-        # aggregation collapses the gram stream map-side — the exchange
-        # carries ~one row per doc). The old two-branch shape evaluated
-        # the distinct-k-gram construction twice per corpus document.
-        exploded = corpus.select("doc_id", F.explode("_grams").alias("gram"))
-        scored = exploded.join(
-            F.broadcast(eval_grams.withColumn("_hit", F.lit(1))), "gram", "left"
-        )
-        agg = scored.groupBy("doc_id").agg(
-            F.count("*").alias("n_grams"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_matched"),
-        )
-        # docs with zero grams (shorter than k words) never explode a row
-        base = docs.select(F.col(id_col).alias("doc_id"))
-        out = base.join(agg, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(F.col("n_grams"), F.lit(0)).cast("long").alias("n_grams"),
-            F.coalesce(F.col("n_matched"), F.lit(0)).cast("long").alias("n_matched"),
-        )
+    exploded = corpus.select("doc_id", F.explode("_grams").alias("gram"))
+    scored = exploded.join(
+        F.broadcast(eval_grams.withColumn("_hit", F.lit(1))), "gram", "left"
+    )
+    agg = scored.groupBy("doc_id").agg(
+        F.count("*").alias("n_grams"),
+        F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_matched"),
+    )
+    # docs with zero grams (shorter than k words) never explode a row
+    base = docs.select(F.col(id_col).alias("doc_id"))
+    out = base.join(agg, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(F.col("n_grams"), F.lit(0)).cast("long").alias("n_grams"),
+        F.coalesce(F.col("n_matched"), F.lit(0)).cast("long").alias("n_matched"),
+    )
     frac = F.when(
         F.col("n_grams") > 0, F.col("n_matched") / F.col("n_grams")
     ).otherwise(F.lit(0.0))

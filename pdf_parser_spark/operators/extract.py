@@ -33,12 +33,16 @@ from pdf_parser_spark import html_extract, pdf_layout
 # struct as a GEOMETRIC region record (start=end=0, n_chars = the region's
 # LINE count, tag = region kind) — consumers computing offsets must scope
 # themselves to payload_kind='html' (the r20 span audit does exactly that).
+# TXN_TYPE is the txn struct both the extraction and the OCR stages emit.
+TXN_TYPE = (
+    "array<struct<txn_index:int, date:string, dateKey:string, memo:string, "
+    "amount:double, source:string>>"
+)
 EXTRACT_SCHEMA = (
     "url string, lang string, source_type_hint string, payload_kind string, strategy string, "
     "source_account string, closing_date string, extracted_text string, "
     "bytes_in long, chars_out long, n_blocks int, n_txns int, parse_failed boolean, "
-    "txns array<struct<txn_index:int, date:string, dateKey:string, memo:string, "
-    "amount:double, source:string>>, "
+    f"txns {TXN_TYPE}, "
     "spans array<struct<block:int, start:int, end:int, tag:string, n_chars:int, "
     "link_density:double>>"
 )

@@ -42,8 +42,7 @@ from pdf_parser_spark.operators import extract as extract_op
 
 OCR_SCHEMA = (
     "url string, ocr_text string, ocr_n_txns int, ocr_failed boolean, "
-    "ocr_txns array<struct<txn_index:int, date:string, dateKey:string, memo:string, "
-    "amount:double, source:string>>"
+    f"ocr_txns {extract_op.TXN_TYPE}"
 )
 
 

@@ -136,34 +136,12 @@ def _hive_unescape(raw: str) -> str:
 # contains a given probe value unless it actually holds a matching row.
 # A small per-file Bloom over the column turns that sparsity into scan
 # pruning: files whose Bloom rejects every probe value are skipped.
-# Hashing is splitmix64 double-hashing — pure arithmetic, stable across
-# processes (no PYTHONHASHSEED dependence), vectorized via numpy.
+# The bit layout is operators/bloom's (double hashing in pure integer
+# arithmetic — stable across processes, no PYTHONHASHSEED dependence); the
+# manifests persist it, so k and the sizing below are fixed.
 
 _BLOOM_K = 4
 _BLOOM_BITS_PER_VALUE = 16  # ~0.2% FPR at k=4
-
-
-def _splitmix64(v):
-    import numpy as np
-
-    v = v.astype(np.uint64, copy=True)
-    v += np.uint64(0x9E3779B97F4A7C15)
-    v = (v ^ (v >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    v = (v ^ (v >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return v ^ (v >> np.uint64(31))
-
-
-def _bloom_indices(values, n_bits: int):
-    """(k, n) array of bit indices for each value (double hashing)."""
-    import numpy as np
-
-    v = np.asarray(values, dtype=np.int64).astype(np.uint64)
-    h1 = _splitmix64(v)
-    h2 = _splitmix64(v ^ np.uint64(0xA5A5A5A5A5A5A5A5)) | np.uint64(1)
-    n = np.uint64(n_bits)
-    return np.stack(
-        [(h1 + np.uint64(i) * h2) % n for i in range(_BLOOM_K)]
-    )
 
 
 def _bloom_build(values) -> dict | None:
@@ -172,18 +150,16 @@ def _bloom_build(values) -> dict | None:
 
     import numpy as np
 
+    from pdf_parser_spark.operators.bloom import _positions, _set_bits
+
     v = np.unique(np.asarray(values, dtype=np.int64))
     if v.size == 0:
         return {"bits": 8, "b64": base64.b64encode(b"\x00").decode()}
     n_bits = 1 << int(
         np.ceil(np.log2(max(64, int(v.size) * _BLOOM_BITS_PER_VALUE)))
     )
-    idx = _bloom_indices(v, n_bits).ravel()
     bitmap = np.zeros(n_bits // 8, dtype=np.uint8)
-    np.bitwise_or.at(
-        bitmap, (idx >> np.uint64(3)).astype(np.int64),
-        (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8)),
-    )
+    _set_bits(bitmap, _positions(v, n_bits, _BLOOM_K))
     return {"bits": n_bits, "b64": base64.b64encode(bitmap.tobytes()).decode()}
 
 
@@ -193,13 +169,11 @@ def _bloom_any_maybe(bloom: dict, values) -> bool:
 
     import numpy as np
 
+    from pdf_parser_spark.operators.bloom import _positions, _test_bits
+
     bitmap = np.frombuffer(base64.b64decode(bloom["b64"]), dtype=np.uint8)
-    idx = _bloom_indices(values, int(bloom["bits"]))  # (k, n)
-    bits = (
-        bitmap[(idx >> np.uint64(3)).astype(np.int64)]
-        >> (idx & np.uint64(7)).astype(np.uint8)
-    ) & np.uint8(1)
-    return bool(bits.all(axis=0).any())
+    pos = _positions(np.asarray(values, dtype=np.int64), int(bloom["bits"]), _BLOOM_K)
+    return bool(_test_bits(bitmap, pos).any())
 
 
 def _parquet_file_entry(

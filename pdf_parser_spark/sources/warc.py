@@ -65,10 +65,9 @@ def _warc_record(warc_type: str, headers: dict[str, str], payload: bytes) -> byt
 
 def write_warc(
     pages: list[tuple[str, "datetime | str", bytes]],
-    per_record_gzip: bool = True,
+    compression: str = "gzip",
     content_type: str = "text/html; charset=utf-8",
     http_wrap: bool = True,
-    compression: str | None = None,
 ) -> bytes:
     """Build a WARC archive from (url, timestamp, html_bytes) rows.
 
@@ -76,12 +75,8 @@ def write_warc(
     Common-Crawl response-record shape); without, a raw resource record.
     compression picks the member layout: 'gzip' (per-record gzip members,
     mtime pinned to 0 so output is deterministic), 'zstd' (per-record
-    zstd frames — the IIPC .warc.zst layout), or None for a plain stream.
-    per_record_gzip=True/False is the backward-compatible alias for
-    'gzip'/None and is ignored when compression is given explicitly.
+    zstd frames — the IIPC .warc.zst layout), or 'none' for a plain stream.
     """
-    if compression is None:
-        compression = "gzip" if per_record_gzip else "none"
     out = []
     info = _warc_record(
         "warcinfo",

@@ -141,43 +141,40 @@ def test_build_bloom_few_partitions_skips_tree_level(spark):
     assert stats["n_partials_collected"] == 1
 
 
-def _left_parity(spark, n_bits):
-    big = _corpus(spark)
-    small = spark.createDataFrame(
-        [(f"h{i}", f"tag{i}") for i in range(0, 50, 7)] + [("absent", "tagx")],
-        "k string, tag string",
+def test_false_positive_rate_matches_sizing(spark):
+    """10k keys in 2^17 bits (13 bits/key, k=7) should pass ~0.2% of
+    disjoint probes. Double hashing over the raw key with a power-of-two
+    bitmap made both hashes depend on the key's low bits only and passed
+    ~7.5%."""
+    bitmap = bloom.build_bloom(
+        _keys(spark, [f"member-{i}" for i in range(10_000)]), "k", n_bits=1 << 17
     )
-    got = (
-        bloom.bloom_pruned_left_join(big, small, on="k", n_bits=n_bits)
-        .orderBy("id")
-        .collect()
+    probed = bloom.with_bloom_probe(
+        _keys(spark, [f"probe-{i}" for i in range(50_000)]), "k", bitmap
     )
-    want = big.join(small, "k", "left").orderBy("id").collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    n_maybe = probed.filter(F.col("_bloom_maybe")).count()
+    assert n_maybe / 50_000 <= 0.005
 
 
-def test_left_join_parity_roomy_bitmap(spark):
-    _left_parity(spark, 1 << 14)
+def test_manifest_bloom_layout_pinned():
+    """Snapshot manifests persist their per-file Blooms in metadata JSON:
+    the bitmap written for a fixed key set, and the answers it gives, must
+    never change."""
+    from pdf_parser_spark.plans import snapshots
 
-
-def test_left_join_parity_heavy_false_positives(spark):
-    # 64-bit bitmap → nearly all rows are "maybe"; FPs must come out of the
-    # exact join NULL-decorated, keeping parity with the plain left join.
-    _left_parity(spark, 64)
-
-
-def test_left_join_null_keys_null_decorated(spark):
-    big = _corpus(spark)
-    small = spark.createDataFrame([("h0", "t")], "k string, tag string")
-    got = bloom.bloom_pruned_left_join(big, small, on="k")
-    nulls = got.filter(F.col("k").isNull())
-    assert nulls.count() == 3
-    assert nulls.filter(F.col("tag").isNotNull()).count() == 0
-
-
-def test_left_join_empty_small_side(spark):
-    big = _corpus(spark)
-    small = spark.createDataFrame([], "k string, tag string")
-    got = bloom.bloom_pruned_left_join(big, small, on="k")
-    assert got.count() == big.count()
-    assert got.filter(F.col("tag").isNotNull()).count() == 0
+    values = np.array(
+        [-(2**63), -123456789012, -42, -1, 0, 1, 7, 42, 1000003, 2**40 + 17,
+         2**63 - 1, 314159265358979],
+        dtype=np.int64,
+    )
+    b = snapshots._bloom_build(values)
+    assert b == {"bits": 256, "b64": "AAAUBFkAAACCAALAgAEQCCBKYQCgwgAEUgihSBIAIhQ="}
+    assert all(snapshots._bloom_any_maybe(b, [v]) for v in values.tolist())
+    members = set(values.tolist())
+    maybe = [
+        p for p in range(-2000, 2000)
+        if p not in members and snapshots._bloom_any_maybe(b, [p])
+    ]
+    assert maybe == [-1463, 278, 589, 878, 1309, 1488]
+    assert snapshots._bloom_any_maybe(b, [5, 6, 278])
+    assert not snapshots._bloom_any_maybe(b, [5, 6, 8])

@@ -193,25 +193,6 @@ def test_mixing_weights_sum_to_one(spark, mix_docs):
     assert sum(r["token_share"] for r in out) == pytest.approx(1.0, abs=1e-4)
 
 
-def test_contamination_bloom_path_parity(spark, contam_docs, eval_docs):
-    """The huge-eval-set Bloom path must be result-identical to the
-    broadcast path — asserted with a deliberately TINY bitmap (256 bits)
-    so false positives definitely occur and the exact join must scrub
-    them."""
-    plain = sorted(
-        map(tuple, decontam.contamination(contam_docs, eval_docs, k=5).collect())
-    )
-    bloomed = sorted(
-        map(
-            tuple,
-            decontam.contamination(
-                contam_docs, eval_docs, k=5, bloom_bits=256
-            ).collect(),
-        )
-    )
-    assert bloomed == plain
-
-
 def test_bigram_scores_hand_computed(spark):
     """Three-doc corpus small enough to fold by hand: P(b|a) =
     (c(a,b)+1)/(c(a)+V), doc score = mean ln P over adjacent pairs."""

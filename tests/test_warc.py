@@ -27,8 +27,8 @@ def _pages():
 
 
 def test_roundtrip_plain_and_gzipped():
-    for per_gz in (False, True):
-        blob = warc.write_warc(_pages(), per_record_gzip=per_gz)
+    for comp in ("none", "gzip"):
+        blob = warc.write_warc(_pages(), compression=comp)
         rows = list(warc.warc_to_page_rows(blob))
         assert [r["url"] for r in rows] == [u for u, _, _ in _pages()]
         assert [r["html"] for r in rows] == [h for _, _, h in _pages()]
@@ -36,13 +36,13 @@ def test_roundtrip_plain_and_gzipped():
 
 
 def test_roundtrip_no_http_wrap():
-    blob = warc.write_warc(_pages(), per_record_gzip=False, http_wrap=False)
+    blob = warc.write_warc(_pages(), compression="none", http_wrap=False)
     rows = list(warc.warc_to_page_rows(blob))
     assert [r["html"] for r in rows] == [h for _, _, h in _pages()]
 
 
 def test_warcinfo_record_skipped():
-    blob = warc.write_warc(_pages()[:1], per_record_gzip=False)
+    blob = warc.write_warc(_pages()[:1], compression="none")
     recs = list(warc.iter_warc_records(blob))
     assert recs[0]["headers"]["warc-type"] == "warcinfo"
     assert len(list(warc.warc_to_page_rows(blob))) == 1
@@ -72,7 +72,7 @@ def test_malformed_inputs_dont_raise():
     assert list(warc.warc_to_page_rows(b"")) == []
     assert list(warc.warc_to_page_rows(b"garbage no records")) == []
     # truncated record: header promises more bytes than exist
-    blob = warc.write_warc(_pages()[:1], per_record_gzip=False)
+    blob = warc.write_warc(_pages()[:1], compression="none")
     rows = list(warc.warc_to_page_rows(blob[: len(blob) - 10]))
     assert len(rows) <= 1  # degrades, never raises
     # leading junk before the first WARC/ magic is skipped
@@ -82,10 +82,10 @@ def test_malformed_inputs_dont_raise():
 def test_read_warc_spark(spark, tmp_path):
     pages = _pages()
     (tmp_path / "part0.warc.gz").write_bytes(
-        warc.write_warc(pages[:2], per_record_gzip=True)
+        warc.write_warc(pages[:2], compression="gzip")
     )
     (tmp_path / "part1.warc").write_bytes(
-        warc.write_warc(pages[2:], per_record_gzip=False)
+        warc.write_warc(pages[2:], compression="none")
     )
     df = warc.read_warc(spark, str(tmp_path)).orderBy("url")
     got = df.collect()
@@ -207,12 +207,12 @@ def test_http_declared_charset_reaches_extraction(spark, tmp_path):
 def test_corrupt_gzip_member_keeps_prior_records():
     """Garbage between/inside per-record gzip members ends parsing
     tolerantly — the records already decoded survive, nothing raises."""
-    good = warc.write_warc(_pages()[:2], per_record_gzip=True)
+    good = warc.write_warc(_pages()[:2], compression="gzip")
     blob = good + b"\x1f\x8b\x08\x00GARBAGE-NOT-A-MEMBER" + b"\xff" * 64
     rows = list(warc.warc_to_page_rows(blob))
     assert {r["url"] for r in rows} == {"https://a.com/p1", "https://a.com/p2"}
     # truncated final member: same tolerance
-    blob2 = good + warc.write_warc(_pages()[2:3], per_record_gzip=True)[:20]
+    blob2 = good + warc.write_warc(_pages()[2:3], compression="gzip")[:20]
     assert len(list(warc.warc_to_page_rows(blob2))) == 2
 
 
@@ -244,7 +244,7 @@ def test_split_batches_are_bounded():
         (f"https://a.com/{i}", "2024-01-01T00:00:00Z", b"x" * 100)
         for i in range(25)
     ]
-    blob = warc.write_warc(pages, per_record_gzip=False)
+    blob = warc.write_warc(pages, compression="none")
 
     class FakeBatch(dict):
         pass
