@@ -168,10 +168,10 @@ def q05_union_dedupe(spark, sf_dir):
 def q06_order_windows(spark, sf_dir):
     """E3 + B8 + B7 — per-order window suite on one orderkey-grain spine
     (round-4 merge of q06+q18+q19): max-date within the R group, latest
-    A-flag line, and the 45-day closing-window count (ref: (pyc)
-    parse.remove_old_interest_charges, semantic_extractor
-    .extract_transactions). Three aggregates over ONE lineitem scan, all
-    keyed by l_orderkey — the joins reuse the same exchange."""
+    A-flag line, and the 45-day closing-window count (ref: (pyc) parse's
+    old-interest-charge filter, semantic_extractor.extract_transactions).
+    Three aggregates over ONE lineitem scan, all keyed by l_orderkey — the
+    joins reuse the same exchange."""
     li = _t(spark, sf_dir, "lineitem")
     w45 = W.partitionBy("l_orderkey")
     spine = (
@@ -207,57 +207,51 @@ def q06_order_windows(spark, sf_dir):
 
 def q07_memory_cascade(spark, sf_dir):
     """C3 — two-level memory lookup with precedence + source label
-    (ref: utils/classify_transaction.py:91-116)."""
+    (ref: utils/classify_transaction.py:91-116), run through
+    classify.memory_cascade: vendor key = lang, one user, and a null memo so
+    no keyword fires and a miss falls back to the uncategorized account."""
+    from pdf_parser_spark.operators import classify as classify_op
+
     d = _t(spark, sf_dir, "documents")
-    user_mem = (
-        d.filter(F.col("lang").isin("en", "de"))
-        .select("lang").distinct()
-        .select(F.col("lang").alias("u_vk"), F.concat(F.lit("user:"), "lang").alias("user_account"))
-    )
-    global_mem = (
-        d.filter(F.col("lang").isin("de", "fr", "es"))
-        .select("lang").distinct()
-        .select(F.col("lang").alias("g_vk"), F.concat(F.lit("global:"), "lang").alias("global_account"))
-    )
-    out = (
-        d.join(F.broadcast(user_mem), d["lang"] == user_mem["u_vk"], "left")
-        .join(F.broadcast(global_mem), d["lang"] == global_mem["g_vk"], "left")
-        .select(
-            "doc_id",
-            F.coalesce("user_account", "global_account", F.lit("7090 - Uncategorized Expense")).alias("account"),
-            F.when(F.col("user_account").isNotNull(), F.lit("memory:user"))
-            .when(F.col("global_account").isNotNull(), F.lit("memory:global"))
-            .otherwise(F.lit("ai"))
-            .alias("classificationSource"),
+
+    def memory(langs, prefix):
+        return d.filter(F.col("lang").isin(*langs)).select(
+            F.lit(0).alias("uid"),
+            F.col("lang").alias("vendor_key"),
+            F.concat(F.lit(prefix), "lang").alias("account"),
         )
+
+    keyed = d.select(
+        "doc_id",
+        F.lit(0).alias("uid"),
+        F.col("lang").alias("vendor_key"),
+        F.lit(None).cast("string").alias("memo"),
     )
-    return out
+    return classify_op.memory_cascade(
+        keyed, memory(["en", "de"], "user:"), memory(["de", "fr", "es"], "global:")
+    ).select("doc_id", "account", "classificationSource")
 
 
 def q08_learning_aggregate(spark, sf_dir):
     """D1 — vendor learning aggregate + promotion rule
-    (ref: utils/classify_transaction.py:121-137)."""
+    (ref: utils/classify_transaction.py:121-137), through
+    classify.learning_aggregate and its promotion thresholds."""
+    from pdf_parser_spark.operators import classify as classify_op
+
     d = _t(spark, sf_dir, "documents").select(
         F.col("source").alias("vendor_key"),
         F.col("lang").alias("account"),
         (F.col("doc_id") % 7).alias("uid"),
     )
-    by_acct = d.groupBy("vendor_key", "account").agg(F.count("*").alias("cnt"))
-    w = W.partitionBy("vendor_key").orderBy(F.col("cnt").desc(), F.col("account"))
-    top = (
-        by_acct.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vendor_key", F.col("account").alias("top_account"))
-    )
-    totals = d.groupBy("vendor_key").agg(
-        F.count("*").alias("total"), F.countDistinct("uid").alias("n_users")
-    )
-    return totals.join(top, "vendor_key").select(
+    return classify_op.learning_aggregate(d).select(
         "vendor_key",
         "total",
         "n_users",
         "top_account",
-        ((F.col("total") >= 5) & (F.col("n_users") >= 3)).alias("promoted"),
+        (
+            (F.col("total") >= classify_op.PROMOTE_MIN_TOTAL)
+            & (F.col("n_users") >= classify_op.PROMOTE_MIN_USERS)
+        ).alias("promoted"),
     )
 
 

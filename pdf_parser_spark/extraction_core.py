@@ -1,9 +1,26 @@
 """Pure-Python extraction core — the byte-identity-critical scalar layer.
 
-This module has ZERO Spark dependencies. It is the single source of truth
-for every scalar function, predicate, and the statement-block parser; it is
-imported both by the vectorized pandas UDFs (pdf_parser_spark.operators.*)
-and by the pytest oracle suite (tests/).
+This module has ZERO Spark dependencies. It holds three kinds of code:
+
+- The extraction path the UDF runs (operators/extract.py, ocr_fallback.py):
+  strategy dispatch (B1-B4), the statement-block parser (E1, B5/B6,
+  G2/G3/G6), date keys (G4 `parse_date_key`), source-account and
+  closing-date extraction (G8/G9) and `txn_records`.
+- The chart of accounts and the D4 mapping (`CHART`, `ALLOWED_ACCOUNTS`,
+  `fallback_account`, `force_map_to_allowed`), which operators/classify.py
+  applies at plan-build time.
+- Python references for rules the engine runs natively. Each stays because
+  a test compares it with its native twin:
+  `clean_vendor_name`/`vendor_key` (G1) ↔ classify.vendor_key_sql;
+  `compute_display_amount` (G10) ↔ normalize.with_display_amount;
+  `is_valid_amount` (B10), `looks_like_summary_interest_row` (B9),
+  `clean_contra` (G12), `to_number`/`parse_amount_fragment` (G13) and
+  `force_map_to_allowed` (D4) ↔ functions/scalar.py;
+  `journal_entries` with `txn_uid` (H1/G14) ↔ journal.journal_entries.
+
+Rules that run only natively (G11 account type, G15 keywords, H2 typed
+legs, the B7/B8 windows) have no Python copy here; their goldens run
+against the native expression.
 
 Each function reproduces, exactly, the observable semantics of the reference
 service (acstumler/pdf_parser, snapshot at /root/reference — cited as
@@ -18,7 +35,7 @@ Naming follows SURVEY.md §2.8's G1..G16 / §2.2 B1..B12 inventory.
 from __future__ import annotations
 
 import re
-from datetime import date, datetime, timedelta
+from datetime import date, datetime
 
 # ---------------------------------------------------------------------------
 # G1 — vendor-name cleaning  (ref: utils/clean_vendor_name.py:3-18)
@@ -62,9 +79,6 @@ def vendor_key(memo: str | None) -> str:
 # line-level txn regexes (ref: strategies/amex_multiline.py:74-75)
 DATE_RE = re.compile(r"(\d{2}/\d{2}/\d{2,4})")
 AMOUNT_RE = re.compile(r"(-?\$?\(?\d{1,4}(?:,\d{3})*(?:\.\d{2})\)?)")
-# pyc-recovered broader variants (ref: __pycache__/parse.cpython-313.pyc consts)
-DATE_RE_LOOSE = re.compile(r"\b(\d{1,2}/\d{1,2}/\d{2,4})\b")
-AMOUNT_RE_LOOSE = re.compile(r"-?\$[\d,]+\.\d{2}")
 
 
 def clean_amount(raw_amount: str) -> float | None:
@@ -127,49 +141,6 @@ def parse_date_key(s: str | None) -> str:
         except Exception:
             pass
     return ""
-
-
-def to_datekey(s: str | None) -> str:
-    """Pairing-side datekey: passthrough 8-digit, else MM/DD/YYYY / YYYY-MM-DD.
-
-    Ref: utils/transfer_pairing.py:14-27 (_datekey).
-    """
-    s = (s or "").strip()
-    if not s:
-        return ""
-    if len(s) == 8 and s.isdigit():
-        return s
-    for fmt in ("%m/%d/%Y", "%Y-%m-%d"):
-        try:
-            return datetime.strptime(s, fmt).strftime("%Y%m%d")
-        except Exception:
-            pass
-    return ""
-
-
-def datekey_range(center_key: str, days: int = 5) -> tuple[str, str]:
-    """[key-days, key+days] as YYYYMMDD strings (ref: transfer_pairing.py:29-36).
-
-    The reference falls back to utcnow() on a bad key; the rebuild makes bad
-    keys an empty range instead (deterministic — FIXTURES.md canonical re-spec).
-    """
-    try:
-        dt = datetime.strptime(center_key, "%Y%m%d")
-    except Exception:
-        return ("99999999", "00000000")
-    a = (dt - timedelta(days=days)).strftime("%Y%m%d")
-    b = (dt + timedelta(days=days)).strftime("%Y%m%d")
-    return a, b
-
-
-def iso_to_us_date(s: str | None) -> str:
-    """%Y-%m-%d → %m/%d/%Y, passthrough on failure (ref: routes/plaid.py:108-113)."""
-    if not s:
-        return ""
-    try:
-        return datetime.strptime(s, "%Y-%m-%d").strftime("%m/%d/%Y")
-    except Exception:
-        return s
 
 
 # ---------------------------------------------------------------------------
@@ -398,45 +369,11 @@ def txn_records(rows: list[dict]) -> list[dict]:
 # B7-B10 — pyc-recovered filters (deleted parse.py / semantic_extractor.py)
 # ---------------------------------------------------------------------------
 
-_INTEREST_KEYWORDS = ("interest", "finance", "pay over time")
-
-
 def is_valid_amount(amount: float | None) -> bool:
     """B10 — abs(amount) >= 0.01 (ref: (pyc) parse.is_valid_amount)."""
     if amount is None:
         return False
     return abs(amount) >= 0.01
-
-
-def is_interest_memo(memo: str | None) -> bool:
-    """Memo mentions an interest keyword (ref: (pyc) parse.remove_old_interest_charges)."""
-    lo = (memo or "").lower()
-    return any(k in lo for k in _INTEREST_KEYWORDS)
-
-
-def remove_old_interest_charges(txns: list[dict]) -> list[dict]:
-    """B8 — among interest-memo rows keep only max-date one; others untouched.
-
-    Ref: (pyc) parse.remove_old_interest_charges (constants: keyword tuple,
-    '%m/%d/%Y'). Dates unparseable in %m/%d/%Y sort as datetime.min.
-    """
-
-    def _d(t: dict) -> datetime:
-        try:
-            return datetime.strptime(t.get("date") or "", "%m/%d/%Y")
-        except Exception:
-            return datetime.min
-
-    interest = [t for t in txns if is_interest_memo(t.get("memo"))]
-    if not interest:
-        return list(txns)
-    keep = max(interest, key=_d)
-    out = []
-    for t in txns:
-        if is_interest_memo(t.get("memo")) and t is not keep:
-            continue
-        out.append(t)
-    return out
 
 
 def looks_like_summary_interest_row(
@@ -462,37 +399,6 @@ def looks_like_summary_interest_row(
     except Exception:
         return False
     return d < datetime(2023, 10, 1)
-
-
-def date_window_filter(
-    txns: list[dict], closing_date: str | None, window_days: int = 45
-) -> list[dict]:
-    """B7 — keep txns with date in [closing - window, closing].
-
-    Ref: (pyc) semantic_extractor.extract_transactions (consts: closing-date
-    regex, 45, ('days',)). Deterministic re-spec of the reference's
-    'fallback window ending today': with no closing date, rows pass
-    unfiltered (wall-clock-free; documented in FIXTURES.md).
-    """
-    if not closing_date:
-        return list(txns)
-    try:
-        end = datetime.strptime(closing_date, "%m/%d/%Y")
-    except Exception:
-        try:
-            end = datetime.strptime(closing_date, "%m/%d/%y")
-        except Exception:
-            return list(txns)
-    start = end - timedelta(days=window_days)
-    out = []
-    for t in txns:
-        try:
-            d = datetime.strptime(t.get("date") or "", "%m/%d/%Y")
-        except Exception:
-            continue
-        if start <= d <= end:
-            out.append(t)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -544,39 +450,8 @@ def compute_display_amount(
 
 
 # ---------------------------------------------------------------------------
-# G11-G14 — journal-side scalar functions
+# G12-G14 — journal-side scalar functions
 # ---------------------------------------------------------------------------
-
-
-def account_type(account: str | None) -> str:
-    """Leading digit of the account code → accounting type.
-
-    Ref: routes/journal_detail.py:21-37 (_account_type).
-    """
-    s = (account or "").strip()
-    code = ""
-    for ch in s:
-        if ch.isdigit():
-            code += ch
-        else:
-            break
-    if code:
-        d = code[0]
-        if d == "1":
-            return "Asset"
-        if d == "2":
-            return "Liability"
-        if d == "3":
-            return "Equity"
-        if d == "4":
-            return "Income"
-        if d == "5":
-            return "COGS"
-        if d in ("6", "7", "8", "9"):
-            return "Expense"
-    if any(ch.isdigit() for ch in s[-6:]):
-        return "Liability"
-    return "Expense"
 
 
 def clean_contra(label: str | None) -> str:
@@ -651,33 +526,6 @@ def txn_uid(t: dict) -> str:
     except Exception:
         amount = 0.0
     return f"{date}-{memo}-{amount}"
-
-
-# ---------------------------------------------------------------------------
-# G15 — keyword pre-classification (pyc parse.classify_transaction_type)
-# ---------------------------------------------------------------------------
-
-
-def classify_keyword(memo: str | None) -> tuple[str, str]:
-    """memo → (txn_type, account); '' account means unresolved.
-
-    Ref: (pyc) parse.classify_transaction_type constant pool:
-    interest→('interest','7100 - Interest Expense'); fee→('fee','7110 - Loan
-    Fees'); payment|thank you→('payment','Credit Card Payment');
-    credit|refund→('credit','4090 - Refunds and Discounts (Contra-Revenue)').
-    Re-spec vs the raw constant pool: 'fee' matches on a word boundary
-    (plain substring would misfire on e.g. 'COFFEE'); documented in FIXTURES.
-    """
-    lo = (memo or "").lower()
-    if "interest" in lo:
-        return "interest", "7100 - Interest Expense"
-    if re.search(r"\bfees?\b", lo):
-        return "fee", "7110 - Loan Fees"
-    if "payment" in lo or "thank you" in lo:
-        return "payment", "Credit Card Payment"
-    if "credit" in lo or "refund" in lo:
-        return "credit", "4090 - Refunds and Discounts (Contra-Revenue)"
-    return "charge", ""
 
 
 # ---------------------------------------------------------------------------
@@ -811,20 +659,6 @@ def force_map_to_allowed(chosen: str | None, allowed_accounts: list[str] | None)
     return best or fallback_account(allowed_accounts)
 
 
-def classify_deterministic(memo: str | None) -> tuple[str, str]:
-    """Deterministic last-resort classifier replacing the LLM stage (U1).
-
-    Cascade position per ref utils/classify_transaction.py:139-155: memory
-    (joins, operators/classify.py) → structure (no-op, ref :118-119) → this.
-    Keyword rules (G15) mapped onto the allowed chart via D4; no keyword hit →
-    uncategorized fallback. classificationSource='ai' to mirror the stage name.
-    """
-    _, account = classify_keyword(memo)
-    if account:
-        return force_map_to_allowed(account, ALLOWED_ACCOUNTS), "ai"
-    return fallback_account(ALLOWED_ACCOUNTS), "ai"
-
-
 # ---------------------------------------------------------------------------
 # H1 — journal explode (pure oracle; Spark side in operators/journal.py)
 # ---------------------------------------------------------------------------
@@ -867,21 +701,3 @@ def journal_entries(txns: list[dict]) -> list[dict]:
         )
     return lines
 
-
-def journal_entries_typed(txn_id: str, account: str, source: str, amount: float) -> list[dict]:
-    """H2 — double-entry legs by account type (ref: routes/journal_detail.py:100-111)."""
-    abs_amt = abs(absf(amount))
-    primary_is_debit = account_type(account) in ("Expense", "COGS", "Asset")
-    first = {
-        "id": f"{txn_id}-1",
-        "account": account,
-        "type": "Debit" if primary_is_debit else "Credit",
-        "amount": abs_amt,
-    }
-    second = {
-        "id": f"{txn_id}-2",
-        "account": source,
-        "type": "Credit" if primary_is_debit else "Debit",
-        "amount": abs_amt,
-    }
-    return [first, second]

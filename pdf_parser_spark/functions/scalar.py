@@ -1,13 +1,19 @@
 """Native-column ports of the SQL-expressible extraction_core scalars.
 
-The pure-Python functions in ``pdf_parser_spark.extraction_core`` are the
-byte-identity golden layer (imported by the pandas UDFs and the pytest
-oracle). For the subset whose semantics are fully relational — B9 summary
-interest, B10 amount sanity, D4 best-token-overlap account mapping, G12
-contra-label cleaning, G13 numeric coercion — this module provides
-whole-stage-codegen column expressions so they run JVM-side with no Python
-in the plan at all. Parity with the pure functions is asserted in
-tests/test_functions_scalar.py over adversarial inputs.
+Each function here has a pure-Python reference in
+``pdf_parser_spark.extraction_core``, and tests/test_functions_scalar.py
+compares the two over adversarial inputs:
+
+  valid_amount_col      ↔ is_valid_amount (B10)
+  summary_interest_col  ↔ looks_like_summary_interest_row (B9)
+  to_number_col         ↔ to_number (G13)
+  amount_fragment_col   ↔ parse_amount_fragment (G13)
+  clean_contra_col      ↔ clean_contra (G12)
+  force_map_to_allowed  ↔ force_map_to_allowed (D4)
+
+The B9/B10/G12/G13 references run nowhere else; the D4 one also maps the
+keyword targets in operators/classify.py at plan-build time. The native
+columns run JVM-side, with no Python in the plan.
 
 Reference lineage (same as the scalar twins):
   B9  (pyc) parse.looks_like_summary_interest_row

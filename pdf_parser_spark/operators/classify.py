@@ -39,6 +39,10 @@ _KEYWORD_ACCOUNTS = {
 }
 FALLBACK_ACCOUNT = core.fallback_account(core.ALLOWED_ACCOUNTS)
 
+# D1 promotion thresholds (ref: utils/classify_transaction.py:134-137)
+PROMOTE_MIN_TOTAL = 5
+PROMOTE_MIN_USERS = 3
+
 
 def _sql_string(value: str) -> str:
     """`value` as a Spark SQL string literal. Account names are runtime
@@ -83,7 +87,8 @@ def keyword_account_sql(memo: str, accounts: list[str] | None = None) -> str:
     """G15 rules over the column `memo` as a native CASE chain (ref: (pyc)
     parse.classify_transaction_type); null when no keyword fires.
 
-    Word-boundary 'fee' matching per the extraction_core re-spec. The
+    Re-spec vs the reference's constant pool: 'fee' matches on a word
+    boundary, since a plain substring would misfire on e.g. 'COFFEE'. The
     keyword→account targets are literals, so a runtime-supplied chart is
     resolved through the SAME D4 cascade (extraction_core
     force_map_to_allowed — the golden twin of functions/scalar's
@@ -133,7 +138,25 @@ def classify(
     global_memory: DataFrame | None = None,
     accounts: list[str] | None = None,
 ) -> DataFrame:
-    """Full cascade → account + classificationSource columns.
+    """Full cascade → vendor_key + account + classificationSource columns;
+    the G1 vendor key comes from `memo`, then `memory_cascade` runs."""
+    return memory_cascade(
+        txns.withColumn("vendor_key", F.expr(vendor_key_sql("memo"))),
+        user_memory,
+        global_memory,
+        accounts,
+    )
+
+
+def memory_cascade(
+    keyed: DataFrame,
+    user_memory: DataFrame | None = None,
+    global_memory: DataFrame | None = None,
+    accounts: list[str] | None = None,
+) -> DataFrame:
+    """C3 cascade over a frame that already carries `vendor_key` (plus
+    `uid` when user memory is given, and `memo` for the keyword stage):
+    user memory → global memory → G15 keywords → fallback account.
 
     user_memory(uid, vendor_key, account) and global_memory(vendor_key,
     account) are small dimensions → broadcast (ref per-row lookups at
@@ -141,7 +164,6 @@ def classify(
     `accounts` overrides the chart of accounts (default: the reference's
     static chart); keyword targets and the fallback resolve against it.
     """
-    t = txns.withColumn("vendor_key", F.expr(vendor_key_sql("memo")))
     # Absent memory tables join nothing: the cascade reads a null literal
     # instead of a broadcast join against an empty frame. Each skipped join
     # removes a broadcast exchange (a driver-side build + job) from the
@@ -154,9 +176,9 @@ def classify(
                 "uid AS u_uid", "vendor_key AS u_vk", "account AS user_account"
             )
         )
-        t = t.join(u, F.expr("uid = u_uid AND vendor_key = u_vk"), "left").drop(
-            "u_uid", "u_vk"
-        )
+        keyed = keyed.join(
+            u, F.expr("uid = u_uid AND vendor_key = u_vk"), "left"
+        ).drop("u_uid", "u_vk")
         user = "user_account"
     if global_memory is not None:
         g = F.broadcast(
@@ -164,14 +186,14 @@ def classify(
                 "vendor_key AS g_vk", "account AS global_account"
             )
         )
-        t = t.join(g, F.expr("vendor_key = g_vk"), "left").drop("g_vk")
+        keyed = keyed.join(g, F.expr("vendor_key = g_vk"), "left").drop("g_vk")
         glob = "global_account"
 
     kw = keyword_account_sql("memo", accounts)
     fb = (
         FALLBACK_ACCOUNT if accounts is None else core.fallback_account(accounts)
     )
-    return t.withColumns({
+    return keyed.withColumns({
         "account": F.expr(f"coalesce({user}, {glob}, {kw}, {_sql_string(fb)})"),
         # 'ai': the deterministic LLM replacement (SURVEY §2.11 U1)
         "classificationSource": F.expr(
@@ -181,9 +203,7 @@ def classify(
     }).drop("user_account", "global_account")
 
 
-def learning_aggregate(
-    classified: DataFrame, include_users: bool = False
-) -> DataFrame:
+def learning_aggregate(classified: DataFrame) -> DataFrame:
     """D1 — per-vendor learning aggregate (ref: utils/classify_transaction.py:121-137).
 
     total, byAccount counts, distinct-user count; top_account via a
@@ -195,12 +215,9 @@ def learning_aggregate(
     Spark executes as a two-phase aggregate (per-partition partial distinct,
     then merge) — a hot vendor key with 10^7 distinct users never
     materializes a 10^7-element array in one aggregation buffer, which the
-    round-2 `collect_set(uid)` + flatten form did. The reference's `users`
-    array (utils/classify_transaction.py:131-133) is available behind
-    ``include_users=True`` for callers that truly need it; the default path
-    has no unbounded per-key state. top_account is a map-side-combinable
-    `min_by` over the tiny (vendor_key, account) pre-aggregate — no window
-    sort.
+    round-2 `collect_set(uid)` + flatten form did; there is no unbounded
+    per-key state. top_account is a map-side-combinable `min_by` over the
+    tiny (vendor_key, account) pre-aggregate — no window sort.
     """
     per_acct = classified.groupBy("vendor_key", "account").agg(
         F.count("*").alias("cnt")
@@ -214,18 +231,19 @@ def learning_aggregate(
         ).alias("byAccount"),
         F.min_by(F.col("account"), order).alias("top_account"),
     )
-    user_aggs = [F.countDistinct("uid").alias("n_users")]
-    if include_users:
-        user_aggs.append(F.sort_array(F.collect_set("uid")).alias("users"))
-    users = classified.groupBy("vendor_key").agg(*user_aggs)
+    users = classified.groupBy("vendor_key").agg(
+        F.countDistinct("uid").alias("n_users")
+    )
     return agg.join(users, "vendor_key")
 
 
-def promotions(agg: DataFrame, min_total: int = 5, min_users: int = 3) -> DataFrame:
-    """Promotion rule: total≥5 AND distinct users≥3 → global memory rows.
+def promotions(agg: DataFrame) -> DataFrame:
+    """Promotion rule: total ≥ PROMOTE_MIN_TOTAL AND distinct users ≥
+    PROMOTE_MIN_USERS → global memory rows.
 
     Ref: utils/classify_transaction.py:134-137 (_bump_vendor_aggregate).
     """
     return agg.filter(
-        (F.col("total") >= min_total) & (F.col("n_users") >= min_users)
+        (F.col("total") >= PROMOTE_MIN_TOTAL)
+        & (F.col("n_users") >= PROMOTE_MIN_USERS)
     ).select("vendor_key", F.col("top_account").alias("account"))

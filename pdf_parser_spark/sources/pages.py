@@ -89,8 +89,3 @@ def write_table(
     # one per bucket.
     out = out.repartitionByRange(n_buckets, "bucket")
     out.write.partitionBy("bucket").mode(mode).format(fmt).save(path)
-
-
-def read_bucket(spark: SparkSession, path: str, bucket: int) -> DataFrame:
-    """Partition-pruned single-bucket scan (bucket=K directory only)."""
-    return spark.read.parquet(path).where(F.col("bucket") == bucket)

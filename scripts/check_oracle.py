@@ -6,9 +6,10 @@ values. Usage: python scripts/check_oracle.py [sf_dir] [only_query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -249,7 +249,7 @@ def test_bucket_pruned_read(spark, pages, tmp_path_factory):
     """write_table produces a bucket layout whose scan prunes by bucket."""
     out = str(tmp_path_factory.mktemp("buckets")) + "/pages"
     pages_src.write_table(pages.select("url", "lang"), out, n_buckets=8)
-    one = pages_src.read_bucket(spark, out, 3)
+    one = spark.read.parquet(out).where(F.col("bucket") == 3)
     plan = one._jdf.queryExecution().executedPlan().toString()
     n_all = spark.read.parquet(out).count()
     assert 0 < one.count() < n_all

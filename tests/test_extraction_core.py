@@ -3,7 +3,9 @@
 Oracle strategy (SURVEY.md §5.1): where the reference module is importable
 without service deps (utils/clean_vendor_name.py — verified zero-dep), run it
 side by side; everywhere else assert golden input/output pairs transcribed
-from the reference's semantics (file:line cited per case).
+from the reference's semantics (file:line cited per case). Rules that only
+run natively (G11 account type, G15 keywords, the classification fallback,
+H2 typed legs) check their goldens on the Spark expression that runs.
 """
 
 from __future__ import annotations
@@ -13,8 +15,11 @@ import sys
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from pdf_parser_spark import extraction_core as core
+from pdf_parser_spark.operators import classify as classify_op
+from pdf_parser_spark.operators import journal as journal_op
 
 REFERENCE = "/root/reference"
 
@@ -97,22 +102,6 @@ def test_parse_date_key(s, expected):
     if s == "1/5/2024":
         expected = "20240105"
     assert core.parse_date_key(s) == expected
-
-
-def test_to_datekey_passthrough_8digit():
-    assert core.to_datekey("20240105") == "20240105"  # transfer_pairing.py:20-21
-    assert core.to_datekey("01/05/2024") == "20240105"
-    assert core.to_datekey("2024-01-05") == "20240105"
-    assert core.to_datekey("nope") == ""
-
-
-def test_datekey_range():
-    assert core.datekey_range("20240105", 5) == ("20231231", "20240110")
-
-
-def test_iso_to_us_date():
-    assert core.iso_to_us_date("2024-01-05") == "01/05/2024"  # plaid.py:108-113
-    assert core.iso_to_us_date("01/05/2024") == "01/05/2024"  # passthrough
 
 
 # ---------------------------------------------------------------------------
@@ -204,31 +193,8 @@ def test_extract_transactions_from_text_nonmatch():
 
 
 # ---------------------------------------------------------------------------
-# B7-B10 pyc-recovered filters
+# B10 pyc-recovered amount sanity
 # ---------------------------------------------------------------------------
-
-
-def test_remove_old_interest_charges():
-    txns = [
-        {"date": "01/05/2024", "memo": "INTEREST CHARGE", "amount": 5.0},
-        {"date": "02/05/2024", "memo": "interest charge", "amount": 6.0},
-        {"date": "01/06/2024", "memo": "COFFEE", "amount": 4.5},
-    ]
-    out = core.remove_old_interest_charges(txns)
-    assert len(out) == 2
-    assert {t["memo"] for t in out} == {"interest charge", "COFFEE"}
-
-
-def test_date_window_filter():
-    txns = [
-        {"date": "01/01/2024"},
-        {"date": "02/20/2024"},
-        {"date": "03/15/2024"},
-        {"date": "03/16/2024"},
-    ]
-    out = core.date_window_filter(txns, "03/15/2024", 45)
-    assert [t["date"] for t in out] == ["02/20/2024", "03/15/2024"]
-    assert core.date_window_filter(txns, None) == txns
 
 
 def test_is_valid_amount():
@@ -262,6 +228,7 @@ def test_compute_display_amount(amount, st_, match, expected):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.spark
 @pytest.mark.parametrize(
     "account,expected",
     [
@@ -276,8 +243,9 @@ def test_compute_display_amount(amount, st_, match, expected):
         ("", "Expense"),
     ],
 )
-def test_account_type(account, expected):
-    assert core.account_type(account) == expected
+def test_account_type(spark, account, expected):
+    df = spark.createDataFrame([(account,)], "account string")
+    assert df.select(journal_op.account_type_col(F.col("account"))).first()[0] == expected
 
 
 def test_clean_contra():
@@ -312,12 +280,22 @@ def test_txn_uid_float_repr():
 # ---------------------------------------------------------------------------
 
 
-def test_classify_keyword():
-    assert core.classify_keyword("INTEREST CHARGE") == ("interest", "7100 - Interest Expense")
-    assert core.classify_keyword("ANNUAL FEE")[0] == "fee"
-    assert core.classify_keyword("PAYMENT RECEIVED - THANK YOU")[0] == "payment"
-    assert core.classify_keyword("REFUND ISSUED")[0] == "credit"
-    assert core.classify_keyword("ACME COFFEE") == ("charge", "")
+@pytest.mark.spark
+def test_classify_keyword(spark):
+    memos = {
+        "INTEREST CHARGE": "7100 - Interest Expense",
+        "ANNUAL FEE": "7110 - Loan Fees",
+        "late fees": "7110 - Loan Fees",
+        "PAYMENT RECEIVED - THANK YOU": "Credit Card Payment",
+        "REFUND ISSUED": "4090 - Refunds and Discounts (Contra-Revenue)",
+        "ACME COFFEE": None,  # 'fee' fires on a word boundary only
+    }
+    df = spark.createDataFrame([(m,) for m in memos], "memo string")
+    got = dict(df.select("memo", F.expr(classify_op.keyword_account_sql("memo"))).collect())
+    assert got == {
+        m: t and core.force_map_to_allowed(t, core.ALLOWED_ACCOUNTS)
+        for m, t in memos.items()
+    }
 
 
 def test_force_map_to_allowed():
@@ -334,12 +312,20 @@ def test_force_map_to_allowed():
     assert core.force_map_to_allowed("", allowed) == "7090 - Uncategorized Expense"
 
 
-def test_classify_deterministic():
-    acc, via = core.classify_deterministic("INTEREST CHARGE ON PURCHASES")
-    assert via == "ai"
-    assert acc in core.ALLOWED_ACCOUNTS
-    acc2, _ = core.classify_deterministic("ACME COFFEE")
-    assert acc2 == "7090 - Uncategorized Expense"
+@pytest.mark.spark
+def test_classify_deterministic(spark):
+    """No memory tables: every row resolves in the keyword stage or falls
+    back to the uncategorized account, labelled 'ai' (the LLM stand-in)."""
+    txns = spark.createDataFrame(
+        [(m,) for m in ("INTEREST CHARGE ON PURCHASES", "ACME COFFEE", "ANNUAL FEE", "late fees")],
+        "memo string",
+    )
+    out = {r["memo"]: r for r in classify_op.classify(txns).collect()}
+    assert {r["classificationSource"] for r in out.values()} == {"ai"}
+    assert {r["account"] for r in out.values()} <= set(core.ALLOWED_ACCOUNTS)
+    assert out["ACME COFFEE"]["account"] == "7090 - Uncategorized Expense"
+    fee = core.force_map_to_allowed("7110 - Loan Fees", core.ALLOWED_ACCOUNTS)
+    assert out["ANNUAL FEE"]["account"] == out["late fees"]["account"] == fee
 
 
 # ---------------------------------------------------------------------------
@@ -388,8 +374,19 @@ def test_journal_entries_properties(txns):
         assert lines[i]["type"] == "Debit" and lines[i + 1]["type"] == "Credit"
 
 
-def test_journal_entries_typed():
-    legs = core.journal_entries_typed("t1", "6310 - Bank Fees", "AMEX 1", -12.0)
-    assert legs[0]["type"] == "Debit" and legs[0]["account"] == "6310 - Bank Fees"
-    legs2 = core.journal_entries_typed("t2", "2040 - Loan Payable", "AMEX 1", 12.0)
-    assert legs2[0]["type"] == "Credit"  # Liability primary → credit first
+@pytest.mark.spark
+def test_journal_entries_typed(spark):
+    txns = spark.createDataFrame(
+        [("t1", "6310 - Bank Fees", -12.0), ("t2", "2040 - Loan Payable", 12.0)],
+        "txn_id string, account string, amount double",
+    ).selectExpr("*", "'AMEX 1' AS source", "NULL AS date", "NULL AS memo")
+    legs = {
+        r["id"]: (r["account"], r["type"], r["amount"])
+        for r in journal_op.journal_entries_typed(txns).collect()
+    }
+    assert legs == {
+        "t1-1": ("6310 - Bank Fees", "Debit", 12.0),  # Expense primary → debit first
+        "t1-2": ("AMEX 1", "Credit", 12.0),
+        "t2-1": ("2040 - Loan Payable", "Credit", 12.0),  # Liability primary → credit first
+        "t2-2": ("AMEX 1", "Debit", 12.0),
+    }
